@@ -1,6 +1,6 @@
 package graft.tree
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -86,8 +86,9 @@ object TreeIngest {
   }
 
   /** Parse the newick (driver-side: it is one string, as in the reference,
-    * TreeReader.java:20-143) and label it with the distributed
-    * [[TreeLabeler]] — one code path from 5-tip fixtures to 2.4M-tip trees.
+    * TreeReader.java:20-143) and label it with [[labelParsed]]: the parse
+    * already holds the tree in preorder on the driver, so labeling is one
+    * O(n) sweep, not the distributed pointer doubling of [[TreeLabeler]].
     */
   def ingest(spark: SparkSession, newickPath: String, annotationsPath: String,
       taxonomyPath: String, treeId: String): Ingested = {
@@ -116,7 +117,9 @@ object TreeIngest {
     val edgesAll = perTree.map { case (src, shifted, _, _) =>
       edgesOf(spark, parsedDf(spark, shifted), src.treeId)
     }.reduce(_ unionByName _)
-    val labeled = TreeLabeler.label(spark, edgesAll)
+    // the shifted trees concatenate to one preorder forest: `pre` is the
+    // global index, so each tree's interval block is contiguous
+    val labeled = labelParsed(spark, perTree.flatMap(_._2).toIndexedSeq)
     val parts = perTree.map { case (src, shifted, lo, hi) =>
       val sub = labeled.filter(col("node_id") >= lo && col("node_id") < hi)
       attach(spark, sub, parsedDf(spark, shifted),
@@ -160,8 +163,129 @@ object TreeIngest {
     val pdf = parsedDf(spark, parsed)
     val edges = edgesOf(spark, pdf, treeId)
     // ---- labeling pass (depth/pre/post/ancestors/tip_descendants)
-    val labeled = TreeLabeler.label(spark, edges)
+    val labeled = labelParsed(spark, parsed)
     attach(spark, labeled, pdf, edges, annotationsPath, taxonomyPath, treeId)
+  }
+
+  /** Per-node labels of a preorder forest, by array index, shipped to the
+    * tasks that build the rows. `parent` is an index (-1 at a root).
+    */
+  private final case class Sweep(base: Long, parent: Array[Int],
+      depth: Array[Int], childOrd: Array[Int], nDesc: Array[Int],
+      tips: Array[Int])
+
+  /** The [[TreeLabeler.label]] schema: same columns, order, types and
+    * nullability (its `post` and `tip_descendants` come out of nullable
+    * aggregates), so stores written by either labeler append alike.
+    */
+  private val labeledSchema = StructType(Seq(
+    StructField("node_id", LongType, nullable = false),
+    StructField("parent_id", LongType, nullable = false),
+    StructField("root_id", LongType, nullable = false),
+    StructField("depth", LongType, nullable = false),
+    StructField("child_ord", IntegerType, nullable = false),
+    StructField("ancestors", ArrayType(LongType, containsNull = false),
+      nullable = false),
+    StructField("pre", LongType, nullable = false),
+    StructField("post", LongType, nullable = true),
+    StructField("is_leaf", BooleanType, nullable = false),
+    StructField("tip_descendants", LongType, nullable = true),
+    StructField("n_desc", LongType, nullable = false)))
+
+  /** Label a parsed tree — or a forest of parsed trees concatenated back
+    * to back, ids shifted as [[ingestAll]] and [[ingestOffset]] shift them —
+    * with the same rows as [[TreeLabeler.label]] over its edges.
+    * [[Newick.parse]] emits nodes in preorder with `nodeId` equal to the
+    * preorder index, so one driver-side pass over the array yields the
+    * labels: the parent index and `depth` forward; `n_desc`,
+    * `tip_descendants` and `is_leaf` backward; `pre` is the array index and
+    * `post = pre + n_desc - 1`. The O(n·depth) `ancestors` arrays (and
+    * `root_id`, their head) are built in tasks from a broadcast of the
+    * per-node arrays (one stage, no shuffle), so the driver never holds
+    * them. Unlike [[TreeLabeler]] a single-node tree labels as a root with
+    * `pre = post = 0`.
+    *
+    * The input must be a preorder: ids `parsed(0).nodeId + i`, every
+    * parent on the path to the previous node, siblings in increasing
+    * `childOrd`. Anything else fails with the offending node.
+    *
+    * The returned frame is lazy and recomputes from the broadcast on each
+    * read, so the broadcast is left alive.
+    */
+  def labelParsed(spark: SparkSession, parsed: IndexedSeq[ParsedNode]): DataFrame = {
+    val n = parsed.length
+    val base = if (n == 0) 0L else parsed(0).nodeId
+    val parent = new Array[Int](n)
+    val depth = new Array[Int](n)
+    val childOrd = new Array[Int](n)
+    val path = new Array[Int](n) // path(0..top): root → previous node
+    var top = -1
+    def notPreorder(why: String) =
+      s"labelParsed: $why — input is not a preorder array"
+    var i = 0
+    while (i < n) {
+      val p = parsed(i)
+      require(p.nodeId == base + i, notPreorder(
+        s"node at index $i has id ${p.nodeId}, expected ${base + i}"))
+      if (p.parentId < 0) {
+        parent(i) = -1
+        top = -1
+      } else {
+        val pi = p.parentId - base
+        val prevTop = top
+        while (top >= 0 && path(top) != pi) top -= 1
+        require(top >= 0, notPreorder(s"node ${p.nodeId} has parent " +
+          s"${p.parentId}, which is not an ancestor of the previous node"))
+        // the node popped just above the parent is the previous sibling
+        require(top == prevTop || p.childOrd > childOrd(path(top + 1)),
+          notPreorder(s"node ${p.nodeId} has child_ord ${p.childOrd}, not " +
+            "above its previous sibling's"))
+        parent(i) = pi.toInt
+      }
+      childOrd(i) = p.childOrd
+      top += 1
+      path(top) = i
+      depth(i) = top
+      i += 1
+    }
+    // backward: every child sits at a higher index than its parent
+    val nDesc = Array.fill(n)(1)
+    val tips = new Array[Int](n)
+    i = n - 1
+    while (i >= 0) {
+      if (nDesc(i) == 1) tips(i) = 1
+      val pi = parent(i)
+      if (pi >= 0) {
+        nDesc(pi) += nDesc(i)
+        tips(pi) += tips(i)
+      }
+      i -= 1
+    }
+
+    val sweep = spark.sparkContext.broadcast(
+      Sweep(base, parent, depth, childOrd, nDesc, tips))
+    val slices = math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+    val rows = spark.sparkContext.range(0L, n.toLong, 1L, slices)
+      .mapPartitions { ids =>
+        val s = sweep.value
+        ids.map { id =>
+          val i = id.toInt
+          val d = s.depth(i)
+          val ancestors = new Array[Long](d + 1)
+          var j = i
+          var k = d
+          while (k >= 0) {
+            ancestors(k) = s.base + j
+            j = s.parent(j)
+            k -= 1
+          }
+          val pi = s.parent(i)
+          Row(s.base + i, if (pi < 0) -1L else s.base + pi, ancestors(0),
+            d.toLong, s.childOrd(i), ancestors, id, id + s.nDesc(i) - 1,
+            s.nDesc(i) == 1, s.tips(i).toLong, s.nDesc(i).toLong)
+        }
+      }
+    spark.createDataFrame(rows, labeledSchema)
   }
 
   /** Join ot attributes + taxonomy + annotations onto a labeled (sub)tree

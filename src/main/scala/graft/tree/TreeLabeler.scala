@@ -29,6 +29,10 @@ import org.apache.spark.storage.StorageLevel
   * sort + zipWithIndex (no driver collect); `post`/`tip_descendants` come
   * from one explode + aggregate whose root-key skew is absorbed by
   * partial (map-side) aggregation.
+  *
+  * This is the labeler for edge lists that live in tables. A parsed
+  * newick is already a preorder array on the driver, and ingest labels it
+  * with [[TreeIngest.labelParsed]] in one sweep, with the same rows.
   */
 object TreeLabeler {
 

@@ -13,8 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * every serving-path join — node self-joins for lineage/subtree/MRCA,
   * node⋈edge for branch lengths — runs with ZERO exchanges: the shuffle is
   * paid once at [[save]] time, never per query. A fresh session [[load]]s
-  * the store in seconds instead of re-paying the labeling pass (75 s at
-  * 2.4M tips, see IngestBench).
+  * the store in seconds instead of re-paying the ingest (parse, labeling
+  * and the taxonomy/annotation joins).
   *
   * Bucketed parquet needs catalog metadata to be *read* as bucketed, so
   * [[load]] registers an external table (`CREATE TABLE … CLUSTERED BY …

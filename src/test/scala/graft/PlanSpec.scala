@@ -236,6 +236,41 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("labelParsed starts at most one Spark job, even on a deep tree") {
+    // the parsed-tree labeler is one driver-side sweep; pointer-doubling
+    // rounds (a checkpoint + count per round) must not come back here.
+    // A 200-level caterpillar would take 8 doubling rounds.
+    val nwk = (1 to 200).foldLeft("t0")((acc, k) => s"($acc,t$k)") + ";"
+    val parsed = graft.tree.Newick.parse(nwk)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val marker = "graft.test.marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(marker) != null)
+          marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val labeled =
+      try {
+        val l = graft.tree.TreeIngest.labelParsed(spark, parsed)
+        // flush marker: events arrive in order, so once the marked job is
+        // seen every job labelParsed started has been counted
+        sc.setLocalProperty(marker, "1")
+        try sc.range(0, 1).count() finally sc.setLocalProperty(marker, null)
+        assert(marked.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        l
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 1, s"labelParsed started ${jobs.get()} jobs")
+    val root = labeled.filter(org.apache.spark.sql.functions.col("pre") === 0L)
+      .collect()
+    assert(labeled.count() == parsed.length)
+    assert(root.map(_.getAs[Long]("post")).toSeq == Seq(parsed.length - 1L))
+  }
+
   test("repetition and quantization are scan-local: zero exchanges") {
     val rep = finalPlan(graft.queries.TrainingQueries.txtRepetition(spark, sf))
     assert(!rep.contains("Exchange"), rep)

@@ -3,7 +3,7 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tree.{Newick, TreeLabeler, TreeOps}
+import graft.tree.{Newick, ParsedNode, TreeIngest, TreeLabeler, TreeOps}
 
 /** Property tests for the invariants the reference only implies
   * (SURVEY §5): labeler correctness on random trees, MRCA algebra,
@@ -18,6 +18,15 @@ class PropertySpec extends AnyFunSuite {
     val rnd = new Random(seed)
     val n = 2 + rnd.nextInt(39)
     Array.tabulate(n - 1)(i => if (i == 0) 0 else rnd.nextInt(i + 1))
+  }
+
+  /** A parent array as newick, node i labeled `n<i>`. */
+  private def newickOf(parents: Array[Int]): String = {
+    val children = (0 to parents.length).map { p =>
+      p.toLong -> parents.zipWithIndex.collect {
+        case (pp, i) if pp == p => i + 1L }.toSeq
+    }.toMap
+    Newick.serialize(0L, children.getOrElse(_, Seq.empty), id => s"n$id")
   }
 
   private def labelTree(parents: Array[Int]) = {
@@ -98,13 +107,7 @@ class PropertySpec extends AnyFunSuite {
     (31L to 40L).foreach { seed =>
       val parents = randomTree(seed)
       val n = parents.length + 1
-      val children = (0 until n).map { p =>
-        p.toLong -> parents.zipWithIndex.collect {
-          case (pp, i) if pp == p => i + 1L }.toSeq
-      }.toMap
-      val ser = Newick.serialize(0L, children.getOrElse(_, Seq.empty),
-        id => s"n$id")
-      val parsed = Newick.parse(ser)
+      val parsed = Newick.parse(newickOf(parents))
       assert(parsed.length == n, s"seed=$seed")
       // EXACT structural identity via the n$id labels, not just the
       // child-count multiset (which a wrong-parent reattachment that
@@ -116,6 +119,75 @@ class PropertySpec extends AnyFunSuite {
       val wantEdges = parents.zipWithIndex
         .map { case (p, i) => s"n${i + 1}" -> s"n$p" }.toSet
       assert(gotEdges == wantEdges, s"seed=$seed")
+    }
+  }
+
+  /** The (nodeId, parentId, childOrd) edges of parsed nodes, as
+    * [[TreeLabeler.label]] takes them.
+    */
+  private def edgesOf(parsed: Seq[ParsedNode]) = {
+    import spark.implicits._
+    parsed.filter(_.parentId >= 0)
+      .map(p => (p.nodeId, p.parentId, p.childOrd))
+      .toDF("child_id", "parent_id", "child_ord")
+  }
+
+  private def shift(parsed: IndexedSeq[ParsedNode], by: Long) =
+    parsed.map(p => p.copy(nodeId = p.nodeId + by,
+      parentId = if (p.parentId < 0) -1L else p.parentId + by))
+
+  /** Both labelers on the same parsed forest: same schema, same rows. */
+  private def assertSameLabels(parsed: IndexedSeq[ParsedNode], clue: String): Unit = {
+    val sweep = TreeIngest.labelParsed(spark, parsed)
+    val doubling = TreeLabeler.label(spark, edgesOf(parsed))
+    assert(sweep.schema == doubling.schema,
+      s"$clue\n${sweep.schema.treeString}\n${doubling.schema.treeString}")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      })
+      .sortBy(_.head.asInstanceOf[Long])
+    val got = rows(sweep)
+    assert(got.length == parsed.length, clue)
+    assert(got == rows(doubling), clue)
+  }
+
+  test("labelParsed equals TreeLabeler on random trees: single, id-shifted " +
+      "and concatenated forests, all 11 columns") {
+    def parsedTree(seed: Long) = Newick.parse(newickOf(randomTree(seed)))
+    (51L to 56L).foreach { seed =>
+      val a = parsedTree(seed)
+      val b = parsedTree(seed + 100)
+      assertSameLabels(a, s"single seed=$seed")
+      // ingestOffset: one tree above an existing store's ids
+      assertSameLabels(shift(a, 1000L), s"shifted seed=$seed")
+      // ingestAll: trees shifted back to back into one forest
+      assertSameLabels(shift(a, 7L) ++ shift(b, 7L + a.length),
+        s"forest seed=$seed")
+    }
+  }
+
+  test("labelParsed equals TreeLabeler on the Gavia fixtures") {
+    def read(f: String) = Newick.parse(new String(java.nio.file.Files
+      .readAllBytes(java.nio.file.Paths.get(s"${GaviaFixture.fx}/$f")),
+      java.nio.charset.StandardCharsets.UTF_8).trim)
+    val g1 = read("gavia.tre")
+    val g2 = read("gavia2.tre")
+    assertSameLabels(g1, "gavia")
+    assertSameLabels(g1 ++ shift(g2, g1.length.toLong), "gavia + gavia2")
+  }
+
+  test("labelParsed refuses input that is not a preorder array") {
+    val p = Newick.parse("((a,b)c,d)r;") // r c a b d
+    val gap = p.updated(2, p(2).copy(nodeId = 9L))
+    val noParent = p.updated(4, p(4).copy(parentId = 2L)) // d under a
+    val swapped = p.updated(4, p(4).copy(childOrd = 0))   // d not after c
+    Seq(gap -> "has id", noParent -> "not an ancestor",
+        swapped -> "child_ord").foreach { case (bad, msg) =>
+      val e = intercept[IllegalArgumentException](
+        TreeIngest.labelParsed(spark, bad))
+      assert(e.getMessage.contains(msg), e.getMessage)
     }
   }
 
@@ -446,14 +518,7 @@ class PropertySpec extends AnyFunSuite {
   test("random structural mutations of valid newick are rejected, never mis-parsed") {
     (71L to 78L).foreach { seed =>
       val rnd = new Random(seed)
-      val parents = randomTree(seed)
-      val n = parents.length + 1
-      val children = (0 until n).map { p =>
-        p.toLong -> parents.zipWithIndex.collect {
-          case (pp, i) if pp == p => i + 1L }.toSeq
-      }.toMap
-      val ser = Newick.serialize(0L, children.getOrElse(_, Seq.empty),
-        id => s"n$id")
+      val ser = newickOf(randomTree(seed))
       // dropping any single paren unbalances the tree
       val parens = ser.zipWithIndex.filter(c => "()".contains(c._1)).map(_._2)
       val drop = parens(rnd.nextInt(parens.length))

@@ -189,6 +189,30 @@ class TreeSpec extends AnyFunSuite {
     assert(r.length == 3)
   }
 
+  test("a one-tip tree ingests as a labeled root and serves node_info") {
+    // no edges at all: the labeler must still emit the root row, or the
+    // root lookup in attach finds nothing
+    val dir = java.nio.file.Files.createTempDirectory("graft_one_tip")
+    val nwk = dir.resolve("one.tre")
+    java.nio.file.Files.write(nwk, "ott803675;".getBytes("UTF-8"))
+    val one = TreeIngest.ingest(spark, nwk.toString,
+      s"$fx/gavia_annotations.json", s"$fx/gavia_taxonomy.tsv",
+      treeId = "opentree4.1")
+    val rows = one.nodes.collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getAs[Long]("parent_id") == -1L && r.getAs[Long]("depth") == 0L)
+    assert(r.getAs[Long]("pre") == 0L && r.getAs[Long]("post") == 0L)
+    assert(r.getAs[Boolean]("is_leaf"))
+    assert(r.getAs[Long]("tip_descendants") == 1L && r.getAs[Long]("n_desc") == 1L)
+    assert(r.getAs[scala.collection.Seq[Long]]("ancestors") ==
+      Seq(r.getAs[Long]("node_id")))
+    assert(one.edges.count() == 0L)
+    assert(one.treeMeta.select("root_ot_node_id").head().getString(0) == "ott803675")
+    val info = TreeServing.build(one).nodeInfo("ott803675")
+    assert(info.exists(_("num_tips") == 1L), s"$info")
+  }
+
   test("forest labeling: per-root contiguous intervals, deterministic pre") {
     import spark.implicits._
     val edges = Seq(
