@@ -650,14 +650,6 @@ object ExtQueries {
         col("n_frames"))
   }
 
-  private val servingCache = new graft.SessionCache[graft.tree.TreeServing.Index]()
-
-  /** The driver-side serving index over the fixture tree, built once per
-    * JVM (one collect) — the millisecond point-query path.
-    */
-  private def servingIndex(s: SparkSession): graft.tree.TreeServing.Index =
-    servingCache.get(s, "gavia") { graft.tree.TreeServing.build(fixture(s)) }
-
   /** The zero-job point-query serving path ([[graft.tree.TreeServing]],
     * the reference's Lucene-exact-hit analog): three `node_info` lookups
     * and one two-id `mrca` resolution answered entirely from the
@@ -667,7 +659,8 @@ object ExtQueries {
     */
   val apiServing: Q = (s, _) => {
     import s.implicits._
-    val idx = servingIndex(s)
+    // built once per fixture frame (TreeServing.build memoises it)
+    val idx = graft.tree.TreeServing.build(fixture(s))
     def shape(req: String, m: Map[String, Any]) =
       (req, m("ot_node_id").asInstanceOf[String],
         m("name").asInstanceOf[String], m("unique_name").asInstanceOf[String],

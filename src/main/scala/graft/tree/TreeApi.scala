@@ -129,7 +129,9 @@ object TreeApi {
       }
     }
     val n = arrays.size
-    val mrcaId = cover.collect { case (id, c) if c == n => id }.maxBy(depthOf)
+    val common = cover.collect { case (id, c) if c == n => id }
+    require(common.nonEmpty, "query nodes do not share a root (different trees?)")
+    val mrcaId = common.maxBy(depthOf)
     val mrcaDepth = depthOf(mrcaId)
     val kept = tips ++ branches.collect { case (id, ch)
       if ch.size >= 2 && depthOf(id) >= mrcaDepth => id } + mrcaId
@@ -148,26 +150,42 @@ object TreeApi {
   }
 
   /** `induced_subtree`: minimal spanning tree over ≥2 valid ids, as newick
-    * with not-in-tree lists (tree_of_life_v3.java:403-518). Two jobs total:
-    * resolve (with root paths), then one attribute fetch for the kept set.
+    * with not-in-tree lists (tree_of_life_v3.java:403-518). Answered from
+    * the serving index with no Spark job when [[TreeServing.build]] has
+    * indexed `t.nodes` ([[TreeServing.Index.inducedSubtree]]); otherwise
+    * two jobs: resolve (with root paths), then one attribute fetch for the
+    * kept set. Ids from two different trees are an IllegalArgumentException.
     */
   def inducedSubtree(t: Ingested, nodeIds: Seq[String] = Nil,
       ottIds: Seq[Long] = Nil, labelFormat: String = "name_and_id",
-      idsForUnnamed: Boolean = false): InducedResult = {
-    val (rows, badNodes, badOtts) = resolveRows(t, nodeIds, ottIds)
-    require(rows.size >= 2,
-      s"at least 2 valid ids required, got ${rows.size}")
-    val edges = inducedEdges(rows)
+      idsForUnnamed: Boolean = false): InducedResult =
+    TreeServing.indexOf(t.nodes) match {
+      case Some(idx) =>
+        idx.inducedSubtree(nodeIds, ottIds, labelFormat, idsForUnnamed)
+      case None =>
+        val (rows, badNodes, badOtts) = resolveRows(t, nodeIds, ottIds)
+        inducedResult(rows, badNodes, badOtts) { keptIds =>
+          t.nodes.filter(col("node_id").isin(keptIds: _*))
+            .withColumn("lbl",
+              TreeOps.formattedLabel(labelFormat, idsForUnnamed))
+            .select(col("node_id"), col("pre"), col("lbl"))
+            .collect().toSeq
+            .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+        }
+    }
+
+  /** The induced newick from resolved root paths; `attrs` fetches
+    * (node_id, pre, formatted label) of the kept ids.
+    */
+  private[tree] def inducedResult(paths: Seq[(Long, Seq[Long])],
+      badNodes: Seq[String], badOtts: Seq[Long])(
+      attrs: Seq[Long] => Seq[(Long, Long, String)]): InducedResult = {
+    require(paths.size >= 2,
+      s"at least 2 valid ids required, got ${paths.size}")
+    val edges = inducedEdges(paths)
     val parentOf = edges.map(e => e._1 -> e._2).toMap
-    val keptIds = edges.map(_._1)
-    val attrs = t.nodes.filter(col("node_id").isin(keptIds: _*))
-      .withColumn("lbl",
-        TreeOps.formattedLabel(labelFormat, idsForUnnamed))
-      .select(col("node_id"), col("pre"), col("lbl"))
-      .collect()
-    val nwk = TreeOps.assembleNewick(
-      attrs.map(r => (r.getLong(0), parentOf(r.getLong(0)), r.getLong(1),
-        r.getString(2))))
+    val nwk = TreeOps.assembleNewick(attrs(edges.map(_._1))
+      .map { case (id, pre, lbl) => (id, parentOf(id), pre, lbl) }.toArray)
     InducedResult(nwk, badNodes, badOtts, ok = badNodes.isEmpty && badOtts.isEmpty)
   }
 
@@ -234,7 +252,7 @@ object TreeApi {
   /** Released per-edge annotation fields spliced into arguson node blobs
     * (GraphExplorer.java:300-332 releasedFields).
     */
-  private val ArgusonAnnFields = Seq("supported_by", "terminal",
+  private[tree] val ArgusonAnnFields = Seq("supported_by", "terminal",
     "partial_path_of", "resolves", "conflicts_with", "resolved_by")
 
   /** Arguson subtree document (S6, GraphExplorer.java:342-354): nested JSON
@@ -244,15 +262,28 @@ object TreeApi {
     * named descendant by pre order, GraphExplorer.java:450-494), a
     * lineage[] on the root, and the document-level `source_id_map` of every
     * annotation source seen (GraphExplorer.java:217-226,351-352).
-    * Driver-side assembly under the 25k-tip cap, mirroring the newick path.
+    * Driver-side assembly under the 25k-tip cap, mirroring the newick path:
+    * from the serving index with no Spark job when [[TreeServing.build]]
+    * has indexed `t.nodes` ([[TreeServing.Index.arguson]]; the source map
+    * is [[TreeIngest.Ingested.sourceBlobs]], collected once per `t`),
+    * otherwise from relational fetches. An id that is not in the tree is
+    * an IllegalArgumentException.
     */
-  def arguson(t: Ingested, rootId: Long, heightLimit: Int = 5): String = {
+  def arguson(t: Ingested, rootId: Long, heightLimit: Int = 5): String =
+    TreeServing.indexOf(t.nodes) match {
+      case Some(idx) => idx.arguson(rootId, heightLimit,
+        s => t.sourceBlobs.getOrElse(s, Map.empty))
+      case None => sparkArguson(t, rootId, heightLimit)
+    }
+
+  private def sparkArguson(t: Ingested, rootId: Long, heightLimit: Int): String = {
     val tips = TreeOps.subtreeTipCount(t.nodes, rootId, heightLimit)
-    require(tips <= TreeOps.MaxTipsArguson,
-      s"requested tree ($tips tips) is larger than currently allowed (${TreeOps.MaxTipsArguson})")
+    TreeOps.requireCap(tips, TreeOps.MaxTipsArguson)
 
     val linIds = t.nodes.filter(col("node_id") === rootId)
-      .select(col("ancestors")).head().getSeq[Long](0).dropRight(1).reverse
+      .select(col("ancestors")).take(1).headOption
+      .getOrElse(throw new IllegalArgumentException(TreeOps.notInTree(rootId)))
+      .getSeq[Long](0).dropRight(1).reverse
 
     val sub = TreeOps.subtree(t.nodes, rootId, heightLimit)
       .withColumn("in_lineage", lit(false))
@@ -296,33 +327,11 @@ object TreeApi {
     val byId = rows.map(r => r.getLong(0) -> r).toMap
     val uniqueSources = scala.collection.mutable.SortedSet.empty[String]
 
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                  case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-
     def blob(r: Row, sb: StringBuilder): Unit = {
-      sb ++= "{\"node_id\":\"" ++= esc(r.getString(3)) ++= "\""
-      sb ++= ",\"num_tips\":" ++= r.getLong(8).toString
-      if (!r.isNullAt(4)) {
-        sb ++= ",\"taxon\":{\"name\":\"" ++= esc(r.getString(4)) ++= "\""
-        sb ++= ",\"unique_name\":\"" ++= esc(Option(r.getString(5)).getOrElse(r.getString(4))) ++= "\""
-        if (!r.isNullAt(6)) sb ++= ",\"rank\":\"" ++= esc(r.getString(6)) ++= "\""
-        if (!r.isNullAt(7)) sb ++= ",\"ott_id\":" ++= r.getLong(7).toString
-        sb += '}'
-      } else {
-        // unnamed: representative descendant names (first/last by pre)
-        val names = Seq(Option(r.getString(9)), Option(r.getString(10)))
-          .flatten.distinct
-        sb ++= ",\"descendant_name_list\":["
-        sb ++= names.map(n => "\"" + esc(n) + "\"").mkString(",")
-        sb += ']'
-      }
-      // released annotation fields, already JSON via to_json
-      ArgusonAnnFields.zipWithIndex.foreach { case (f, i) =>
-        if (!r.isNullAt(13 + i)) {
-          sb ++= ",\"" ++= f ++= "\":" ++= r.getString(13 + i)
-        }
-      }
+      argusonBlob(sb, r.getString(3), r.getLong(8), r.getString(4),
+        r.getString(5), r.getString(6),
+        if (r.isNullAt(7)) None else Some(r.getLong(7)),
+        r.getString(9), r.getString(10), i => r.getString(13 + i))
       r.getSeq[String](12).foreach(uniqueSources += _)
     }
 
@@ -353,23 +362,58 @@ object TreeApi {
       blob(linRows(id), linSb); linSb += '}'
     }
 
-    // document-level source_id_map over every source seen in any blob
-    val srcSb = new StringBuilder
-    uniqueSources.foreach { s =>
-      val b = t.sourceBlobs.getOrElse(s, Map.empty)
-      if (srcSb.nonEmpty) srcSb += ','
-      srcSb ++= "\"" ++= esc(s) ++= "\":{"
-      srcSb ++= b.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-        .mkString(",")
-      srcSb += '}'
-    }
+    argusonDocument(sb.result(), linSb.result(), uniqueSources,
+      s => t.sourceBlobs.getOrElse(s, Map.empty))
+  }
 
-    val body = sb.result()
-    // splice lineage + source map into the root object (before its close)
+  private def esc(s: String): String =
+    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+
+  /** One arguson node blob, left open for `children` and the closing
+    * brace: taxon fields for a named node, otherwise the first/last named
+    * descendants; then each non-null annotation field's `to_json` text.
+    */
+  private[tree] def argusonBlob(sb: StringBuilder, otNodeId: String,
+      numTips: Long, name: String, uniqueName: String, rank: String,
+      ottId: Option[Long], firstNamed: String, lastNamed: String,
+      annJson: Int => String): Unit = {
+    sb ++= "{\"node_id\":\"" ++= esc(otNodeId) ++= "\""
+    sb ++= ",\"num_tips\":" ++= numTips.toString
+    if (name != null) {
+      sb ++= ",\"taxon\":{\"name\":\"" ++= esc(name) ++= "\""
+      sb ++= ",\"unique_name\":\"" ++= esc(Option(uniqueName).getOrElse(name)) ++= "\""
+      if (rank != null) sb ++= ",\"rank\":\"" ++= esc(rank) ++= "\""
+      ottId.foreach(id => sb ++= ",\"ott_id\":" ++= id.toString)
+      sb += '}'
+    } else {
+      // unnamed: representative descendant names (first/last by pre)
+      val names = Seq(Option(firstNamed), Option(lastNamed)).flatten.distinct
+      sb ++= ",\"descendant_name_list\":["
+      sb ++= names.map(n => "\"" + esc(n) + "\"").mkString(",")
+      sb += ']'
+    }
+    // released annotation fields, already JSON via to_json
+    ArgusonAnnFields.indices.foreach { i =>
+      val json = annJson(i)
+      if (json != null) sb ++= ",\"" ++= ArgusonAnnFields(i) ++= "\":" ++= json
+    }
+  }
+
+  /** Splice the root lineage and the document-level source_id_map of the
+    * (sorted) `sources` into the root object of `body`, before its close.
+    */
+  private[tree] def argusonDocument(body: String, lineage: String,
+      sources: Iterable[String], sourceBlob: String => Map[String, String])
+      : String = {
+    val srcStr = sources.iterator.map { s =>
+      "\"" + esc(s) + "\":{" + sourceBlob(s).toSeq.sortBy(_._1)
+        .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+        .mkString(",") + "}"
+    }.mkString(",")
     "{\"arguson\":" + body.patch(body.length - 1,
-      ",\"lineage\":[" + linSb.result() + "]" +
-        ",\"source_id_map\":{" + srcSb.result() + "}}", 1) + "}"
+      ",\"lineage\":[" + lineage + "]" +
+        ",\"source_id_map\":{" + srcStr + "}}", 1) + "}"
   }
 
   /** JSON-escape a string column: quote and backslash, matching the
@@ -489,19 +533,8 @@ object TreeApi {
     val srcs = t.nodes.join(scope, Seq("node_id"), "left_semi")
       .select(explode(annKeys).as("s")).distinct()
       .collect().map(_.getString(0)).sorted
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                  case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-    val srcStr = srcs.map { s =>
-      val b = t.sourceBlobs.getOrElse(s, Map.empty)
-      "\"" + esc(s) + "\":{" + b.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-        .mkString(",") + "}"
-    }.mkString(",")
-
-    "{\"arguson\":" + body.patch(body.length - 1,
-      ",\"lineage\":[" + linStr + "]" +
-        ",\"source_id_map\":{" + srcStr + "}}", 1) + "}"
+    argusonDocument(body, linStr, srcs,
+      s => t.sourceBlobs.getOrElse(s, Map.empty))
   }
 
   /** Executor-only arguson sink: the token stream written as ordered text

@@ -121,7 +121,9 @@ object TreeOps {
   def subtreeTipCount(nodes: DataFrame, rootId: Long, maxDepth: Int = -1): Long =
     if (maxDepth < 0) {
       nodes.filter(col("node_id") === rootId)
-        .select(col("tip_descendants")).head().getLong(0)
+        .select(col("tip_descendants")).take(1).headOption
+        .getOrElse(throw new IllegalArgumentException(notInTree(rootId)))
+        .getLong(0)
     } else {
       subtree(nodes, rootId, maxDepth)
         .filter(col("is_leaf") || col("rel_depth") === maxDepth)
@@ -268,31 +270,60 @@ object TreeOps {
       case "name"        => col("name")
       case "id"          => col("ot_node_id")
       case "name_and_id" => concat(col("name"), lit("_ott"), col("tax_uid"))
-      case other => throw new IllegalArgumentException(
-        s"Invalid 'label_format' arg: '$other'. Valid formats: \"name\", \"id\", or \"name_and_id\" (default).")
+      case other => throw invalidLabelFormat(other)
     }
     when(col("name").isNotNull, named)
       .otherwise(if (idsForUnnamed) col("ot_node_id") else lit(""))
   }
 
+  private[tree] def invalidLabelFormat(format: String) =
+    new IllegalArgumentException(
+      s"Invalid 'label_format' arg: '$format'. Valid formats: \"name\", \"id\", or \"name_and_id\" (default).")
+
   /** Hard caps before materializing (tree_of_life_v3.java:591-592). */
   val MaxTipsNewick = 100000L
   val MaxTipsArguson = 25000L
 
-  /** Newick of a subtree: size-guard, interval-filtered collect of the
-    * bounded subtree, driver-side assembly in `pre` (tree) order.
-    * Requires ot-columns (`name`, `ot_node_id`, `tax_uid`).
+  /** The cap refusal, one message for every capped extract and path. */
+  private[tree] def requireCap(tips: Long, cap: Long): Unit =
+    require(tips <= cap, s"requested tree ($tips tips) is larger than currently allowed ($cap)")
+
+  private[tree] def notInTree(nodeId: Long): String =
+    s"node id $nodeId is not in the tree"
+
+  /** Newick of a subtree: size-guard, then driver-side assembly in `pre`
+    * (tree) order. When [[TreeServing.build]] has indexed `nodes`, the
+    * extract is answered from that index with no Spark job
+    * ([[TreeServing.Index.newick]]), except with branch lengths, which the
+    * index does not hold. Otherwise the bounded subtree is fetched by an
+    * interval-filtered collect, and `knownTips` / `rootBounds` (the root
+    * row's tip count and pre/post/depth, when the caller has them) skip the
+    * size-guard job and the root-resolution subquery. Requires ot-columns
+    * (`name`, `ot_node_id`, `tax_uid`). An id that is not in `nodes` is an
+    * IllegalArgumentException.
     */
   def newick(nodes: DataFrame, rootId: Long, maxDepth: Int = -1,
       labelFormat: String = "name_and_id", idsForUnnamed: Boolean = false,
       withBranchLengths: Boolean = false, cap: Long = MaxTipsNewick,
       knownTips: Option[Long] = None,
-      rootBounds: Option[(Long, Long, Long)] = None): String = {
+      rootBounds: Option[(Long, Long, Long)] = None): String =
+    TreeServing.indexOf(nodes) match {
+      case Some(idx) if !withBranchLengths =>
+        idx.newick(rootId, maxDepth, labelFormat, idsForUnnamed, cap)
+      case _ =>
+        sparkNewick(nodes, rootId, maxDepth, labelFormat, idsForUnnamed,
+          withBranchLengths, cap, knownTips, rootBounds)
+    }
+
+  private def sparkNewick(nodes: DataFrame, rootId: Long, maxDepth: Int,
+      labelFormat: String, idsForUnnamed: Boolean, withBranchLengths: Boolean,
+      cap: Long, knownTips: Option[Long],
+      rootBounds: Option[(Long, Long, Long)]): String = {
     // callers that already resolved the root row pass its tip count (skips
     // the size-guard job) and pre/post/depth bounds (skips the broadcast
     // subquery) — interactive endpoints count their jobs
     val tips = knownTips.getOrElse(subtreeTipCount(nodes, rootId, maxDepth))
-    require(tips <= cap, s"requested tree ($tips tips) is larger than currently allowed ($cap)")
+    requireCap(tips, cap)
     val subDf = rootBounds match {
       case Some((p, q, d)) => subtreeByBounds(nodes, p, q, d, maxDepth)
       case None => subtree(nodes, rootId, maxDepth)
@@ -305,6 +336,8 @@ object TreeOps {
       else base.select(col("node_id"), col("parent_id"), col("pre"), col("lbl"),
           lit(null).cast("double").as("branch_length")))
       .collect()
+    if (!rows.exists(_.getLong(0) == rootId))
+      throw new IllegalArgumentException(notInTree(rootId))
     val bls: Map[Long, Option[Double]] = rows.map(r => r.getLong(0) ->
       (if (withBranchLengths && !r.isNullAt(4) && !r.getDouble(4).isNaN &&
            r.getLong(0) != rootId) Some(r.getDouble(4)) else None)).toMap

@@ -271,6 +271,44 @@ class PlanSpec extends AnyFunSuite {
     assert(root.map(_.getAs[Long]("post")).toSeq == Seq(parsed.length - 1L))
   }
 
+  test("served extracts start no Spark job once the store is indexed") {
+    // newick / induced_subtree / arguson answer from the serving index
+    // after one build; a second build of the same frame is memoised
+    import graft.tree.{TreeApi, TreeIngest, TreeOps, TreeServing}
+    val fx = GaviaFixture.fx
+    val t = TreeIngest.ingest(spark, s"$fx/gavia.tre",
+      s"$fx/gavia_annotations.json", s"$fx/gavia_taxonomy.tsv", "opentree4.1")
+    val idx = TreeServing.build(t)
+    t.sourceBlobs
+    val root = idx.byOtId("ott803675").get.getLong(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val marker = "graft.test.marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(marker) != null)
+          marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val again =
+      try {
+        assert(TreeOps.newick(t.nodes, root, idsForUnnamed = true) ==
+          GaviaFixture.GoldenGavia)
+        assert(TreeApi.inducedSubtree(t, Seq("ott1085739", "ott90560")).ok)
+        assert(TreeApi.arguson(t, root).contains("\"source_id_map\""))
+        val b = TreeServing.build(t)
+        sc.setLocalProperty(marker, "1")
+        try sc.range(0, 1).count() finally sc.setLocalProperty(marker, null)
+        assert(marked.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        b
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"indexed extracts started ${jobs.get()} jobs")
+    assert(again eq idx, "a second build of the same frame must reuse the index")
+  }
+
   test("repetition and quantization are scan-local: zero exchanges") {
     val rep = finalPlan(graft.queries.TrainingQueries.txtRepetition(spark, sf))
     assert(!rep.contains("Exchange"), rep)
