@@ -62,8 +62,9 @@ object Bench {
     }
     // 3-decimal seconds: millisecond resolution is far below run noise
     // (host drift swings gates 1.5-2x), and the shorter line maximizes
-    // what survives the driver artifact's fixed tail window
-    def f3(v: Double): String = f"$v%.3f"
+    // what survives the driver artifact's fixed tail window; Locale.ROOT,
+    // because a decimal comma would break the JSON
+    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // a failed query reports -1, never a fake wall-clock entry
     val qs = results.map { case (k, v, ok) => "\"" + k + "\":" + (if (ok) f3(v) else "-1.0") }
       .mkString("{", ",", "}")

@@ -74,7 +74,9 @@ object CcBench {
     val canonSecs = (System.nanoTime() - t1) / 1e9
     require(nCanon == nComp,
       s"canonical rows $nCanon != components $nComp")
-    println(f"{" + f""""mode":"$mode","nodes":$n,"components":$nComp,"largest":$biggest,"sec":$secs%.1f,"canon_sec":$canonSecs%.1f""" + "}")
+    // Locale.ROOT: a decimal comma would break the JSON line
+    def f1(v: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, v)
+    println(s"""{"mode":"$mode","nodes":$n,"components":$nComp,"largest":$biggest,"sec":${f1(secs)},"canon_sec":${f1(canonSecs)}}""")
     spark.stop()
   }
 }

@@ -890,7 +890,7 @@ object TextOps {
       queryTerms: Seq[String], topK: Int): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
     require(topK > 0, s"topK=$topK must be positive")
-    val terms = queryTerms.map(_.toLowerCase).distinct
+    val terms = queryTerms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
     val base = bm25Base(docs, idCol, textCol)
     val stats = base.agg(count(lit(1)).as("n"),
       coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("tot"))

@@ -26,11 +26,38 @@ object Newick {
   val MinBranchLength = 1e-22 // JadeNode.java:10
 
   /** Characters replaced with '_' in newick-safe labels
-    * (JadeNode.java:23 offendingChars + whitespace).
+    * (JadeNode.java:23 offendingChars + the whitespace regex `\s` matches;
+    * the set `TreeOps.scrubCol` replaces on the Spark path).
     */
-  private val Offending = "[\\Q\"_~`:;/[]{}|<>,.!@#$%^&*()?+=\\\\\\E\\s]+".r
+  private val Offending = {
+    val is = new Array[Boolean](128)
+    "\"_~`:;/[]{}|<>,.!@#$%^&*()?+=\\ \t\n\u000B\f\r".foreach(is(_) = true)
+    is
+  }
+  private def offending(c: Char): Boolean = c < 128 && Offending(c)
 
-  def scrub(name: String): String = Offending.replaceAllIn(name, "_")
+  /** Replace each run of offending characters with one '_'. A label in
+    * which that changes nothing (every ot id) comes back as it is.
+    */
+  def scrub(name: String): String = {
+    var sb: java.lang.StringBuilder = null
+    var i = 0
+    while (i < name.length) {
+      val c = name.charAt(i)
+      if (offending(c)) {
+        var j = i + 1
+        while (j < name.length && offending(name.charAt(j))) j += 1
+        if (sb == null && (j - i > 1 || c != '_'))
+          sb = new java.lang.StringBuilder(name.length).append(name, 0, i)
+        if (sb != null) sb.append('_')
+        i = j
+      } else {
+        if (sb != null) sb.append(c)
+        i += 1
+      }
+    }
+    if (sb == null) name else sb.toString
+  }
 
   /** Parse a single newick string into preorder nodes. Quoted labels
     * ('...', with '' escaping) and [comments] are handled; whitespace

@@ -177,7 +177,7 @@ object TreeApi {
   /** The induced newick from resolved root paths; `attrs` fetches
     * (node_id, pre, formatted label) of the kept ids.
     */
-  private[tree] def inducedResult(paths: Seq[(Long, Seq[Long])],
+  private def inducedResult(paths: Seq[(Long, Seq[Long])],
       badNodes: Seq[String], badOtts: Seq[Long])(
       attrs: Seq[Long] => Seq[(Long, Long, String)]): InducedResult = {
     require(paths.size >= 2,
@@ -366,9 +366,22 @@ object TreeApi {
       s => t.sourceBlobs.getOrElse(s, Map.empty))
   }
 
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+  /** JSON string escaping; a string that needs none comes back as it is. */
+  private[graft] def esc(s: String): String = {
+    var sb: java.lang.StringBuilder = null
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '"' || c == '\\' || c < ' ') {
+        if (sb == null) sb = new java.lang.StringBuilder(s.length + 8).append(s, 0, i)
+        if (c == '"') sb.append("\\\"")
+        else if (c == '\\') sb.append("\\\\")
+        else sb.append(f"\\u${c.toInt}%04x")
+      } else if (sb != null) sb.append(c)
+      i += 1
+    }
+    if (sb == null) s else sb.toString
+  }
 
   /** One arguson node blob, left open for `children` and the closing
     * brace: taxon fields for a named node, otherwise the first/last named

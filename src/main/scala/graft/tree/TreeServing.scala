@@ -1,7 +1,9 @@
 package graft.tree
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.tree.TreeIngest.Ingested
 
 /** Millisecond serving — the analog of the reference's Lucene exact
@@ -12,125 +14,217 @@ import graft.tree.TreeIngest.Ingested
   * instead of paying the ~0.1-0.35 s job-scheduling floor per action.
   * SURVEY §7.5 names exactly this mitigation.
   *
-  * The index holds one row per node over the SERVING columns only
-  * (ids, taxon fields, interval labels, ancestors, annotation maps and
-  * their `to_json` texts) — O(nodes × serving width) driver memory, the
-  * same order as the reference's Lucene index files, which it likewise
-  * holds beside the graph DB. Build pays ONE collect of the nodes table;
-  * the rows are then kept in `pre` order, so a subtree is a contiguous
-  * slice walked in O(output). [[build]] memoises the index per frame
-  * instance, and [[TreeOps.newick]], [[TreeApi.inducedSubtree]] and
-  * [[TreeApi.arguson]] find it through [[indexOf]]: once a served store is
-  * indexed, its capped extracts leave the distributed path. Uncapped
-  * exports (`newickTokens`, `argusonTokens`) and analytics stay
-  * distributed. The index answers for the frame's contents at build time.
+  * The index is columnar: one primitive or `String` array per serving
+  * field, indexed by the node's position in `pre` order, plus each
+  * node's parent position and root-path length (derived from
+  * `parent_id`; the `ancestors` arrays are not collected). The
+  * annotation maps are kept for `node_info` beside the `to_json` texts
+  * arguson splices. Driver memory is O(nodes × serving width), the same
+  * order as the reference's Lucene index files, which it likewise holds
+  * beside the graph DB. Build pays ONE collect of the nodes table. A
+  * subtree is a contiguous run of positions, so every extract walks
+  * positions in O(output), and `induced_subtree` keeps the query
+  * positions and the meets of their pre-order neighbours. [[build]]
+  * memoises the index per frame instance, and [[TreeOps.newick]],
+  * [[TreeApi.inducedSubtree]] and [[TreeApi.arguson]] find it through
+  * [[indexOf]]: once a served store is indexed, its capped extracts leave
+  * the distributed path. Uncapped exports (`newickTokens`,
+  * `argusonTokens`) and analytics stay distributed. The index answers for
+  * the frame's contents at build time.
   */
 object TreeServing {
-
-  // field order of the one serving projection (see collectIndex())
-  private val Cols = Seq("node_id", "ot_node_id", "name", "unique_name",
-    "tax_uid", "tax_rank", "tax_sources", "tip_descendants", "depth",
-    "pre", "post", "ancestors", "supported_by", "terminal",
-    "partial_path_of", "resolves", "conflicts_with", "resolved_by",
-    "parent_id")
-  private val INodeId = 0; private val IOt = 1; private val IName = 2
-  private val IUniq = 3; private val IUid = 4; private val IRank = 5
-  private val ITipDesc = 7; private val IDepth = 8
-  private val IPre = 9; private val IPost = 10; private val IAnc = 11
-  private val IAnnFirst = 12 // supported_by .. resolved_by (6 fields)
 
   /** The released node_info annotation fields, in blob order. */
   private val AnnFields = TreeApi.ArgusonAnnFields
   private val AnnFieldNames = AnnFields.toArray
-  // their to_json texts follow Cols: Spark renders each map in its stored
-  // key order, which a collected Scala Map loses past four entries
-  private val IJsonFirst = Cols.length
 
-  /** @param rows one per node, sorted by `pre`: a row's index is its
-    *             position in pre order
-    */
-  final class Index private[tree] (
-      rows: Array[Row],
-      byOt: java.util.HashMap[String, Int],
-      byUid: java.util.HashMap[Long, Int],
-      byId: java.util.HashMap[Long, Int]) {
+  // field order of the one serving projection (see collectIndex()): the
+  // fields of the Row views byOtId/byOttId/byNodeId return, then parent_id
+  // and the annotation maps' to_json texts (Spark renders each map in its
+  // stored key order, which a collected Scala Map loses past four entries)
+  private val RowCols = Seq("node_id", "ot_node_id", "name", "unique_name",
+    "tax_uid", "tax_rank", "tax_sources", "tip_descendants", "depth",
+    "pre", "post") ++ AnnFields
+  private val INodeId = 0; private val IOt = 1; private val IName = 2
+  private val IUniq = 3; private val IUid = 4; private val IRank = 5
+  private val ITaxSources = 6; private val ITipDesc = 7; private val IDepth = 8
+  private val IPre = 9; private val IPost = 10
+  private val IAnnFirst = 11 // supported_by .. resolved_by (6 fields)
+  private val IParent = RowCols.length
+  private val IJsonFirst = IParent + 1
 
-    def size: Int = rows.length
-
-    private val preKeys = rows.map(_.getLong(IPre))
-    private def named(k: Int) = !rows(k).isNullAt(IName)
-    // nearest named position at-or-after / at-or-before each position
-    // (size / -1 when there is none): a subtree's first and last named
-    // descendants in O(1)
-    private val nextNamed = new Array[Int](rows.length)
-    private val prevNamed = new Array[Int](rows.length)
-    locally {
-      var next = rows.length
-      for (k <- rows.indices.reverse) {
-        if (named(k)) next = k
-        nextNamed(k) = next
-      }
-      var prev = -1
-      for (k <- rows.indices) {
-        if (named(k)) prev = k
-        prevNamed(k) = prev
-      }
+  /** A growable `Int` array: position lists and stacks without boxing. */
+  private final class IntBuf {
+    private var a = new Array[Int](16)
+    var size = 0
+    def +=(k: Int): Unit = {
+      if (size == a.length) a = java.util.Arrays.copyOf(a, size * 2)
+      a(size) = k
+      size += 1
     }
+    def apply(i: Int): Int = a(i)
+    def last: Int = a(size - 1)
+    def pop(): Int = { size -= 1; a(size) }
+    /** Sort ascending and drop repeats, in place. */
+    def sortDistinct(): this.type = {
+      java.util.Arrays.sort(a, 0, size)
+      var n = 0
+      var i = 0
+      while (i < size) {
+        if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+        i += 1
+      }
+      size = n
+      this
+    }
+  }
 
-    // each row's parent position (-1 at a root) and root-path length, so
-    // node_info's lineage and mrca climb Int arrays instead of hashing
-    // every id of the stored ancestors arrays. Climbing from a row must
-    // visit exactly its stored root path, which is checked here: the
-    // ancestors array of every row is its parent's plus its own node_id,
-    // and node_ids are unique (true of every ingested frame).
+  /** What [[Index]]'s nest() calls per position, in pre order: a class,
+    * because a `(Int, Boolean) => Unit` closure boxes both arguments.
+    */
+  private abstract class Nesting {
+    def enter(k: Int, open: Boolean): Unit
+    def exit(k: Int): Unit
+  }
+
+  /** @param rows one per node of the serving projection, sorted by `pre`:
+    *             a row's index is its position. The rows are read into
+    *             columns here and not kept.
+    */
+  final class Index private[tree] (rows: Array[Row], rowSchema: StructType) {
+
+    def size: Int = nodeId.length
+
+    private val nodeId = new Array[Long](rows.length)
+    private val pre = new Array[Long](rows.length)
+    private val post = new Array[Long](rows.length)
+    private val depth = new Array[Long](rows.length)
+    private val tipDesc = new Array[Long](rows.length)
+    private val uid = new Array[Long](rows.length)
+    private val noUid = new java.util.BitSet(rows.length)
+    private val ot = new Array[String](rows.length)
+    private val name = new Array[String](rows.length)
+    private val uniq = new Array[String](rows.length)
+    private val rank = new Array[String](rows.length)
+    private val taxSources = new Array[AnyRef](rows.length)
+    // per annotation field: the collected map and its to_json text
+    private val ann = Array.fill(AnnFields.length)(new Array[AnyRef](size))
+    private val annJson = Array.fill(AnnFields.length)(new Array[String](size))
+    // each node's parent position (-1 at a root) and root-path length
     private val parentAt = new Array[Int](rows.length)
     private val pathLen = new Array[Int](rows.length)
-    private val otAt = rows.map(_.getString(IOt))
+    private val byOt = new java.util.HashMap[String, Int](rows.length * 2)
+    private val byUid = new java.util.HashMap[Long, Int](rows.length * 2)
+    private val byId = new java.util.HashMap[Long, Int](rows.length * 2)
+
+    // Climbing parent positions from a node must visit exactly its root
+    // path, and a subtree must be the positions up to the last `pre` inside
+    // its [pre, post]. Both hold when node ids are unique and each parent
+    // row comes before its child, is the nearest enclosing interval and
+    // sits one level above it (true of every ingested frame); the open
+    // intervals on `stack` find the nearest enclosing one.
     locally {
+      val stack = new IntBuf
       var k = 0
       while (k < rows.length) {
-        val a = rows(k).getSeq[Long](IAnc)
-        val ok = a != null && a.nonEmpty && byId.getOrDefault(a.last, -1) == k
-        val p = if (ok && a.length > 1) byId.getOrDefault(a(a.length - 2), -1) else -1
-        require(ok && (a.length == 1 || p >= 0 && rows(p).getSeq[Long](IAnc) == a.init),
-          s"node_id ${rows(k).getLong(INodeId)}: the serving index needs unique node ids " +
-            "and ancestors arrays that extend the parent's by the node itself")
+        val r = rows(k)
+        nodeId(k) = r.getLong(INodeId)
+        pre(k) = r.getLong(IPre)
+        post(k) = r.getLong(IPost)
+        depth(k) = r.getLong(IDepth)
+        tipDesc(k) = r.getLong(ITipDesc)
+        if (r.isNullAt(IUid)) noUid.set(k) else uid(k) = r.getLong(IUid)
+        ot(k) = r.getString(IOt)
+        name(k) = r.getString(IName)
+        uniq(k) = r.getString(IUniq)
+        rank(k) = r.getString(IRank)
+        taxSources(k) = r.get(ITaxSources).asInstanceOf[AnyRef]
+        var i = 0
+        while (i < AnnFields.length) {
+          ann(i)(k) = r.get(IAnnFirst + i).asInstanceOf[AnyRef]
+          annJson(i)(k) = r.getString(IJsonFirst + i)
+          i += 1
+        }
+        val parentId = r.getLong(IParent)
+        val p = if (parentId == -1L) -1 else byId.getOrDefault(parentId, -1)
+        while (stack.size > 0 && post(stack.last) < pre(k)) stack.pop()
+        val enclosing = if (stack.size > 0) stack.last else -1
+        require(!byId.containsKey(nodeId(k)) && p == enclosing &&
+            (parentId == -1L || p >= 0 && pre(p) < pre(k) && post(k) <= post(p) &&
+              depth(k) == depth(p) + 1),
+          s"node_id ${nodeId(k)}: the serving index needs unique node ids, " +
+            "and a parent row ahead of each child that encloses its [pre, post] " +
+            "one level above it")
+        byId.put(nodeId(k), k)
+        stack += k
         parentAt(k) = p
-        pathLen(k) = a.length
+        pathLen(k) = if (p < 0) 1 else pathLen(p) + 1
+        if (ot(k) != null) byOt.put(ot(k), k)
+        if (!noUid.get(k)) byUid.put(uid(k), k)
         k += 1
       }
     }
 
-    private def rowAt(m: java.util.HashMap[_, Int], k: Any): Option[Row] = {
-      val i = m.asInstanceOf[java.util.HashMap[Any, Int]].getOrDefault(k, -1)
-      if (i < 0) None else Some(rows(i))
+    // nearest named position at-or-after / at-or-before each position
+    // (size / -1 when there is none): a subtree's first and last named
+    // descendants in O(1)
+    private val nextNamed = new Array[Int](size)
+    private val prevNamed = new Array[Int](size)
+    locally {
+      var next = size
+      var k = size - 1
+      while (k >= 0) {
+        if (name(k) != null) next = k
+        nextNamed(k) = next
+        k -= 1
+      }
+      var prev = -1
+      k = 0
+      while (k < size) {
+        if (name(k) != null) prev = k
+        prevNamed(k) = prev
+        k += 1
+      }
     }
-    def byOtId(ot: String): Option[Row] = rowAt(byOt, ot)
-    def byOttId(uid: Long): Option[Row] = rowAt(byUid, uid)
-    def byNodeId(id: Long): Option[Row] = rowAt(byId, id)
+
+    /** The node at position `k` as a Row of the serving fields, `node_id`
+      * first (None when `k` < 0).
+      */
+    private def rowAt(k: Int): Option[Row] =
+      if (k < 0) None
+      else Some(new GenericRowWithSchema((Array[Any](nodeId(k), ot(k), name(k),
+        uniq(k), uidOrNull(k), rank(k), taxSources(k), tipDesc(k), depth(k),
+        pre(k), post(k)) ++ ann.map(_(k))), rowSchema))
+    def byOtId(ot: String): Option[Row] = rowAt(byOt.getOrDefault(ot, -1))
+    def byOttId(uid: Long): Option[Row] = rowAt(byUid.getOrDefault(uid, -1))
+    def byNodeId(id: Long): Option[Row] = rowAt(byId.getOrDefault(id, -1))
 
     /** (pre, post, depth, tip_descendants) of a node — the values
       * TreeOps.newick's knownTips/rootBounds parameters take, which let an
       * un-indexed frame skip the size-guard and root-resolution jobs.
       */
-    def bounds(ot: String): Option[(Long, Long, Long, Long)] =
-      byOtId(ot).map(r => (r.getLong(IPre), r.getLong(IPost),
-        r.getLong(IDepth), r.getLong(ITipDesc)))
+    def bounds(ot: String): Option[(Long, Long, Long, Long)] = {
+      val k = byOt.getOrDefault(ot, -1)
+      if (k < 0) None else Some((pre(k), post(k), depth(k), tipDesc(k)))
+    }
 
     /** (pre, post) by node id — the resolver
       * [[graft.plans.IntervalCatalog.installFrom]] plugs into the
       * descendant-predicate rewrite, so a loaded serving index doubles
       * as the optimizer's anchor table at zero extra driver memory.
       */
-    def interval(id: Long): Option[(Long, Long)] =
-      byNodeId(id).map(r => (r.getLong(IPre), r.getLong(IPost)))
+    def interval(id: Long): Option[(Long, Long)] = {
+      val k = byId.getOrDefault(id, -1)
+      if (k < 0) None else Some((pre(k), post(k)))
+    }
+
+    private def uidOrNull(k: Int): Any = if (noUid.get(k)) null else uid(k)
 
     // field-for-field the blobOf of TreeApi.mrca (raw column values; the
     // ingest-time J3 rule already falls unique_name back to name)
-    private def taxonOf(r: Row): Option[TreeApi.TaxonBlob] =
-      Some(TreeApi.TaxonBlob(r.getString(IName), r.getString(IRank),
-        r.getString(IUniq),
-        if (r.isNullAt(IUid)) None else Some(r.getLong(IUid))))
+    private def taxonOf(k: Int): TreeApi.TaxonBlob =
+      TreeApi.TaxonBlob(name(k), rank(k), uniq(k),
+        if (noUid.get(k)) None else Some(uid(k)))
 
     /** `node_info` (tree_of_life_v3.java:130-227) as a field map — the
       * exact column set of [[TreeApi.nodeInfo]], no Spark job. Lineage
@@ -146,18 +240,17 @@ object TreeServing {
       val k = byOt.getOrDefault(otNodeId, -1)
       if (k < 0) None
       else {
-        val r = rows(k)
         val b = Map.newBuilder[String, Any]
-        b += "ot_node_id" -> r.getString(IOt)
-        b += "name" -> r.get(IName)
-        b += "unique_name" -> r.get(IUniq)
-        b += "tax_uid" -> r.get(IUid)
-        b += "tax_rank" -> r.get(IRank)
-        b += "tax_sources" -> r.get(6)
-        b += "num_tips" -> r.getLong(ITipDesc)
+        b += "ot_node_id" -> ot(k)
+        b += "name" -> name(k)
+        b += "unique_name" -> uniq(k)
+        b += "tax_uid" -> uidOrNull(k)
+        b += "tax_rank" -> rank(k)
+        b += "tax_sources" -> taxSources(k)
+        b += "num_tips" -> tipDesc(k)
         var i = 0
         while (i < AnnFieldNames.length) {
-          b += AnnFieldNames(i) -> r.get(IAnnFirst + i)
+          b += AnnFieldNames(i) -> ann(i)(k)
           i += 1
         }
         if (includeLineage) b += "lineage" -> lineage(k)
@@ -170,7 +263,7 @@ object TreeServing {
       val out = new Array[String](pathLen(k) - 1)
       var a = parentAt(k)
       var n = 0
-      while (a >= 0) { out(n) = otAt(a); n += 1; a = parentAt(a) }
+      while (a >= 0) { out(n) = ot(a); n += 1; a = parentAt(a) }
       collection.mutable.ArraySeq.make(out)
     }
 
@@ -188,7 +281,7 @@ object TreeServing {
     /** `mrca` (tree_of_life_v3.java:258-363) with the same semantics and
       * result type as [[TreeApi.mrca]], entirely on the index: resolve
       * both id spaces, take the last element of the root paths' common
-      * prefix, pull the root-path attributes from the rows.
+      * prefix, pull the root-path attributes from the columns.
       */
     def mrca(nodeIds: Seq[String] = Nil, ottIds: Seq[Long] = Nil)
         : TreeApi.MrcaResult = {
@@ -206,36 +299,17 @@ object TreeServing {
       require(m >= 0, "query nodes do not share a root (different trees?)")
       val badNodes = nodeIds.filterNot(byOt.containsKey)
       val badOtts = ottIds.filterNot(byUid.containsKey(_))
-      val mrcaRow = rows(m)
-      // the deepest taxon on the common path, the rootmost of equal depths
-      var nearestRow: Row = null
-      var a = m
-      while (a >= 0) {
-        val r = rows(a)
-        if (!r.isNullAt(IUid) &&
-            (nearestRow == null || r.getLong(IDepth) >= nearestRow.getLong(IDepth)))
-          nearestRow = r
-        a = parentAt(a)
-      }
-      val nearest = Option(nearestRow)
-      val mName = Option(mrcaRow.getString(IName))
+      // the deepest taxon on the common path: depth falls by one per
+      // parent, so the first one climbing from the MRCA
+      var nearest = m
+      while (nearest >= 0 && noUid.get(nearest)) nearest = parentAt(nearest)
+      val mName = Option(name(m))
       TreeApi.MrcaResult(
-        mrcaRow.getString(IOt), mName,
-        if (mName.isEmpty) nearest.map(_.getString(IOt)) else None,
+        ot(m), mName,
+        if (mName.isEmpty && nearest >= 0) Some(ot(nearest)) else None,
         badNodes, badOtts, ok = badNodes.isEmpty && badOtts.isEmpty,
-        mrcaTaxon = if (mName.isDefined) taxonOf(mrcaRow) else None,
-        nearestTaxon = nearest.flatMap(taxonOf))
-    }
-
-    /** Both id spaces → (found (node_id, root path), node ids not in the
-      * tree, ott ids not in the tree), as [[TreeApi.resolveIds]].
-      */
-    private def resolve(nodeIds: Seq[String], ottIds: Seq[Long])
-        : (Seq[(Long, Seq[Long])], Seq[String], Seq[Long]) = {
-      val hits = nodeIds.flatMap(byOtId) ++ ottIds.flatMap(byOttId)
-      (hits.map(r => r.getLong(INodeId) -> r.getSeq[Long](IAnc).toSeq)
-        .distinctBy(_._1),
-        nodeIds.filterNot(byOt.containsKey), ottIds.filterNot(byUid.containsKey(_)))
+        mrcaTaxon = if (mName.isDefined) Some(taxonOf(m)) else None,
+        nearestTaxon = if (nearest >= 0) Some(taxonOf(nearest)) else None)
     }
 
     private def position(nodeId: Long): Int = {
@@ -245,72 +319,92 @@ object TreeServing {
     }
 
     /** Last position inside the subtree at `k`: the last `pre` ≤ its
-      * `post`, by binary search over the sorted `pre` keys.
+      * `post`, by binary search over the sorted `pre` column.
       */
     private def lastPos(k: Int): Int = {
-      val post = rows(k).getLong(IPost)
-      var lo = k; var hi = rows.length
+      var lo = k; var hi = size
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (preKeys(mid) <= post) lo = mid + 1 else hi = mid
+        if (pre(mid) <= post(k)) lo = mid + 1 else hi = mid
       }
       lo - 1
     }
 
-    /** Walk the subtree at position `k0` in pre order, cut `maxDepth`
-      * levels below it (< 0: no cut): `enter(k, open)` per node, where
-      * `open` means it has children inside the cut, and `exit(k)` after
-      * the children of each open node. Below the cut the walk jumps past
-      * the subtree, so it costs O(output).
+    /** The subtree at position `k0` cut `maxDepth` levels below it (< 0:
+      * no cut), as positions in pre order, refused with
+      * [[TreeOps.requireCap]] when its leaves ([[TreeOps.subtreeTipCount]])
+      * exceed `cap`. A cut subtree's leaves are counted in a first pass that
+      * stores nothing, so a refusal allocates no position list. Below the
+      * cut each pass jumps past each subtree, so it costs O(output).
       */
-    private def walk(k0: Int, maxDepth: Int)(enter: (Int, Boolean) => Unit)(
-        exit: Int => Unit): Unit = {
+    private def cappedCut(k0: Int, maxDepth: Int, cap: Long): IntBuf = {
       val end = lastPos(k0)
-      val d0 = rows(k0).getLong(IDepth)
-      val open = scala.collection.mutable.Stack.empty[Int]
+      def atCut(k: Int) = maxDepth >= 0 && depth(k) - depth(k0) == maxDepth
+      def next(k: Int) = if (atCut(k)) lastPos(k) + 1 else k + 1
+      val tips =
+        if (maxDepth < 0) tipDesc(k0)
+        else {
+          var n = 0L
+          var k = k0
+          while (k <= end) {
+            if (atCut(k) || post(k) == pre(k)) n += 1
+            k = next(k)
+          }
+          n
+        }
+      TreeOps.requireCap(tips, cap)
+      val ks = new IntBuf
       var k = k0
-      while (k <= end) {
-        while (open.nonEmpty && rows(open.top).getLong(IPost) < preKeys(k))
-          exit(open.pop())
-        val hasKids = k < end && preKeys(k + 1) <= rows(k).getLong(IPost)
-        val inCut = maxDepth < 0 || rows(k).getLong(IDepth) - d0 < maxDepth
-        enter(k, hasKids && inCut)
-        if (hasKids && inCut) open.push(k)
-        k = if (hasKids && !inCut) lastPos(k) + 1 else k + 1
-      }
-      while (open.nonEmpty) exit(open.pop())
+      while (k <= end) { ks += k; k = next(k) }
+      ks
     }
 
-    /** [[TreeOps.subtreeTipCount]]: the leaves of the cut tree. */
-    private def tipCount(k0: Int, maxDepth: Int): Long =
-      if (maxDepth < 0) rows(k0).getLong(ITipDesc)
-      else {
-        val d0 = rows(k0).getLong(IDepth)
-        var tips = 0L
-        walk(k0, maxDepth) { (k, _) =>
-          if (rows(k).getLong(IPost) == preKeys(k) ||
-              rows(k).getLong(IDepth) - d0 == maxDepth) tips += 1
-        }(_ => ())
-        tips
-      }
-
-    /** Formatted, scrubbed label by position — [[TreeOps.formattedLabel]]
-      * on the index (null where the column expression yields null).
+    /** Nest positions given in pre order, each under its nearest listed
+      * ancestor: `to.enter(k, open)` per position, where `open` means a
+      * child follows (the next position lies inside its interval), and
+      * `to.exit(k)` after the children of each open position.
       */
-    private def labeler(format: String, idsForUnnamed: Boolean): Int => String = {
-      val named: Row => String = format match {
-        case "name" => _.getString(IName)
-        case "id" => _.getString(IOt)
-        case "name_and_id" => r =>
-          if (r.isNullAt(IUid)) null else r.getString(IName) + "_ott" + r.getLong(IUid)
-        case other => throw TreeOps.invalidLabelFormat(other)
+    private def nest(ks: IntBuf, to: Nesting): Unit = {
+      val open = new IntBuf
+      var i = 0
+      while (i < ks.size) {
+        val k = ks(i)
+        while (open.size > 0 && post(open.last) < pre(k)) to.exit(open.pop())
+        val hasKids = i + 1 < ks.size && pre(ks(i + 1)) <= post(k)
+        to.enter(k, hasKids)
+        if (hasKids) open += k
+        i += 1
       }
-      k => {
-        val r = rows(k)
-        val l = if (!r.isNullAt(IName)) named(r)
-          else if (idsForUnnamed) r.getString(IOt) else ""
+      while (open.size > 0) to.exit(open.pop())
+    }
+
+    /** The newick of positions in pre order ([[nest]]ed), as
+      * [[Newick.serialize]] writes it, each label formatted and scrubbed as
+      * [[TreeOps.formattedLabel]] does (null where that yields null).
+      */
+    private def newickOf(ks: IntBuf, format: String, idsForUnnamed: Boolean): String = {
+      val nameAndId = format == "name_and_id"
+      val byOtId = format == "id"
+      if (!nameAndId && !byOtId && format != "name") throw TreeOps.invalidLabelFormat(format)
+      def label(k: Int): String = {
+        val l =
+          if (name(k) == null) { if (idsForUnnamed) ot(k) else "" }
+          else if (nameAndId) { if (noUid.get(k)) null else name(k) + "_ott" + uid(k) }
+          else if (byOtId) ot(k)
+          else name(k)
         if (l == null) null else Newick.scrub(l)
       }
+      val sb = new java.lang.StringBuilder
+      nest(ks, new Nesting {
+        private var comma = false
+        def enter(k: Int, open: Boolean): Unit = {
+          if (comma) sb.append(',')
+          if (open) sb.append('(') else sb.append(label(k))
+          comma = !open
+        }
+        def exit(k: Int): Unit = { sb.append(')').append(label(k)); comma = true }
+      })
+      sb.append(';').toString
     }
 
     /** [[TreeOps.newick]] on the index, byte-identical to the Spark path
@@ -319,31 +413,38 @@ object TreeServing {
     def newick(rootId: Long, maxDepth: Int = -1,
         labelFormat: String = "name_and_id", idsForUnnamed: Boolean = false,
         cap: Long = TreeOps.MaxTipsNewick): String = {
-      val k0 = position(rootId)
-      TreeOps.requireCap(tipCount(k0, maxDepth), cap)
-      val label = labeler(labelFormat, idsForUnnamed)
-      val sb = new StringBuilder
-      var comma = false
-      walk(k0, maxDepth) { (k, open) =>
-        if (comma) sb += ','
-        if (open) sb += '(' else sb ++= label(k)
-        comma = !open
-      } { k => sb += ')'; sb ++= label(k); comma = true }
-      sb += ';'
-      sb.result()
+      val ks = cappedCut(position(rootId), maxDepth, cap)
+      newickOf(ks, labelFormat, idsForUnnamed)
     }
 
-    /** [[TreeApi.inducedSubtree]] on the index: the same kernel
-      * ([[TreeApi.inducedEdges]]) over the stored root paths.
+    /** [[TreeApi.inducedSubtree]] on the index, with the Spark path's
+      * refusals in its order. With the query positions in
+      * pre order, the nodes that [[TreeApi.inducedEdges]] keeps besides
+      * them (the MRCA and every node where query-ward branches split) are
+      * exactly the meets of pre-order neighbours, and each kept node's
+      * induced parent is its nearest kept ancestor, which [[nest]] finds.
       */
     def inducedSubtree(nodeIds: Seq[String] = Nil, ottIds: Seq[Long] = Nil,
         labelFormat: String = "name_and_id",
         idsForUnnamed: Boolean = false): TreeApi.InducedResult = {
-      val (found, badNodes, badOtts) = resolve(nodeIds, ottIds)
-      TreeApi.inducedResult(found, badNodes, badOtts) { kept =>
-        val label = labeler(labelFormat, idsForUnnamed)
-        kept.map { id => val k = position(id); (id, preKeys(k), label(k)) }
+      val kept = new IntBuf
+      nodeIds.foreach { id => val k = byOt.getOrDefault(id, -1); if (k >= 0) kept += k }
+      ottIds.foreach { id => val k = byUid.getOrDefault(id, -1); if (k >= 0) kept += k }
+      kept.sortDistinct()
+      val queries = kept.size
+      require(queries >= 2, s"at least 2 valid ids required, got $queries")
+      var i = 0
+      while (i + 1 < queries) {
+        val m = meet(kept(i), kept(i + 1))
+        require(m >= 0, "query nodes do not share a root (different trees?)")
+        kept += m
+        i += 1
       }
+      val nwk = newickOf(kept.sortDistinct(), labelFormat, idsForUnnamed)
+      val badNodes = nodeIds.filterNot(byOt.containsKey)
+      val badOtts = ottIds.filterNot(byUid.containsKey(_))
+      TreeApi.InducedResult(nwk, badNodes, badOtts,
+        ok = badNodes.isEmpty && badOtts.isEmpty)
     }
 
     /** [[TreeApi.arguson]] on the index; `sourceBlob` gives a source id's
@@ -352,40 +453,44 @@ object TreeServing {
     def arguson(rootId: Long, heightLimit: Int,
         sourceBlob: String => Map[String, String]): String = {
       val k0 = position(rootId)
-      TreeOps.requireCap(tipCount(k0, heightLimit), TreeOps.MaxTipsArguson)
+      val ks = cappedCut(k0, heightLimit, TreeOps.MaxTipsArguson)
       val sources = scala.collection.mutable.SortedSet.empty[String]
       def blob(k: Int, sb: StringBuilder): Unit = {
-        val r = rows(k)
         // first/last named proper descendant by pre
-        val (first, last) =
-          if (named(k)) (null, null)
-          else {
-            val end = lastPos(k)
-            val f = if (k < end) nextNamed(k + 1) else rows.length
-            if (f > end) (null, null)
-            else (rows(f).getString(IName), rows(prevNamed(end)).getString(IName))
-          }
-        TreeApi.argusonBlob(sb, r.getString(IOt), r.getLong(ITipDesc),
-          r.getString(IName), r.getString(IUniq), r.getString(IRank),
-          if (r.isNullAt(IUid)) None else Some(r.getLong(IUid)),
-          first, last, i => r.getString(IJsonFirst + i))
-        AnnFields.indices.foreach { i =>
-          if (!r.isNullAt(IAnnFirst + i))
-            sources ++= r.getMap[String, Any](IAnnFirst + i).keys
+        var first: String = null
+        var last: String = null
+        if (name(k) == null) {
+          val end = lastPos(k)
+          val f = if (k < end) nextNamed(k + 1) else size
+          if (f <= end) { first = name(f); last = name(prevNamed(end)) }
+        }
+        TreeApi.argusonBlob(sb, ot(k), tipDesc(k), name(k), uniq(k), rank(k),
+          if (noUid.get(k)) None else Some(uid(k)),
+          first, last, annJson(_)(k))
+        var i = 0
+        while (i < AnnFields.length) {
+          val m = ann(i)(k)
+          if (m != null) sources ++= m.asInstanceOf[collection.Map[String, Any]].keys
+          i += 1
         }
       }
       val sb = new StringBuilder
-      var comma = false
-      walk(k0, heightLimit) { (k, open) =>
-        if (comma) sb += ','
-        blob(k, sb)
-        sb ++= (if (open) ",\"children\":[" else "}")
-        comma = !open
-      } { _ => sb ++= "]}"; comma = true }
+      nest(ks, new Nesting {
+        private var comma = false
+        def enter(k: Int, open: Boolean): Unit = {
+          if (comma) sb += ','
+          blob(k, sb)
+          sb ++= (if (open) ",\"children\":[" else "}")
+          comma = !open
+        }
+        def exit(k: Int): Unit = { sb ++= "]}"; comma = true }
+      })
       val lineage = new StringBuilder
-      rows(k0).getSeq[Long](IAnc).dropRight(1).reverseIterator.foreach { id =>
+      var a = parentAt(k0)
+      while (a >= 0) {
         if (lineage.nonEmpty) lineage += ','
-        blob(position(id), lineage); lineage += '}'
+        blob(a, lineage); lineage += '}'
+        a = parentAt(a)
       }
       TreeApi.argusonDocument(sb.result(), lineage.result(), sources, sourceBlob)
     }
@@ -412,21 +517,11 @@ object TreeServing {
   }
 
   private def collectIndex(nodes: DataFrame): Index = {
-    val rows = nodes.select(Cols.map(col) ++ AnnFields.map(f => to_json(col(f))): _*)
-      .collect()
+    val projection = nodes.select(RowCols.map(col) ++ Seq(col("parent_id")) ++
+      AnnFields.map(f => to_json(col(f))): _*)
+    val rows = projection.collect()
     java.util.Arrays.sort(rows,
       java.util.Comparator.comparingLong[Row](_.getLong(IPre)))
-    val byOt = new java.util.HashMap[String, Int](rows.length * 2)
-    val byUid = new java.util.HashMap[Long, Int](rows.length * 2)
-    val byId = new java.util.HashMap[Long, Int](rows.length * 2)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      byId.put(r.getLong(INodeId), i)
-      if (!r.isNullAt(IOt)) byOt.put(r.getString(IOt), i)
-      if (!r.isNullAt(IUid)) byUid.put(r.getLong(IUid), i)
-      i += 1
-    }
-    new Index(rows, byOt, byUid, byId)
+    new Index(rows, StructType(projection.schema.take(RowCols.length)))
   }
 }

@@ -1127,6 +1127,20 @@ class TrainingSpec extends AnyFunSuite {
     assert(run(fixture.repartition(7)).toSeq == got.toSeq)
   }
 
+  test("bm25 lowercases query terms as Spark's lower() does, whatever " +
+      "the default locale (tr-TR lowercases 'I' to a dotless 'ı')") {
+    import spark.implicits._
+    val docs = Seq((1L, "info about trees"), (2L, "nothing here"))
+      .toDF("doc_id", "text")
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val hits = TextOps.bm25(docs, "doc_id", "text", Seq("INFO"), topK = 10)
+        .collect().map(_.getLong(0))
+      assert(hits.toSeq == Seq(1L))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("hybrid RRF fusion equals the per-tower recomputation; dual-" +
       "listed docs outrank single-tower docs at equal positions") {
     val fused = TrainingQueries.retHybrid(spark, sf)

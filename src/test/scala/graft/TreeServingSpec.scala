@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+
+import scala.util.{Failure, Random, Try}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tree._
@@ -103,5 +107,165 @@ class TreeServingSpec extends AnyFunSuite {
     // the job floor this path replaces is ~100-350 ms; a hash probe must
     // be orders of magnitude under it (generous bound to stay unflaky)
     assert(perLookupMs < 1.0, s"warm lookup took $perLookupMs ms")
+  }
+
+  test("build refuses a frame whose parent rows do not enclose their " +
+      "children or sit one level above them") {
+    Seq(
+      t.nodes.withColumn("post",
+        when(col("parent_id") === -1L, col("pre")).otherwise(col("post"))),
+      t.nodes.withColumn("depth",
+        when(col("is_leaf"), col("depth") + 1).otherwise(col("depth")))
+    ).foreach { nodes =>
+      val e = intercept[IllegalArgumentException](TreeServing.build(nodes))
+      assert(e.getMessage.contains("the serving index needs unique node ids"), e.getMessage)
+      assert(TreeServing.indexOf(nodes).isEmpty)
+    }
+  }
+
+  test("a capped newick refused on a large random tree names its exact " +
+      "tip count, and one tip more in the cap answers it") {
+    val tr = randomIngest(90L, 3000, (i, rnd) => rnd.nextInt(i))
+    val idx = TreeServing.build(tr)
+    val rows = tr.nodes.select("node_id", "pre", "post", "depth", "is_leaf").collect()
+    val root = rows.minBy(_.getLong(1))
+    val inner = rows.filter(r => !r.getBoolean(4) && r.getLong(3) == 2L).head
+    Seq(root, inner).foreach { top =>
+      Seq(-1, 0, 1, 3, 6).foreach { maxDepth =>
+        // the cut's leaves: nodes at the cut depth, and tips above it
+        val tips = rows.count { r =>
+          val below = r.getLong(3) - top.getLong(3)
+          r.getLong(1) >= top.getLong(1) && r.getLong(1) <= top.getLong(2) &&
+            (below == maxDepth || r.getBoolean(4) && (maxDepth < 0 || below < maxDepth))
+        }.toLong
+        val e = intercept[IllegalArgumentException](
+          idx.newick(top.getLong(0), maxDepth, cap = tips - 1))
+        assert(e.getMessage == "requirement failed: requested tree " +
+          s"($tips tips) is larger than currently allowed (${tips - 1})")
+        val nwk = idx.newick(top.getLong(0), maxDepth, labelFormat = "id", cap = tips)
+        val parsed = Newick.parse(nwk)
+        val parents = parsed.map(_.parentId).toSet
+        assert(parsed.count(n => !parents(n.nodeId)) == tips)
+      }
+    }
+  }
+
+  test("Newick.scrub equals the JadeNode offending-character regex on " +
+      "every offending character, whitespace, runs and clean labels") {
+    val regex = "[\\Q\"_~`:;/[]{}|<>,.!@#$%^&*()?+=\\\\\\E\\s]+".r
+    val offending = "\"_~`:;/[]{}|<>,.!@#$%^&*()?+=\\ \t\n\u000B\f\r"
+    val labels = (0 until 256).map(c => s"a${c.toChar}b") ++
+      offending.map(c => s"$c$c$c") ++ offending.map(c => s"x$c") ++
+      Seq("", "ott1085739", "mrcaott90560ott1057518", "Gavia immer",
+        "a__b", "__", "_", "a _ b", "Odd \"q\" (x)/y:3", "x\u00A0y", "Épée ü")
+    labels.foreach { l =>
+      assert(Newick.scrub(l) == regex.replaceAllIn(l, "_"), s"label '$l'")
+    }
+  }
+
+  test("JSON escaping is unchanged: quotes, backslashes and control " +
+      "characters escaped, everything else as it is") {
+    def reference(s: String): String =
+      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+                  case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+    val strings = (0 until 128).map(c => s"a${c.toChar}b") ++
+      Seq("", "plain", "Gavia immer", "ott1085739", "\"\"", "\\\\", "tab\there",
+        "é ü \u2028", "pg_1@tree1")
+    strings.foreach(s => assert(TreeApi.esc(s) == reference(s), s"string '$s'"))
+  }
+
+  test("induced_subtree from the index equals inducedEdges + assembleNewick " +
+      "over root paths, on random trees, in every label format") {
+    val shapes: Seq[(Int, Random) => Int] = Seq(
+      (i, rnd) => rnd.nextInt(i),                          // bushy, unary nodes
+      (i, rnd) => math.max(0, i - 1 - rnd.nextInt(3)),     // deep caterpillars
+      (i, _) => (i - 1) / 2)                               // binary
+    val formats = Seq(("name_and_id", false), ("name", true), ("id", true))
+    shapes.zipWithIndex.foreach { case (shape, s) =>
+      val seed = 70L + s
+      val rnd = new Random(seed)
+      val tr = randomIngest(seed, 40 + rnd.nextInt(50), shape)
+      val idx = TreeServing.build(tr)
+      final case class N(id: Long, ot: String, uid: Option[Long], pre: Long,
+          path: Seq[Long], labels: Seq[String])
+      val nodes = tr.nodes.select(Seq(col("node_id"), col("ot_node_id"),
+          col("tax_uid"), col("pre"), col("ancestors")) ++
+          formats.map { case (f, u) => TreeOps.formattedLabel(f, u) }: _*)
+        .collect().map(r => N(r.getLong(0), r.getString(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3),
+          r.getSeq[Long](4).toSeq, (5 to 7).map(r.getString)))
+        .toSeq
+      val byId = nodes.map(n => n.id -> n).toMap
+      val byOt = nodes.map(n => n.ot -> n).toMap
+      val byUid = nodes.flatMap(n => n.uid.map(_ -> n)).toMap
+      def reference(ids: Seq[String], otts: Seq[Long], f: Int): TreeApi.InducedResult = {
+        val found = (ids.flatMap(byOt.get) ++ otts.flatMap(byUid.get)).distinctBy(_.id)
+        val (badNodes, badOtts) = (ids.filterNot(byOt.contains), otts.filterNot(byUid.contains))
+        require(found.size >= 2, s"at least 2 valid ids required, got ${found.size}")
+        val edges = TreeApi.inducedEdges(found.map(n => n.id -> n.path))
+        val nwk = TreeOps.assembleNewick(edges.map { case (id, p, _) =>
+          (id, p, byId(id).pre, byId(id).labels(f)) }.toArray)
+        TreeApi.InducedResult(nwk, badNodes, badOtts, badNodes.isEmpty && badOtts.isEmpty)
+      }
+      // a mix of random nodes, an ancestor of one of them, repeats, unknown
+      // ids, and ott ids in place of (or beside) ot ids
+      def request(): (Seq[String], Seq[Long]) = {
+        val picks = Seq.fill(1 + rnd.nextInt(8))(nodes(rnd.nextInt(nodes.size)))
+        val anc = byId(picks.head.path(rnd.nextInt(picks.head.path.size)))
+        val all = picks ++ Option.when(rnd.nextBoolean())(anc) ++
+          Option.when(rnd.nextInt(3) == 0)(picks.last)
+        val (asOtt, asOt) = all.partition(n => n.uid.isDefined && rnd.nextInt(3) == 0)
+        (rnd.shuffle(asOt.map(_.ot) ++ Option.when(rnd.nextInt(4) == 0)("nope") ++
+            Option.when(rnd.nextInt(5) == 0)(asOtt.headOption.map(_.ot)).flatten),
+          rnd.shuffle(asOtt.map(_.uid.get) ++ Option.when(rnd.nextInt(4) == 0)(424242L)))
+      }
+      var answered = 0
+      (1 to 60).foreach { _ =>
+        val (ids, otts) = request()
+        formats.zipWithIndex.foreach { case ((f, u), fi) =>
+          val got = Try(idx.inducedSubtree(ids, otts, f, u))
+          val want = Try(reference(ids, otts, fi))
+          (got, want) match {
+            case (Failure(a), Failure(b)) =>
+              assert(a.getClass == b.getClass && a.getMessage == b.getMessage,
+                s"tree $seed, $ids / $otts, $f: index threw $a, reference $b")
+            case _ =>
+              assert(got == want, s"tree $seed, $ids / $otts, $f")
+              answered += 1
+          }
+        }
+      }
+      assert(answered >= 90, s"tree $seed: only $answered answered requests")
+    }
+  }
+
+  /** Ingest a random tree: node i > 0 hangs under `parent(i, rnd)` < i.
+    * Every third node is a named taxon whose name needs scrubbing; the
+    * others are unnamed, and a few of those carry an ott id the taxonomy
+    * lacks.
+    */
+  private def randomIngest(seed: Long, n: Int,
+      parent: (Int, Random) => Int): TreeIngest.Ingested = {
+    val rnd = new Random(seed)
+    val parents = Array.tabulate(n)(i => if (i == 0) -1 else parent(i, rnd))
+    def ot(i: Int) = if (i % 3 == 0 || i % 7 == 1) s"ott${1000 + i}" else s"node$i"
+    val kids = (1 until n).groupBy(parents(_))
+    def nwk(i: Int): String = kids.get(i) match {
+      case Some(cs) => cs.map(nwk).mkString("(", ",", ")") + ot(i)
+      case None => ot(i)
+    }
+    val dir = Files.createTempDirectory("graft_serving_induced")
+    def put(name: String, text: String) =
+      Files.write(dir.resolve(name), text.getBytes(StandardCharsets.UTF_8)).toString
+    val tax = "uid\t|\tparent_uid\t|\tname\t|\trank\t|\tsourceinfo\t|\tuniqname\t|\tflags\t|\t\n" +
+      (0 until n).filter(_ % 3 == 0).map { i =>
+        s"${1000 + i}\t|\t\t|\tTaxon  $i sp.__x\t|\tspecies\t|\tncbi:$i\t|\t\t|\t\t|\t\n"
+      }.mkString
+    val ann = s"""{"tree_id":"opentree8.$seed","taxonomy_version":"3.0",""" +
+      s""""num_tips":0,"sources":[],"nodes":{"${ot(0)}":{"supported_by":""" +
+      s"""{"pg_1@tree1":"n0"}}},"source_id_map":{"pg_1_tree1":""" +
+      """{"git_sha":"sha1","tree_id":"tree1","study_id":"pg_1"}}}"""
+    TreeIngest.ingest(spark, put("t.tre", nwk(0) + ";"), put("ann.json", ann),
+      put("tax.tsv", tax), s"opentree8.$seed")
   }
 }
