@@ -257,7 +257,6 @@ object StoreUtil {
     mf
   }
 
-  /** One integer field from a JSON-ish manifest string. */
   /** Forward-compat gate every store loader runs: a manifest stamped by
     * a NEWER format version must be refused, not misread — a v2 layout
     * (say, a changed pair-log schema) silently half-read as v1 is a
@@ -281,6 +280,7 @@ object StoreUtil {
     "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(manifest)
       .map(_.group(1).toInt).getOrElse(1)
 
+  /** One integer field from a JSON-ish manifest string. */
   def manifestInt(manifest: String, key: String, where: String): Int =
     ("\"" + key + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(manifest)
       .map(_.group(1).toInt)

@@ -34,13 +34,10 @@ import org.apache.spark.sql.functions._
   * whose first partner arrives later is the old snapshot's business only
   * if the pipeline re-probes it, which is a full re-run, not an ingest.
   *
-  * Same durability contract as every manifested store here: a pending
-  * marker brackets the append, load/exists refuse a marked store,
-  * [[recoverIngest]] rolls a crashed batch out by its store-unique
-  * `ingest_seq`, zombie re-delivery of a completed foreachBatch batch is
-  * a manifest-guarded no-op, and [[compact]] rewrites the append-grown
-  * layout (merging per-hash rows — counts sum — so a long-lived store
-  * stays one row per distinct hash). SINGLE WRITER assumed.
+  * Appends, recovery and compaction follow [[graft.StoreCommit]]; the
+  * rollback identity is the per-row tag (`ingest_batch`, `ingest_seq`).
+  * [[compact]] merges per-hash rows (counts sum), so a long-lived store
+  * stays one row per distinct hash.
   *
   * Layout: `path/hashes` (h, n, ingest_batch, ingest_seq),
   * `path/_graft_dupstore.json`.
@@ -57,35 +54,24 @@ object DupStore {
     */
   final case class Loaded(hashes: DataFrame, win: Int, path: String)
 
+  private val Commit = graft.StoreCommit.Kind("dup-hash store",
+    ManifestFile, PendingFile, "hashes", "DupStore.recoverIngest",
+    strict = true)
+
   private def manifest(win: Int, ingests: Long,
-      batchId: Option[Long], compactedAt: Long = 0L): String =
+      batchId: Option[Long], compactedAt: Long): String =
     s"""{"version":1,"win":$win,"ingests":$ingests""" +
       s""","compacted_at":$compactedAt""" +
       batchId.map(id => s""","last_batch":$id""").getOrElse("") + "}"
 
-  private def refusePending(spark: SparkSession, path: String): Unit =
-    if (graft.StoreUtil.readMarker(spark, path, PendingFile).isDefined)
-      throw new IllegalStateException(
-        s"$path has an unfinished ingest ($PendingFile present) — run " +
-          "DupStore.recoverIngest(spark, path, dest) to roll it back")
-
-  /** Whether a healthy index exists at `path` — same broken-vs-absent
-    * discipline as the sibling stores: rows without a manifest mean the
-    * FIRST ingest crashed, and a create-on-first-batch branch must not
-    * silently reset the index over them.
+  /** Whether a healthy index exists at `path` (the
+    * [[graft.StoreCommit.exists]] broken-vs-absent rule).
     */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.manifestedStoreExists(spark, path, "hashes",
-      ManifestFile, "hash rows",
-      "the first ingest crashed mid-write; delete the directory and " +
-        "re-ingest the batch")
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.StoreCommit.exists(spark, Commit, path)
 
   def load(spark: SparkSession, path: String): Loaded = {
-    refusePending(spark, path)
-    val m = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "dup-hash store")
+    val m = graft.StoreCommit.manifest(spark, Commit, path)
     Loaded(spark.read.parquet(s"$path/hashes"),
       graft.StoreUtil.manifestInt(m, "win", s"dup manifest at $path"), path)
   }
@@ -131,28 +117,15 @@ object DupStore {
     * pos) site per hash) and append them, creating the store on the
     * first batch. The window length is validated against the manifest on
     * every later ingest. Idempotent under foreachBatch zombie
-    * re-delivery via the manifest's `last_batch`; the pending marker +
-    * `ingest_seq` tag give [[recoverIngest]] its rollback identity
-    * (format and rationale inherited verbatim from [[LshStore]]).
+    * re-delivery via the manifest's `last_batch`.
     */
   def ingestBatch(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, win: Int = 4,
       batchId: Option[Long] = None): Unit = {
-    val present = exists(spark, path)
-    val prevLastBatch =
-      if (present) SketchOps.lastBatchId(spark, path, ManifestFile) else None
-    if (present && batchId.isDefined && batchId == prevLastBatch) return
-    // ONE manifest read serves ingests and the compaction watermark
-    val mf =
-      if (present) Some(graft.StoreUtil.requireManifest(spark, path,
-        ManifestFile, "dup-hash store"))
-      else None
-    val ingests: Long = mf.map(graft.StoreUtil.manifestLong(_, "ingests",
-      s"dup manifest at $path")).getOrElse(0L)
-    val bid = batchId.getOrElse(-(ingests + 1L))
-    val ww = mf match {
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId,
+      create = true).getOrElse(return)
+    val ww = pre.mf match {
       case Some(m) =>
-        // parse from the held manifest string — load() would re-read it
         val sw = graft.StoreUtil.manifestInt(m, "win",
           s"dup manifest at $path")
         require(win == sw,
@@ -169,16 +142,12 @@ object DupStore {
     val rows = TextOps.windowTable(batch, idCol, textCol, ww)
       .groupBy(col("h"))
       .agg(count(lit(1)).as("n"))
-    graft.StoreUtil.writeMarker(spark, path, PendingFile, s"$bid:$ingests")
-    val seq = ingests + 1L
-    rows.withColumn("ingest_batch", lit(bid))
-      .withColumn("ingest_seq", lit(seq))
-      .write.mode(if (present) "append" else "overwrite")
-      .parquet(s"$path/hashes")
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-      manifest(ww, ingests + 1L, batchId.orElse(prevLastBatch),
-        mf.map(graft.StoreUtil.compactedAtOf).getOrElse(0L)))
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
+    val tag = pre.tag(batchId)
+    graft.StoreCommit.append(spark, Commit, path, tag.marker, Seq(
+      "hashes" -> (() => tag(rows)
+        .write.mode(if (pre.mf.isDefined) "append" else "overwrite")
+        .parquet(s"$path/hashes"))),
+      manifest(ww, pre.ingests + 1L, pre.nextLast(batchId), pre.compactedAt))
   }
 
   /** The shared probe evidence: the batch hashed ONCE (materialized —
@@ -296,46 +265,24 @@ object DupStore {
   def probeStripThenIngest(spark: SparkSession, path: String,
       outPath: String, batch: DataFrame, idCol: String, textCol: String,
       batchId: Long, win: Int = 4): Unit = {
-    val present = exists(spark, path)
-    if (present &&
-        SketchOps.lastBatchId(spark, path, ManifestFile).contains(batchId))
-      return
+    val pre = graft.StoreCommit.pre(spark, Commit, path, Some(batchId),
+      create = true).getOrElse(return)
     // one materialization feeds the strip (several plan branches) and
     // the ingest — a foreachBatch Dataset re-executes per action
     // otherwise
     val b = ClusterOps.flatten(batch)
     val cleaned =
-      if (present) probeStrip(load(spark, path), b, idCol, textCol)
+      if (pre.mf.isDefined) probeStrip(load(spark, path), b, idCol, textCol)
       else TextOps.stripDuplicatedSpans(b, idCol, textCol, win)
     cleaned.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     ingestBatch(spark, path, b, idCol, textCol, win, Some(batchId))
   }
 
-  /** Roll an interrupted ingest back out into a clean store at `dest` —
-    * marker format, completion witness, and seq-over-tag preference as
-    * documented at [[LshStore.recoverIngest]].
+  /** Roll an interrupted ingest back out into a clean store at `dest`
+    * ([[graft.StoreCommit.recoverTagged]]).
     */
-  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit = {
-    val pending = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted ingest recorded at $path")).trim
-    val Array(badStr, startStr) = pending.split(":", 2)
-    val m = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-      .getOrElse(throw new IllegalStateException(
-        s"$path's first ingest crashed (no pre-batch manifest survives)" +
-          " — delete the directory and re-ingest the batch"))
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "recover")
-    val completed = graft.StoreUtil.manifestLong(m, "ingests",
-      s"dup manifest at $path").toLong != startStr.toLong
-    val t = spark.read.parquet(s"$path/hashes")
-    val cleaned =
-      if (completed) t
-      else t.filter(coalesce(col("ingest_seq") =!= (startStr.toLong + 1L),
-        col("ingest_batch") =!= badStr.toLong))
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    cleaned.write.mode("overwrite").parquet(s"$dest/hashes")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile, m)
-  }
+  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.recoverTagged(spark, Commit, path, dest, Seq("hashes"))
 
   /** Rewrite an ingest-grown store at `dest`, MERGING per-hash rows —
     * counts sum — so a store that has seen k batches goes back to one
@@ -343,46 +290,30 @@ object DupStore {
     * under the merge; `DupStoreSpec` proves probe-equality across
     * compaction).
     * Merged rows carry batch tag −1/seq 0 (no live rollback identity —
-    * compaction of a healthy store has nothing to roll back; the
-    * manifest's parameters and zombie guard carry over, with the
-    * `compacted_at` watermark advanced so [[needsCompact]] resets).
-    * Unlike
+    * compaction of a healthy store has nothing to roll back). Unlike
     * the kilobyte-scale sibling stores, this index is O(corpus tokens),
     * so `files` defaults to real parallelism — a single-file layout
     * starves the probe scan of row groups (measured ~2× slower).
     */
   def compact(spark: SparkSession, path: String, dest: String,
       files: Int = 32): Unit = {
-    refusePending(spark, path)
     require(files >= 1, s"files must be >= 1, got $files")
-    val m = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "dup-hash store")
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "compact")
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    spark.read.parquet(s"$path/hashes")
-      .groupBy(col("h"))
-      .agg(sum(col("n")).as("n"))
-      .select(col("h"), col("n"),
-        lit(-1L).as("ingest_batch"), lit(0L).as("ingest_seq"))
-      .repartition(files)
-      .write.mode("overwrite").parquet(s"$dest/hashes")
-    // advance the compaction watermark so needsCompact resets until
-    // `slack` more batches fold on top of the compacted store
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(m, graft.StoreUtil.manifestLong(m,
-        "ingests", s"dup manifest at $path")))
+    graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
+      Seq("hashes" -> (() => spark.read.parquet(s"$path/hashes")
+        .groupBy(col("h"))
+        .agg(sum(col("n")).as("n"))
+        .select(col("h"), col("n"),
+          lit(-1L).as("ingest_batch"), lit(0L).as("ingest_seq"))
+        .repartition(files)
+        .write.mode("overwrite").parquet(s"$dest/hashes")))
+    }
   }
 
-  /** Maintenance nudge (the LM store's family-shared rule): probes
+  /** Maintenance nudge: probes
     * re-aggregate every ingest's `(h, n)` rows, so probe cost grows
     * with batches since compaction — trip after `slack`.
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-        "dup-hash store"),
-      slack, s"dup manifest at $path")
-  }
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 }

@@ -32,14 +32,9 @@ import org.apache.spark.sql.functions._
   * would force rewriting every stored edge of any source the batch
   * touches.
   *
-  * Crash protocol (the family discipline): the manifest is deleted
-  * before any write and rewritten last, so a mid-save crash leaves a
-  * store that REFUSES to load; a mid-APPEND crash is recoverable —
-  * [[PendingFile]] (written first, removed last) records the pre-batch
-  * manifest and the pre-append edge file list, so [[recoverAppend]]
-  * rolls exactly the crashed batch out instead of forcing a rebuild
-  * from source; a re-delivered `batchId` equal to the recorded
-  * `last_batch` is a FULL no-op.
+  * Saves, appends, recovery and compaction follow [[graft.StoreCommit]];
+  * the rollback identity is the pre-batch manifest plus the pre-append
+  * edge file list, both held in [[PendingFile]].
   *
   * The `symmetric` manifest flag is a caller assertion recorded at
   * save time: [[ClusterOps.connectedComponentsStored]] needs BOTH edge
@@ -54,9 +49,7 @@ object GraphStore {
 
   /** Present only while an append is in flight: line 1 is the
     * pre-batch manifest, the remaining lines the pre-append edge file
-    * names. A crash mid-append leaves it behind, so the partial state
-    * is DETECTED (load/append/compact refuse) and [[recoverAppend]]
-    * can roll exactly the crashed batch out.
+    * names.
     */
   val PendingFile = "_graft_gstore_pending"
 
@@ -70,6 +63,9 @@ object GraphStore {
   case class Loaded(edges: DataFrame, degrees: DataFrame, nodes: DataFrame,
       buckets: Int, symmetric: Boolean)
 
+  private val Commit = graft.StoreCommit.Kind("graph store", ManifestFile,
+    PendingFile, "edges", "GraphStore.recoverAppend", strict = false)
+
   private def manifest(buckets: Int, nEdges: Long, lastBatch: Option[Long],
       ingests: Long, compactedAt: Long, symmetric: Boolean): String =
     s"""{"version":$FormatVersion,"buckets":$buckets,"n_edges":$nEdges,""" +
@@ -80,16 +76,19 @@ object GraphStore {
   private def symmetricOf(mf: String): Boolean =
     "\"symmetric\"\\s*:\\s*true".r.findFirstIn(mf).isDefined
 
-  // lenient: a pre-counter manifest reads as ingests = 1 (StoreUtil
-  // rationale — the counter is consulted after data writes land)
-  private def ingestsOf(mf: String): Long = graft.StoreUtil.ingestsOf(mf)
-
-  private def refusePending(spark: SparkSession, path: String): Unit =
-    if (graft.StoreUtil.readMarker(spark, path, PendingFile).isDefined)
-      throw new IllegalStateException(
-        s"$path has an unfinished append ($PendingFile present) — run " +
-          "GraphStore.recoverAppend(spark, path, dest) to roll the " +
-          "crashed batch out")
+  /** The three tables of a store holding edge multiset `e` — degrees and
+    * nodes are pure functions of it.
+    */
+  private def tables(spark: SparkSession, e: DataFrame, dir: String,
+      buckets: Int): graft.StoreCommit.Writes = Seq(
+    "edges" -> (() => graft.tree.TreeStore.writeBucketed(spark, e,
+      s"$dir/edges", "src", buckets)),
+    "degrees" -> (() => graft.tree.TreeStore.writeBucketed(spark,
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      s"$dir/degrees", "src", buckets)),
+    "nodes" -> (() => e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct()
+      .write.mode("overwrite").parquet(s"$dir/nodes")))
 
   /** Build the store from an edge list (src, dst). Parallel edges are
     * kept — they act as weights, exactly as [[ClusterOps.pageRank]]
@@ -116,22 +115,10 @@ object GraphStore {
       val nEdges = e.count()
       require(nEdges > 0, "refusing to save an empty graph store — " +
         "an edgeless save usually means the build-side join broke")
-      // a full rewrite supersedes any crashed append at this path (the
-      // TreeStore.save rule): clear the stale pending marker so the
-      // rebuilt, internally consistent store loads
-      graft.StoreUtil.deleteMarker(spark, path, PendingFile)
-      graft.StoreUtil.deleteMarker(spark, path, ManifestFile)
-      graft.tree.TreeStore.writeBucketed(spark, e, s"$path/edges", "src",
-        buckets)
-      graft.tree.TreeStore.writeBucketed(spark,
-        e.groupBy(col("src")).agg(count(lit(1)).as("deg")),
-        s"$path/degrees", "src", buckets)
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct()
-        .write.mode("overwrite").parquet(s"$path/nodes")
       // a fresh save IS compact (one file per bucket): ingests = 1 and
       // the watermark sits at it, so needsCompact starts false
-      graft.StoreUtil.writeMarker(spark, path, ManifestFile,
+      graft.StoreCommit.rewrite(spark, Commit, path,
+        tables(spark, e, path, buckets),
         manifest(buckets, nEdges, batchId, ingests = 1L, compactedAt = 1L,
           symmetric = symmetric))
     } finally e.unpersist(blocking = false)
@@ -149,11 +136,9 @@ object GraphStore {
     */
   def append(spark: SparkSession, path: String, edges: DataFrame,
       batchId: Option[Long] = None, symmetric: Boolean = false): Unit = {
-    refusePending(spark, path)
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "graph store", FormatVersion)
-    val prevLast = graft.ops.SketchOps.lastBatchId(spark, path, ManifestFile)
-    if (batchId.isDefined && batchId == prevLast) return
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId)
+      .getOrElse(return)
+    val mf = pre.mf.get
     val buckets = graft.StoreUtil.manifestInt(mf, "buckets",
       s"graph store at $path")
     val nEdges = graft.StoreUtil.manifestLong(mf, "n_edges",
@@ -173,31 +158,23 @@ object GraphStore {
           .unionByName(e.select(col("src").as("id")))
           .unionByName(e.select(col("dst").as("id"))).distinct())
       val batchCount = e.count()
-      // the rollback identity: the pre-batch manifest plus the exact
-      // edge file set that existed before this batch — written BEFORE
-      // the manifest delete, removed after the new manifest lands, so
-      // every crash window in between is recoverable
-      graft.StoreUtil.writeMarker(spark, path, PendingFile,
-        (mf +: dataFileNames(spark, s"$path/edges")).mkString("\n"))
-      graft.StoreUtil.deleteMarker(spark, path, ManifestFile)
-      graft.tree.TreeStore.appendBucketed(spark, e, s"$path/edges", "src",
-        buckets)
-      graft.tree.TreeStore.writeBucketed(spark, mergedDeg,
-        s"$path/degrees", "src", buckets)
-      mergedNodes.write.mode("overwrite").parquet(s"$path/nodes")
-      graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-        manifest(buckets, nEdges + batchCount, batchId.orElse(prevLast),
-          ingests = ingestsOf(mf) + 1L,
-          compactedAt = graft.StoreUtil.compactedAtOf(mf),
+      graft.StoreCommit.append(spark, Commit, path,
+        (mf +: graft.StoreUtil.dataFileNames(spark, s"$path/edges"))
+          .mkString("\n"), Seq(
+        "edges" -> (() => graft.tree.TreeStore.appendBucketed(spark, e,
+          s"$path/edges", "src", buckets)),
+        "degrees" -> (() => graft.tree.TreeStore.writeBucketed(spark,
+          mergedDeg, s"$path/degrees", "src", buckets)),
+        "nodes" -> (() =>
+          mergedNodes.write.mode("overwrite").parquet(s"$path/nodes"))),
+        manifest(buckets, nEdges + batchCount, pre.nextLast(batchId),
+          ingests = pre.ingests + 1L, compactedAt = pre.compactedAt,
           symmetric = symmetricOf(mf) && symmetric))
-      graft.StoreUtil.deleteMarker(spark, path, PendingFile)
     } finally e.unpersist(blocking = false)
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
-    refusePending(spark, path)
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "graph store", FormatVersion)
+    val mf = graft.StoreCommit.manifest(spark, Commit, path)
     val buckets = graft.StoreUtil.manifestInt(mf, "buckets",
       s"graph store at $path")
     Loaded(
@@ -209,108 +186,64 @@ object GraphStore {
       buckets, symmetricOf(mf))
   }
 
-  /** Healthy-store probe — and the fail-fast for the crashed states: an
-    * unfinished append (pending marker) and a crashed save (data
-    * present, manifest gone), neither of which may be silently
-    * re-created over.
-    */
-  def storeExists(spark: SparkSession, path: String): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.manifestedStoreExists(spark, path, "edges",
-      ManifestFile, "edges",
-      "a save crashed mid-write; rebuild from source (or re-drive the " +
-        "batch through save) rather than resetting history")
-  }
+  /** Healthy-store probe ([[graft.StoreCommit.exists]]). */
+  def storeExists(spark: SparkSession, path: String): Boolean =
+    graft.StoreCommit.exists(spark, Commit, path)
 
   /** Whether a maintenance pass is due: each [[append]] stacks another
     * file set into every touched bucket, so after k batches a rank
     * round opens O(k) files per bucket — the same unbounded growth the
-    * fold stores surface, probed by the same family-shared
-    * [[graft.StoreUtil.needsCompactFrom]] rule over the manifest's
-    * `ingests` counter and `compacted_at` watermark.
+    * fold stores surface.
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-        "graph store", FormatVersion),
-      slack, s"graph store at $path", strict = false)
-  }
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 
   /** Roll an interrupted append back out into a clean store at `dest`:
     * the pending marker names the exact pre-batch edge files, so the
     * crashed batch's files are excluded and degrees + nodes — pure
     * functions of the edge multiset — are rebuilt from the survivors
-    * (O(store) once, vs the full re-ingest a source rebuild costs; the
-    * damaged source is read-only throughout, so recovery itself is
-    * crash-safe). An append that COMPLETED before the crash (new
-    * manifest landed, marker delete didn't) is kept whole. The dest
-    * manifest's watermark advances to the ingest count — the rewrite
-    * is one file per bucket, a compaction by construction.
+    * (O(store) once, vs the full re-ingest a source rebuild costs). The
+    * dest manifest's watermark advances to the ingest count — the
+    * rewrite is one file per bucket, a compaction by construction.
     */
   def recoverAppend(spark: SparkSession, path: String, dest: String): Unit = {
-    val pending = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted append recorded at $path"))
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "recover")
-    val lines = pending.linesIterator.toSeq
-    val preMf = lines.head
-    val preFiles = lines.tail.filter(_.nonEmpty)
-    require(preFiles.nonEmpty,
-      s"pending marker at $path records no pre-batch edge files — " +
-        "it was not written by GraphStore.append")
-    val completed = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-      .exists(cur => ingestsOf(cur) != ingestsOf(preMf))
-    val mf =
-      if (completed)
-        graft.StoreUtil.readMarker(spark, path, ManifestFile).get
-      else preMf
-    val edgeFiles =
-      if (completed) dataFileNames(spark, s"$path/edges") else preFiles
-    val cleanEdges = spark.read
-      .parquet(edgeFiles.map(n => s"$path/edges/$n"): _*)
-      .select(col("src"), col("dst"))
-    val buckets = graft.StoreUtil.manifestInt(mf, "buckets",
-      s"graph store at $path")
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    graft.tree.TreeStore.writeBucketed(spark, cleanEdges, s"$dest/edges",
-      "src", buckets)
-    graft.tree.TreeStore.writeBucketed(spark,
-      cleanEdges.groupBy(col("src")).agg(count(lit(1)).as("deg")),
-      s"$dest/degrees", "src", buckets)
-    cleanEdges.select(col("src").as("id"))
-      .unionByName(cleanEdges.select(col("dst").as("id"))).distinct()
-      .write.mode("overwrite").parquet(s"$dest/nodes")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(mf, ingestsOf(mf)))
+    val onDisk = graft.StoreUtil.dataFileNames(spark, s"$path/edges").toSet
+    // a marker cut short by a crash while it was written reads as a
+    // truncated manifest line or as file names that do not exist
+    def parse(raw: String): Option[graft.StoreCommit.Pending[Seq[String]]] =
+      raw.linesIterator.toSeq match {
+        case preMf +: files if preMf.startsWith("{") && preMf.endsWith("}") &&
+            files.nonEmpty && files.forall(onDisk) =>
+          Some(graft.StoreCommit.Pending(files,
+            Some(graft.StoreUtil.ingestsOf(preMf)), Some(preMf)))
+        case _ => None
+      }
+    graft.StoreCommit.recover(spark, Commit, path, dest,
+      graft.StoreUtil.ingestsOf, parse,
+      graft.StoreCommit.watermarked(Commit, _)) { (preFiles, completed, mf) =>
+      val cleanEdges = spark.read
+        .parquet((if (completed) onDisk.toSeq else preFiles)
+          .map(n => s"$path/edges/$n"): _*)
+        .select(col("src"), col("dst"))
+      tables(spark, cleanEdges, dest, graft.StoreUtil.manifestInt(mf,
+        "buckets", s"graph store at $path"))
+    }
   }
 
   /** Rewrite an append-grown store to one file per bucket at `dest` —
     * each append stacks another file set into every touched bucket, so
-    * after k batches a rank round opens k files per bucket. The
-    * manifest (including the `last_batch` zombie guard and the
-    * `symmetric` assertion) carries over with `compacted_at` advanced
-    * to the ingest count, so [[needsCompact]] resets.
+    * after k batches a rank round opens k files per bucket.
     */
-  def compact(spark: SparkSession, path: String, dest: String): Unit = {
-    refusePending(spark, path)
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "graph store", FormatVersion)
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "compact")
-    val st = load(spark, path)
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    graft.tree.TreeStore.writeBucketed(spark, st.edges, s"$dest/edges",
-      "src", st.buckets)
-    graft.tree.TreeStore.writeBucketed(spark, st.degrees, s"$dest/degrees",
-      "src", st.buckets)
-    st.nodes.write.mode("overwrite").parquet(s"$dest/nodes")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(mf, ingestsOf(mf)))
-  }
-
-  // the rollback identity [[append]] records and [[recoverAppend]]
-  // replays — the family-shared data-file convention
-  private def dataFileNames(spark: SparkSession, dir: String): Seq[String] =
-    graft.StoreUtil.dataFileNames(spark, dir)
+  def compact(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
+      val st = load(spark, path)
+      Seq(
+        "edges" -> (() => graft.tree.TreeStore.writeBucketed(spark, st.edges,
+          s"$dest/edges", "src", st.buckets)),
+        "degrees" -> (() => graft.tree.TreeStore.writeBucketed(spark,
+          st.degrees, s"$dest/degrees", "src", st.buckets)),
+        "nodes" -> (() => st.nodes.write.mode("overwrite")
+          .parquet(s"$dest/nodes")))
+    }
 }

@@ -21,12 +21,8 @@ import org.apache.spark.sql.functions._
   * bit-identically to a model trained one-shot
   * (`LmStoreSpec`/the gate's shared oracle prove it).
   *
-  * Durability protocol inherited verbatim from the store family:
-  * pending marker brackets the three-table append, load/exists refuse
-  * a marked store, [[recoverIngest]] rolls a crashed batch out by its
-  * store-unique `ingest_seq`, zombie foreachBatch re-delivery is a
-  * manifest-guarded no-op, version stamps refuse newer layouts.
-  * SINGLE WRITER assumed.
+  * Appends, recovery and compaction follow [[graft.StoreCommit]]; the
+  * rollback identity is the per-row tag (`ingest_batch`, `ingest_seq`).
   *
   * Layout: `path/uni` (w, c, ingest_batch, ingest_seq), `path/bi`
   * (w1, w2, c, …), `path/tri` (w1, w2, w3, c, …),
@@ -45,8 +41,11 @@ object LmStore {
   final case class Loaded(uni: DataFrame, bi: DataFrame, tri: DataFrame,
       path: String)
 
+  private val Commit = graft.StoreCommit.Kind("LM store", ManifestFile,
+    PendingFile, "uni", "LmStore.recoverIngest", strict = true)
+
   private def manifest(ingests: Long, batchId: Option[Long],
-      compactedAt: Long = 0L): String =
+      compactedAt: Long): String =
     s"""{"version":1,"ingests":$ingests,"compacted_at":$compactedAt""" +
       batchId.map(id => s""","last_batch":$id""").getOrElse("") + "}"
 
@@ -58,39 +57,22 @@ object LmStore {
     * batches-since-compaction budget; the default matches compact's
     * default file fan-in (a compacted table is ~`files` files, so
     * letting ~that many batches stack keeps per-load file counts
-    * within 2× of freshly-compacted). Watermark parsing/stamping is
-    * the family-shared [[graft.StoreUtil.needsCompactFrom]] rule.
+    * within 2× of freshly-compacted).
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.requireManifest(spark, path, ManifestFile, "LM store"),
-      slack, s"LM manifest at $path")
-  }
-
-  private def refusePending(spark: SparkSession, path: String): Unit =
-    if (graft.StoreUtil.readMarker(spark, path, PendingFile).isDefined)
-      throw new IllegalStateException(
-        s"$path has an unfinished ingest ($PendingFile present) — run " +
-          "LmStore.recoverIngest(spark, path, dest) to roll it back")
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 
   /** Healthy-store probe with the family's broken-vs-absent rule. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.manifestedStoreExists(spark, path, "uni",
-      ManifestFile, "count rows",
-      "the first ingest crashed mid-write; delete the directory and " +
-        "re-ingest the batch")
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.StoreCommit.exists(spark, Commit, path)
 
   /** The aggregated count views: per-ingest rows group-sum back to one
     * count per n-gram — the read-side fold that lets appends stay
     * append-only. Shapes match [[LmOps]]' training outputs exactly.
     */
   def load(spark: SparkSession, path: String): Loaded = {
-    refusePending(spark, path)
-    graft.StoreUtil.requireManifest(spark, path, ManifestFile, "LM store")
+    graft.StoreCommit.manifest(spark, Commit, path)
     def agg(table: String, keys: Seq[String]): DataFrame =
       spark.read.parquet(s"$path/$table")
         .groupBy(keys.map(col): _*).agg(sum(col("c")).as("c"))
@@ -106,103 +88,49 @@ object LmStore {
     */
   def ingestBatch(spark: SparkSession, path: String, batch: DataFrame,
       textCol: String, batchId: Option[Long] = None): Unit = {
-    val present = exists(spark, path)
-    val prevLast =
-      if (present) SketchOps.lastBatchId(spark, path, ManifestFile) else None
-    if (present && batchId.isDefined && batchId == prevLast) return
-    // ONE manifest read serves ingests and the compaction watermark
-    val mf =
-      if (present) Some(graft.StoreUtil.requireManifest(spark, path,
-        ManifestFile, "LM store"))
-      else None
-    val ingests: Long = mf.map(graft.StoreUtil.manifestLong(_, "ingests",
-      s"LM manifest at $path")).getOrElse(0L)
-    val bid = batchId.getOrElse(-(ingests + 1L))
-    val seq = ingests + 1L
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId,
+      create = true).getOrElse(return)
+    val tag = pre.tag(batchId)
     // tokenize ONCE for the three aggregates (flatten — three
     // consumers); the count definitions are LmOps' own, so store-fed
     // and one-shot-trained models can never tokenize or count apart
     val toks = ClusterOps.flatten(LmOps.tokenFrame(batch, textCol))
-    def tagged(df: DataFrame): DataFrame =
-      df.withColumn("ingest_batch", lit(bid)).withColumn("ingest_seq", lit(seq))
-    val uni = tagged(LmOps.uniCountsOfTokens(toks))
-    val bi = tagged(LmOps.biCountsOfTokens(toks))
-    val tri = tagged(LmOps.triCountsOfTokens(toks))
-    val compactedAt = mf.map(graft.StoreUtil.compactedAtOf).getOrElse(0L)
-    graft.StoreUtil.writeMarker(spark, path, PendingFile, s"$bid:$ingests")
-    val mode = if (present) "append" else "overwrite"
-    uni.write.mode(mode).parquet(s"$path/uni")
-    bi.write.mode(mode).parquet(s"$path/bi")
-    tri.write.mode(mode).parquet(s"$path/tri")
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-      manifest(ingests + 1L, batchId.orElse(prevLast), compactedAt))
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
+    val mode = if (pre.mf.isDefined) "append" else "overwrite"
+    def write(t: String, df: DataFrame): (String, () => Unit) =
+      t -> (() => tag(df).write.mode(mode).parquet(s"$path/$t"))
+    graft.StoreCommit.append(spark, Commit, path, tag.marker, Seq(
+      write("uni", LmOps.uniCountsOfTokens(toks)),
+      write("bi", LmOps.biCountsOfTokens(toks)),
+      write("tri", LmOps.triCountsOfTokens(toks))),
+      manifest(pre.ingests + 1L, pre.nextLast(batchId), pre.compactedAt))
   }
 
-  /** Roll an interrupted ingest back out into a clean store at `dest` —
-    * marker format, completion witness, and seq identity as documented
-    * at [[LshStore.recoverIngest]] (all three tables cleaned by the
-    * same rule).
+  /** Roll an interrupted ingest back out into a clean store at `dest`
+    * ([[graft.StoreCommit.recoverTagged]]; all three tables cleaned by
+    * the same rule).
     */
-  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit = {
-    val pending = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted ingest recorded at $path")).trim
-    val Array(badStr, startStr) = pending.split(":", 2)
-    val m = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-      .getOrElse(throw new IllegalStateException(
-        s"$path's first ingest crashed (no pre-batch manifest survives)" +
-          " — delete the directory and re-ingest the batch"))
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "recover")
-    val completed = graft.StoreUtil.manifestLong(m, "ingests",
-      s"LM manifest at $path") != startStr.toLong
-    val badSeq = startStr.toLong + 1L
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    Tables.foreach { t =>
-      // a crash may have landed BETWEEN table writes, so a table dir can
-      // be absent entirely on a first-batch crash — but first-batch
-      // crashes are refused above (no manifest); with a manifest every
-      // table has its pre-batch rows
-      val rows = spark.read.parquet(s"$path/$t")
-      val cleaned =
-        if (completed) rows
-        else rows.filter(coalesce(col("ingest_seq") =!= badSeq,
-          col("ingest_batch") =!= badStr.toLong))
-      cleaned.write.mode("overwrite").parquet(s"$dest/$t")
-    }
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile, m)
-  }
+  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.recoverTagged(spark, Commit, path, dest, Tables)
 
   /** Rewrite an ingest-grown store at `dest`, MERGING per-n-gram rows —
     * counts sum, so a store that folded k batches goes back to one row
     * per n-gram (merged rows carry tag −1/seq 0, the [[DupStore]]
     * convention: compaction of a healthy store has no live rollback
-    * identity; the manifest's ingest count and zombie guard carry
-    * over, and `compacted_at` advances to the current ingest count so
-    * [[needsCompact]] goes false until another `slack` batches fold).
+    * identity).
     */
   def compact(spark: SparkSession, path: String, dest: String,
       files: Int = 8): Unit = {
-    refusePending(spark, path)
     require(files >= 1, s"files must be >= 1, got $files")
-    val m = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "LM store")
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "compact")
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    def merge(t: String, keys: Seq[String]): Unit =
-      spark.read.parquet(s"$path/$t")
+    def merge(t: String, keys: Seq[String]): (String, () => Unit) =
+      t -> (() => spark.read.parquet(s"$path/$t")
         .groupBy(keys.map(col): _*).agg(sum(col("c")).as("c"))
         .select(keys.map(col) :+ col("c") :+
           lit(-1L).as("ingest_batch") :+ lit(0L).as("ingest_seq"): _*)
         .repartition(files)
-        .write.mode("overwrite").parquet(s"$dest/$t")
-    merge("uni", Seq("w"))
-    merge("bi", Seq("w1", "w2"))
-    merge("tri", Seq("w1", "w2", "w3"))
-    val ingests = graft.StoreUtil.manifestLong(m, "ingests",
-      s"LM manifest at $path")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      manifest(ingests, SketchOps.lastBatchId(spark, path, ManifestFile),
-        compactedAt = ingests))
+        .write.mode("overwrite").parquet(s"$dest/$t"))
+    graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
+      Seq(merge("uni", Seq("w")), merge("bi", Seq("w1", "w2")),
+        merge("tri", Seq("w1", "w2", "w3")))
+    }
   }
 }

@@ -27,14 +27,8 @@ import org.apache.spark.sql.functions._
   * shares `dd_minhash_lsh`'s DuckDB oracle; `LshStoreSpec` proves
   * fold==one-shot on adversarial splits).
   *
-  * Same durability contract as the sibling stores ([[VectorStore]],
-  * [[SketchOps]] CM/KMV): a pending marker brackets the two appends, and
-  * load/exists refuse a store whose marker is still present — a crash
-  * mid-ingest fails fast at the next open instead of serving a
-  * half-appended index, and [[recoverIngest]] rolls the partial batch
-  * back out using the per-row `ingest_batch` tag. Zombie re-delivery of
-  * a completed foreachBatch batch is a manifest-guarded no-op. SINGLE
-  * WRITER assumed, like every manifested store here.
+  * Appends, recovery and compaction follow [[graft.StoreCommit]]; the
+  * rollback identity is the per-row tag (`ingest_batch`, `ingest_seq`).
   *
   * Layout: `path/bands` (band, band_key, id, ingest_batch),
   * `path/pairs` (a, b, ingest_batch), `path/_graft_lshstore.json`.
@@ -71,52 +65,30 @@ object LshStore {
       .select(col("id"), col("band"), col("band_key"))
   }
 
-  /** `ingests` counts completed ingest calls — it supplies a distinct
-    * default row tag per batch when the caller passes no batchId (two
-    * manual ingests sharing one tag would make [[recoverIngest]] roll
-    * them both out). `last_batch` is recorded only for EXPLICIT batchIds:
-    * a counter default written there would collide with a genuine
-    * foreachBatch batch 0 and wrongly no-op it (the VectorStore batch-0
-    * lesson: absent ≠ Some(0)).
+  private val Commit = graft.StoreCommit.Kind("LSH band store", ManifestFile,
+    PendingFile, "bands", "LshStore.recoverIngest", strict = true)
+
+  /** `last_batch` is recorded only for EXPLICIT batchIds: a counter
+    * default written there would collide with a genuine foreachBatch
+    * batch 0 and wrongly no-op it (absent ≠ Some(0)).
     */
   private def manifest(k: Int, bands: Int, ingests: Long,
-      batchId: Option[Long], compactedAt: Long = 0L): String =
+      batchId: Option[Long], compactedAt: Long): String =
     s"""{"version":1,"k":$k,"bands":$bands,"ingests":$ingests""" +
       s""","compacted_at":$compactedAt""" +
       batchId.map(id => s""","last_batch":$id""").getOrElse("") + "}"
 
-  /** Fail on a store whose pending marker is still present: an ingest is
-    * either in flight (single-writer violated) or crashed mid-append, and
-    * both pair log and index may hold a partial batch.
+  /** Whether a healthy index exists at `path` (the
+    * [[graft.StoreCommit.exists]] broken-vs-absent rule).
     */
-  private def refusePending(spark: SparkSession, path: String): Unit =
-    if (graft.StoreUtil.readMarker(spark, path, PendingFile).isDefined)
-      throw new IllegalStateException(
-        s"$path has an unfinished ingest ($PendingFile present) — run " +
-          "LshStore.recoverIngest(spark, path, dest) to roll it back")
-
-  /** Whether a healthy index exists at `path`. A store with a pending
-    * marker, or with band rows but no manifest, is BROKEN (crash
-    * mid-ingest), not absent — refused here so a maintenance loop's
-    * "create on first batch" branch cannot silently reset the index and
-    * discard all history (the same ambiguity [[SketchOps.cmStoreExists]]
-    * refuses).
-    */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.manifestedStoreExists(spark, path, "bands",
-      ManifestFile, "band rows",
-      "the first ingest crashed mid-write; delete the directory and " +
-        "re-ingest the batch")
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.StoreCommit.exists(spark, Commit, path)
 
   /** Open a persisted index; fails fast on a directory that is not one,
     * or whose last ingest never finished.
     */
   def load(spark: SparkSession, path: String): Loaded = {
-    refusePending(spark, path)
-    val m = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "LSH band store")
+    val m = graft.StoreCommit.manifest(spark, Commit, path)
     def field(key: String): Int =
       graft.StoreUtil.manifestInt(m, key, s"LSH manifest at $path")
     Loaded(spark.read.parquet(s"$path/bands"), field("k"), field("bands"), path)
@@ -182,7 +154,7 @@ object LshStore {
     pairLogOk(spark, path).select(col("a"), col("b"), col("ingest_batch"))
 
   private def pairLogOk(spark: SparkSession, path: String): DataFrame = {
-    refusePending(spark, path)
+    graft.StoreCommit.refusePending(spark, Commit, path)
     spark.read.parquet(s"$path/pairs")
   }
 
@@ -194,16 +166,11 @@ object LshStore {
     * indexed — re-appending would duplicate band rows AND re-emit every
     * cross pair).
     *
-    * Write order is load-bearing twice over: (1) the pair append runs
-    * BEFORE the band append, and the candidate plan reads `bands/` — so
-    * the new pairs are computed against pre-batch history by
-    * construction, with no explicit materialization step (appending the
-    * batch's own band rows first would make the lazy cross join see the
-    * batch in "history" too); (2) the pending marker is written before
-    * the first append and cleared only after the manifest rewrite, so a
-    * crash anywhere between leaves a store every reader refuses, with
-    * the pre-batch manifest intact — [[recoverIngest]] reads k/bands and
-    * the pre-batch `last_batch` from it and rolls the tagged rows out.
+    * Write order is load-bearing: the pair append runs BEFORE the band
+    * append, and the candidate plan reads `bands/` — so the new pairs are
+    * computed against pre-batch history by construction, with no explicit
+    * materialization step (appending the batch's own band rows first
+    * would make the lazy cross join see the batch in "history" too).
     *
     * On append, `k`/`bands` are validated against the manifest — probing
     * or extending an index with different signature parameters is refused
@@ -212,28 +179,10 @@ object LshStore {
   def ingestBatch(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, k: Int = 8, bands: Int = 4,
       batchId: Option[Long] = None): Unit = {
-    val present = exists(spark, path)
-    val prevLastBatch =
-      if (present) SketchOps.lastBatchId(spark, path, ManifestFile) else None
-    if (present && batchId.isDefined && batchId == prevLastBatch) return
-    // ONE manifest read serves ingests and the compaction watermark
-    val mf =
-      if (present) Some(graft.StoreUtil.requireManifest(spark, path,
-        ManifestFile, "LSH band store"))
-      else None
-    val ingests: Long = mf.map(graft.StoreUtil.manifestLong(_, "ingests",
-      s"LSH manifest at $path")).getOrElse(0L)
-    // default row tag = NEGATIVE ingest counter, -(ingests+1): distinct
-    // per call AND disjoint from every explicit foreachBatch id (those
-    // are >= 0). With the old tag (= ingests) a manual catch-up ingest
-    // between stream batches could share a tag with the NEXT stream
-    // batch — the counters track in lockstep — and if that later batch
-    // crashed mid-append, recoverIngest's `ingest_batch != bad` filter
-    // would roll the COMPLETED manual batch's rows out with it
-    val bid = batchId.getOrElse(-(ingests + 1L))
-    val (kk, bb) = mf match {
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId,
+      create = true).getOrElse(return)
+    val (kk, bb) = pre.mf match {
       case Some(m) =>
-        // parse from the held manifest string — load() would re-read it
         val sk = graft.StoreUtil.manifestInt(m, "k",
           s"LSH manifest at $path")
         val sb = graft.StoreUtil.manifestInt(m, "bands",
@@ -250,147 +199,53 @@ object LshStore {
     // three times per micro-batch
     val b = ClusterOps.flatten(bandRows(batch, idCol, textCol, kk, bb))
     val newPairs =
-      if (present)
+      if (pre.mf.isDefined)
         candidatesFromBands(spark.read.parquet(s"$path/bands"), b)
       else selfPairs(b).distinct()
-    graft.StoreUtil.writeMarker(spark, path, PendingFile,
-      s"$bid:$ingests")
-    val mode = if (present) "append" else "overwrite"
-    // ingest_seq = ingests+1 is the ROLLBACK identity: store-unique by
-    // construction, where ingest_batch (the caller's foreachBatch id,
-    // kept for pair-log observability) can alias across stream
-    // generations — a fresh checkpoint re-starts at batch 0, and a
-    // crash of that ingest must not roll an OLDER batch-0's rows out
-    val seq = ingests + 1L
-    newPairs.withColumn("ingest_batch", lit(bid))
-      .withColumn("ingest_seq", lit(seq))
-      .write.mode(mode).parquet(s"$path/pairs")
-    b.withColumn("ingest_batch", lit(bid))
-      .withColumn("ingest_seq", lit(seq))
-      .write.mode(mode).parquet(s"$path/bands")
-    // an ingest WITHOUT a batchId must not erase a previous explicit
-    // last_batch: a manual catch-up ingest between a streaming crash and
-    // its restart would otherwise disarm the zombie guard and let the
-    // redelivered batch ingest twice
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-      manifest(kk, bb, ingests + 1L, batchId.orElse(prevLastBatch),
-        mf.map(graft.StoreUtil.compactedAtOf).getOrElse(0L)))
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
+    val tag = pre.tag(batchId)
+    val mode = if (pre.mf.isDefined) "append" else "overwrite"
+    graft.StoreCommit.append(spark, Commit, path, tag.marker, Seq(
+      "pairs" -> (() => tag(newPairs).write.mode(mode).parquet(s"$path/pairs")),
+      "bands" -> (() => tag(b).write.mode(mode).parquet(s"$path/bands"))),
+      manifest(kk, bb, pre.ingests + 1L, pre.nextLast(batchId),
+        pre.compactedAt))
   }
 
-  /** Roll an interrupted ingest back out: rebuild the store at `dest`
-    * (disjoint from `path` — the source is read lazily while the
-    * destination is written) without the pending batch's band rows or
-    * pairs. The manifest survives every crash window because ingest
-    * rewrites it only after both appends — and it is copied to `dest`
-    * VERBATIM, which is correct in both windows: a crash before the
-    * manifest rewrite leaves the pre-batch manifest (matching the
-    * cleaned tables), and a crash after it (only the marker delete was
-    * lost) means the ingest COMPLETED — detected by the manifest's
-    * `ingests` counter having moved past the pending marker's start
-    * snapshot, a witness that works for default-tag ingests too — so
-    * nothing is filtered and the post-batch manifest
-    * matches. A crash during the very first ingest (no manifest yet) is
-    * unrecoverable-by-rollback: nothing pre-batch exists, so delete the
+  /** Roll an interrupted ingest back out into a clean store at `dest`
+    * ([[graft.StoreCommit.recoverTagged]]). A crash during the very first
+    * ingest (no manifest yet) is unrecoverable by rollback: delete the
     * directory and re-ingest.
     */
-  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit = {
-    val pending = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted ingest recorded at $path")).trim
-    // marker format "bid:ingestsAtStart" — the counter snapshot is the
-    // completion witness that works for DEFAULT-tag ingests too, where
-    // last_batch never records the bid: the manifest rewrite always
-    // bumps `ingests`, so an unchanged counter means the crash happened
-    // before the rewrite (roll the batch out) and a bumped one means
-    // the ingest completed and only the marker delete was lost (keep
-    // everything)
-    val Array(badStr, startStr) = pending.split(":", 2)
-    val bad = badStr.toLong
-    val m = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-      .getOrElse(throw new IllegalStateException(
-        s"$path's first ingest crashed (no pre-batch manifest survives) — " +
-          "delete the directory and re-ingest the batch"))
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "recover")
-    val completed = graft.StoreUtil.manifestLong(m, "ingests",
-      s"LSH manifest at $path").toLong != startStr.toLong
-    // prefer the store-unique ingest_seq (= startSnapshot+1 for the
-    // crashed ingest) over the batch tag: an explicit batchId can alias
-    // an OLDER ingest's tag (fresh-checkpoint streams restart at 0), and
-    // tag-filtering would roll that completed ingest's rows out too.
-    // seq-less rows (written by a pre-seq version) fall back to the tag.
-    val badSeq = startStr.toLong + 1L
-    def clean(table: String): DataFrame = {
-      // mergeSchema: a store created by a pre-seq build and ingested
-      // into since holds MIXED file schemas — without the union schema,
-      // whether ingest_seq (the alias-safe rollback identity) is even
-      // visible depends on which footer Spark samples, making the
-      // rollback nondeterministically tag-based. Old rows surface with
-      // ingest_seq NULL, which the coalesce below already routes to the
-      // tag fallback (VectorStore.appendPq handles legacy the same way).
-      val t = spark.read.option("mergeSchema", "true")
-        .parquet(s"$path/$table")
-      if (completed) t
-      else if (t.columns.contains("ingest_seq"))
-        t.filter(coalesce(col("ingest_seq") =!= badSeq,
-          col("ingest_batch") =!= bad))
-      else t.filter(col("ingest_batch") =!= bad)
-    }
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    clean("pairs").write.mode("overwrite").parquet(s"$dest/pairs")
-    clean("bands").write.mode("overwrite").parquet(s"$dest/bands")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile, m)
-  }
+  def recoverIngest(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.recoverTagged(spark, Commit, path, dest,
+      Seq("pairs", "bands"))
 
   /** Rewrite an ingest-grown store into a fresh compact layout at
     * `dest` — the periodic maintenance step of the ingest-many-times
     * lifecycle (each [[ingestBatch]] adds a file set per table; reads
-    * stay correct but open more files until compaction). `dest` must be
-    * disjoint from `path` (the source is read lazily while the
-    * destination is written); the manifest's parameters, ingest counter,
-    * and the zombie guard's `last_batch` all survive, and the
-    * `compacted_at` watermark ADVANCES to the current ingest count
-    * (so [[needsCompact]] resets). Row content — including every
-    * `ingest_batch` tag — is unchanged. `files` is the per-table output file count (the
-    * source's read partitioning would otherwise leak through — tiny
+    * stay correct but open more files until compaction;
+    * [[graft.StoreCommit.compact]]). Row content — including every
+    * `ingest_batch` tag — is unchanged. `files` is the per-table output
+    * file count (the source's read partitioning would otherwise leak through — tiny
     * appended files each become a partition and re-emerge unmerged);
     * the default suits the kilobytes-per-million-docs scale of these
     * tables, pass more for a corpus where one band file is unwieldy.
     */
   def compact(spark: SparkSession, path: String, dest: String,
       files: Int = 1): Unit = {
-    refusePending(spark, path)
     require(files >= 1, s"files must be >= 1, got $files")
-    val m = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "LSH band store")
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "compact")
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    // mergeSchema for the same mixed-schema reason as recoverIngest —
-    // sampling a pre-seq footer here would silently DROP ingest_seq
-    // from every row of the compacted store
-    spark.read.option("mergeSchema", "true").parquet(s"$path/pairs")
-      .repartition(files)
-      .write.mode("overwrite").parquet(s"$dest/pairs")
-    spark.read.option("mergeSchema", "true").parquet(s"$path/bands")
-      .repartition(files)
-      .write.mode("overwrite").parquet(s"$dest/bands")
-    // advance the compaction watermark so needsCompact resets until
-    // `slack` more batches fold on top of the compacted store
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(m, graft.StoreUtil.manifestLong(m,
-        "ingests", s"LSH manifest at $path")))
+    graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
+      Seq("pairs", "bands").map(t => t -> (() =>
+        graft.StoreCommit.readTagged(spark, s"$path/$t").repartition(files)
+          .write.mode("overwrite").parquet(s"$dest/$t")))
+    }
   }
 
-  /** Maintenance nudge (the LM store's family-shared rule): each
+  /** Maintenance nudge: each
     * ingest stacks another file set into `pairs` and `bands`, so probe
     * cost grows with batches since compaction — trip after `slack`.
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    refusePending(spark, path)
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-        "LSH band store"),
-      slack, s"LSH manifest at $path")
-  }
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 }

@@ -28,13 +28,15 @@ object VectorStore {
 
   val ManifestFile = "_graft_vstore.json"
 
-  /** Crash bracket for [[appendPq]]: present while an append is in
-    * flight, carrying the batch tag, the append-counter snapshot, and
-    * the pre-batch manifest (the manifest delete is the reader fence,
-    * so rollback metadata must live here). [[recoverAppendPq]] consumes
-    * it.
+  /** Present while an [[appendPq]] is in flight: line 1 is the batch
+    * tag and the append-counter snapshot, the rest the pre-batch
+    * manifest. Saves, appends, recovery and compaction follow
+    * [[graft.StoreCommit]].
     */
   val PendingFile = "_graft_vstore.pending"
+
+  private val Commit = graft.StoreCommit.Kind("vector store", ManifestFile,
+    PendingFile, "cells", "VectorStore.recoverAppendPq", strict = false)
 
   /** A loaded store: `cells` is the partition-pruned corpus scan
     * (id, vec, cell), `centroids` the broadcast-sized routing table.
@@ -51,32 +53,27 @@ object VectorStore {
     */
   def save(corpus: DataFrame, centroids: DataFrame, path: String,
       batchId: Option[Long] = None): Unit = {
-    // manifest deleted first, rewritten last: the save is a multi-step
-    // overwrite (cells, then centroids), and a crash in between must
-    // leave a store that FAILS FAST at load — an old manifest surviving
-    // over a half-rewritten layout would route queries with mismatched
-    // centroids and silently return wrong neighbors
-    graft.StoreUtil.deleteMarker(corpus.sparkSession, path, ManifestFile)
     val assigned = VectorOps.assignCells(corpus, centroids, 1)
-    assigned
-      .select(col("id"), col("v").as("vec"),
-        concat(lit("c"), col("cell")).as("cell"))
-      // co-locate each cell before the partitioned write: without this,
-      // every write task emits a file into every cell directory
-      // (cells × tasks small files — measured 2k files at 1M×64 cells,
-      // file-open cost swamping the pruning win). One task per cell is
-      // right up to cells ≈ cluster parallelism; beyond-huge cells would
-      // add a secondary split key to the repartition.
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    centroids.select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
     // record the creating batchId (maintenance loops pass the foreachBatch
     // id here too): without it, a crash after save-batch-0 but before the
     // streaming checkpoint commits makes the redelivered batch 0 take the
     // append branch — lastBatchId None ≠ Some(0) — and batch-0's vectors
     // land TWICE; recording it makes the redelivery a guarded no-op
-    graft.StoreUtil.writeMarker(corpus.sparkSession, path, ManifestFile,
+    graft.StoreCommit.rewrite(corpus.sparkSession, Commit, path, Seq(
+      "cells" -> (() => assigned
+        .select(col("id"), col("v").as("vec"),
+          concat(lit("c"), col("cell")).as("cell"))
+        // co-locate each cell before the partitioned write: without this,
+        // every write task emits a file into every cell directory
+        // (cells × tasks small files — measured 2k files at 1M×64 cells,
+        // file-open cost swamping the pruning win). One task per cell is
+        // right up to cells ≈ cluster parallelism; beyond-huge cells would
+        // add a secondary split key to the repartition.
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")),
+      "centroids" -> (() => centroids
+        .select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
+        .write.mode("overwrite").parquet(s"$path/centroids"))),
       """{"version":1,"layout":"ivf-cell","ingests":1,"compacted_at":1""" +
         batchId.map(id => s""","last_batch":$id""").getOrElse("") + "}")
   }
@@ -92,60 +89,39 @@ object VectorStore {
     */
   def append(spark: SparkSession, path: String, corpus: DataFrame,
       batchId: Option[Long] = None): Unit = {
-    requireStore(spark, path)
-    // idempotence guard (same protocol as SketchOps.appendCm/appendKmv
-    // and SampleOps.appendMixStats): a restarted streaming maintainer
-    // re-delivers its last micro-batch, and re-appending vectors — unlike
-    // re-folding KMV states — genuinely duplicates corpus rows, skewing
-    // every top-k that touches the doubled cells
-    if (batchId.isDefined && batchId == graft.ops.SketchOps.lastBatchId(
-        spark, path, ManifestFile))
-      return
+    // idempotence guard: a restarted streaming maintainer re-delivers its
+    // last micro-batch, and re-appending vectors — unlike re-folding KMV
+    // states — genuinely duplicates corpus rows, skewing every top-k that
+    // touches the doubled cells
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId)
+      .getOrElse(return)
     // read ONLY the centroids: going through load() would pay partition
     // discovery over every cell directory for a table append never scans
     val centroids = spark.read.parquet(s"$path/centroids")
-    // a manual no-batchId append must not erase the recorded explicit
-    // last_batch (zombie guard — same rule as appendPq/LshStore)
-    val prevLast = graft.ops.SketchOps.lastBatchId(spark, path, ManifestFile)
-    val mf = graft.StoreUtil.readMarker(spark, path, ManifestFile).get
-    // the post-append manifest is FULLY RENDERED before the old one is
-    // deleted: a parse failure must strike while the store is still
-    // healthy, never between the delete and the rewrite (where it
-    // would strand a manifest-less store with the batch mixed in)
     val nextMf = """{"version":1,"layout":"ivf-cell"""" +
-      s""","ingests":${graft.StoreUtil.ingestsOf(mf) + 1L}""" +
-      s""","compacted_at":${graft.StoreUtil.compactedAtOf(mf)}""" +
-      batchId.orElse(prevLast).map(id => s""","last_batch":$id""")
+      s""","ingests":${pre.ingests + 1L}""" +
+      s""","compacted_at":${pre.compactedAt}""" +
+      pre.nextLast(batchId).map(id => s""","last_batch":$id""")
         .getOrElse("") + "}"
-    // bracket the append with the manifest (same crash protocol as save):
-    // a crash mid-append leaves committed task files beside the old data
-    // with no job-level rollback, so the store must refuse to load until
+    // untagged rows have no rollback identity, so a crash mid-append is
+    // fenced by the manifest alone: the store refuses to load until
     // rebuilt rather than silently serve a partial batch
-    graft.StoreUtil.deleteMarker(spark, path, ManifestFile)
-    VectorOps.assignCells(corpus, centroids, 1)
-      .select(col("id"), col("v").as("vec"),
-        concat(lit("c"), col("cell")).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile, nextMf)
+    graft.StoreCommit.rewrite(spark, Commit, path, Seq(
+      "cells" -> (() => VectorOps.assignCells(corpus, centroids, 1)
+        .select(col("id"), col("v").as("vec"),
+          concat(lit("c"), col("cell")).as("cell"))
+        .repartition(col("cell"))
+        .write.mode("append").partitionBy("cell").parquet(s"$path/cells"))),
+      nextMf)
   }
 
   /** Whether a maintenance pass is due — each [[append]] adds a file
     * per touched cell directory, so probes open O(appends) files per
-    * cell until [[compact]]; same family-shared watermark rule
-    * ([[graft.StoreUtil.needsCompactFrom]]) over the cell layout's
-    * ingest counter.
+    * cell until [[compact]].
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    requireStore(spark, path)
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.readMarker(spark, path, ManifestFile).get,
-      slack, s"vector store at $path", strict = false)
-  }
-
-  // lenient pre-counter read — the StoreUtil.ingestsOf rationale
-  private def ingestsOf(mf: String): Long = graft.StoreUtil.ingestsOf(mf)
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 
   /** Rewrite an append-grown store into a fresh one-file-per-cell layout
     * at `dest` — the periodic maintenance step of the append-many-times
@@ -153,49 +129,29 @@ object VectorStore {
     * stay correct but open more files until compaction). The stored
     * centroids are inherited verbatim — compaction is a LAYOUT rewrite,
     * vectors keep their cells; re-clustering is a retrain + [[save]].
-    * `dest` must be disjoint from `path` (the source is read lazily
-    * while the destination is written); both are compared as
-    * fully-qualified Hadoop URIs so `file:` forms and bare paths cannot
-    * alias. A mid-compact crash leaves `dest` manifest-less, so loads
-    * there fail fast (same protocol as [[save]]); the source is
-    * read-only throughout.
     */
-  def compact(spark: SparkSession, path: String, dest: String): Unit = {
-    requireStore(spark, path)
-    requireDisjoint(spark, path, dest)
-    val mf = graft.StoreUtil.readMarker(spark, path, ManifestFile).get
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    // cells are already assigned — repartition on the partition value
-    // re-coalesces each cell's accumulated files into one task's output.
-    // ALL columns are carried: a column-pruning select here silently
-    // DESTROYED a PQ store (codes and ingest tags dropped, so the
-    // compacted generation declared layout ivf-pq but could not serve
-    // ADC and had no rollback identity) — layout-agnostic rewrite, one
-    // definition for both families
-    spark.read.parquet(s"$path/cells")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")
-    spark.read.parquet(s"$path/centroids")
-      .write.mode("overwrite").parquet(s"$dest/centroids")
-    // the PQ layout's codebook travels with the store (queries MUST
-    // build their LUTs against the exact codebook the codes were
-    // assigned with) — a compact that dropped it stranded the new
-    // generation unloadable while rotation retired the old one
-    if (graft.StoreUtil.pathExists(spark, path, "codebook"))
-      spark.read.parquet(s"$path/codebook")
-        .write.mode("overwrite").parquet(s"$dest/codebook")
-    // manifest carried over — the ingest counter and CRUCIALLY the
-    // last_batch zombie guard (a fresh manifest here would let a
-    // redelivered micro-batch double-append after a compaction) — with
-    // the watermark advanced so needsCompact resets
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(mf, ingestsOf(mf)))
-  }
-
-  private def requireDisjoint(spark: SparkSession, path: String,
-      dest: String): Unit = {
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "compaction")
-  }
+  def compact(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
+      // cells are already assigned — repartition on the partition value
+      // re-coalesces each cell's accumulated files into one task's
+      // output. ALL columns are carried: a column-pruning select here
+      // silently DESTROYED a PQ store (codes and ingest tags dropped, so
+      // the compacted generation declared layout ivf-pq but could not
+      // serve ADC and had no rollback identity) — layout-agnostic
+      // rewrite, one definition for both families
+      Seq("cells" -> (() => spark.read.parquet(s"$path/cells")
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$dest/cells")),
+        "centroids" -> (() => spark.read.parquet(s"$path/centroids")
+          .write.mode("overwrite").parquet(s"$dest/centroids"))) ++
+        // the PQ layout's codebook travels with the store (queries MUST
+        // build their LUTs against the exact codebook the codes were
+        // assigned with)
+        (if (!graft.StoreUtil.pathExists(spark, path, "codebook")) Nil
+         else Seq("codebook" -> (() => spark.read.parquet(s"$path/codebook")
+           .write.mode("overwrite").parquet(s"$dest/codebook"))))
+    }
 
   /** Retrain the serving centroids on the store's CURRENT corpus and
     * write the result as a fresh generation at `dest` — the ACTION the
@@ -222,13 +178,10 @@ object VectorStore {
     */
   def retrain(spark: SparkSession, path: String, dest: String,
       iters: Int): Unit = {
-    requireStore(spark, path)
-    requireDisjoint(spark, path, dest)
-    val mf = graft.StoreUtil.readMarker(spark, path, ManifestFile).get
+    val mf = graft.StoreCommit.compactFrom(spark, Commit, path, dest)
     require(!mf.contains(""""layout":"ivf-pq""""),
       s"$path is an IVF+PQ store — retrainPq refines its codebook " +
         "(the cell table is retrained separately if its own drift says so)")
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
     val corpus = spark.read.parquet(s"$path/cells")
       .select(col("id"), col("vec"))
     // localCheckpoint: the trained table is read by the assignment pass
@@ -236,15 +189,16 @@ object VectorStore {
     // once per consumer
     val cents = VectorOps.kmeansCentroidsKept(corpus,
       spark.read.parquet(s"$path/centroids"), iters).localCheckpoint()
-    VectorOps.assignCells(corpus, cents, 1)
-      .select(col("id"), col("v").as("vec"),
-        concat(lit("c"), col("cell")).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")
-    cents.select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
-      .write.mode("overwrite").parquet(s"$dest/centroids")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(mf, ingestsOf(mf)))
+    graft.StoreCommit.rewrite(spark, Commit, dest, Seq(
+      "cells" -> (() => VectorOps.assignCells(corpus, cents, 1)
+        .select(col("id"), col("v").as("vec"),
+          concat(lit("c"), col("cell")).as("cell"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")),
+      "centroids" -> (() => cents
+        .select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
+        .write.mode("overwrite").parquet(s"$dest/centroids"))),
+      graft.StoreCommit.watermarked(Commit, mf))
   }
 
   /** Retrain a PQ store's CODEBOOK on its current corpus and write the
@@ -262,57 +216,45 @@ object VectorStore {
     */
   def retrainPq(spark: SparkSession, path: String, dest: String,
       iters: Int): Unit = {
-    requireDisjoint(spark, path, dest)
-    val mf = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-      .getOrElse(throw new IllegalStateException(
-        s"$path is not a vector store (no manifest)"))
+    val mf = graft.StoreCommit.compactFrom(spark, Commit, path, dest)
     val st = loadPq(spark, path)
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
     val cb = VectorOps.pqCodebookRefined(
       st.cells.select(col("id"), col("vec")), st.codebook, st.m, st.dim,
       iters).localCheckpoint()
-    st.cells
-      .withColumn("codes", VectorOps.pqCodesCol(col("vec"), cb, st.m,
-        st.dim))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")
-    st.centroids.write.mode("overwrite").parquet(s"$dest/centroids")
-    cb.write.mode("overwrite").parquet(s"$dest/codebook")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      graft.StoreUtil.withCompactedAt(mf, ingestsOf(mf)))
+    graft.StoreCommit.rewrite(spark, Commit, dest, Seq(
+      "cells" -> (() => st.cells
+        .withColumn("codes", VectorOps.pqCodesCol(col("vec"), cb, st.m,
+          st.dim))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")),
+      "centroids" -> (() =>
+        st.centroids.write.mode("overwrite").parquet(s"$dest/centroids")),
+      "codebook" -> (() =>
+        cb.write.mode("overwrite").parquet(s"$dest/codebook"))),
+      graft.StoreCommit.watermarked(Commit, mf))
   }
 
   /** Open a saved store. Fails fast on a directory that is not a vector
     * store (missing manifest) instead of misreading arbitrary parquet.
     */
   def load(spark: SparkSession, path: String): Loaded = {
-    requireStore(spark, path)
+    graft.StoreCommit.manifest(spark, Commit, path)
     Loaded(spark.read.parquet(s"$path/cells"),
       spark.read.parquet(s"$path/centroids"))
   }
 
-  private def requireStore(spark: SparkSession, path: String): Unit = {
-    graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "vector store")
-    ()
-  }
-
   /** Whether a healthy store (either layout — both share the manifest
     * file and cells directory) exists at `path` — the probe a
-    * maintenance loop's create-or-append branch MUST use, with the same
-    * discipline as [[SketchOps.cmStoreExists]]: cells without a
-    * manifest mean a save/append crashed mid-write, and that is BROKEN,
-    * not absent — a bare readMarker probe would take the save branch
-    * and `overwrite` the accumulated corpus with one micro-batch,
-    * silently resetting history (for a frontier store, every prior
-    * survivor could then re-enter as "novel").
+    * maintenance loop's create-or-append branch MUST use
+    * ([[graft.StoreCommit.exists]]): cells without a manifest mean a save
+    * or append crashed mid-write, and that is BROKEN, not absent — a
+    * bare readMarker probe would take the save branch and `overwrite`
+    * the accumulated corpus with one micro-batch, silently resetting
+    * history (for a frontier store, every prior survivor could then
+    * re-enter as "novel").
     */
   def storeExists(spark: SparkSession, path: String): Boolean =
-    graft.StoreUtil.manifestedStoreExists(spark, path, "cells",
-      ManifestFile, "cells",
-      "a save or append crashed mid-write; recover (recoverAppendPq " +
-        "for a pending PQ append) or rebuild from source rather than " +
-        "resetting history")
+    graft.StoreCommit.exists(spark, Commit, path)
 
   /** ANN top-k against the stored layout. The bounded query side is routed
     * to its `nprobe` best cells (broadcast centroids); the distinct probed
@@ -421,36 +363,32 @@ object VectorStore {
     */
   def savePq(corpus: DataFrame, centroids: DataFrame, codebook: DataFrame,
       path: String, m: Int, dim: Int, batchId: Option[Long] = None): Unit = {
-    val spark = corpus.sparkSession
-    graft.StoreUtil.deleteMarker(spark, path, ManifestFile)
     // codes ride the SAME projection as the cell assignment (quantizing
     // v — the float vector widened to double — floors to the identical
     // longs): a separate pqEncode joined back on id would shuffle the
     // whole corpus once more for no reason. Null vectors are dropped
     // (no codes, no cell), as the join formulation did implicitly.
     // every row carries its ingest tag from birth (creation tag: the
-    // creating batchId, or -1) so [[recoverAppendPq]] can roll a later
-    // partial append back by tag — the LshStore pair-log protocol
-    VectorOps.assignCells(corpus.filter(col("vec").isNotNull), centroids, 1)
+    // creating batchId, or -1; ingest_seq 0) so [[recoverAppendPq]] can
+    // roll a later partial append back
+    val rows = VectorOps.assignCells(corpus.filter(col("vec").isNotNull),
+        centroids, 1)
       .select(col("id"), col("v").as("vec"),
         VectorOps.pqCodesCol(col("v"), codebook, m, dim).as("codes"),
         lit(batchId.getOrElse(-1L)).as("ingest_batch"),
-        // ingest_seq 0 = creation; appends use the counter+1 — the
-        // store-unique rollback identity (an explicit batchId can alias
-        // the creation tag when a fresh-checkpoint stream restarts at
-        // the creating id, and rolling back by tag would then delete
-        // the original corpus with the crashed batch)
         lit(0L).as("ingest_seq"),
         concat(lit("c"), col("cell")).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    centroids.select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    codebook.write.mode("overwrite").parquet(s"$path/codebook")
     // the creating batchId is recorded for the same batch-0
     // crash-redelivery window the plain save closes: a replayed create
     // must take the no-op path, not append onto its own output
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
+    graft.StoreCommit.rewrite(corpus.sparkSession, Commit, path, Seq(
+      "cells" -> (() => rows.repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")),
+      "centroids" -> (() => centroids
+        .select(col("cid"), VectorOps.toDouble(col("cvec")).as("cvec"))
+        .write.mode("overwrite").parquet(s"$path/centroids")),
+      "codebook" -> (() =>
+        codebook.write.mode("overwrite").parquet(s"$path/codebook"))),
       pqManifest(m, dim, appends = 0L, batchId))
   }
 
@@ -479,112 +417,75 @@ object VectorStore {
     * the STORED centroids and encodes against the STORED codebook (both
     * invariants of the artifact — drifting either silently corrupts
     * every later ADC), then appends into the matching cell directories.
-    * Same batchId idempotence and manifest crash bracket as [[append]]:
-    * re-appending a redelivered micro-batch would duplicate rows and
-    * skew every top-k in the doubled cells.
+    * Same batchId idempotence as [[append]]: re-appending a redelivered
+    * micro-batch would duplicate rows and skew every top-k in the
+    * doubled cells.
     */
   def appendPq(spark: SparkSession, path: String, corpus: DataFrame,
       batchId: Option[Long] = None): Unit = {
+    val pre = graft.StoreCommit.pre(spark, Commit, path, batchId)
+      .getOrElse(return)
     val st = loadPq(spark, path)
-    if (batchId.isDefined && batchId == graft.ops.SketchOps.lastBatchId(
-        spark, path, ManifestFile))
-      return
-    val mfPre = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "vector store")
+    val mfPre = pre.mf.get
+    // the tag snapshot is the `appends` counter (= ingests - 1): the
+    // default tag −(ingests+1) stays clear of the creation tag −1
     val appends = appendsOf(mfPre)
-    // default tags are negative (disjoint from every explicit >= 0
-    // foreachBatch id — the LshStore collision lesson) and distinct per
-    // append via the counter
-    val bid = batchId.getOrElse(-(appends + 2L))
-    // crash bracket: the pending marker carries the tag, the counter
-    // snapshot, AND the pre-batch manifest — the manifest delete is the
-    // reader fence, so the rollback metadata must live elsewhere
-    graft.StoreUtil.writeMarker(spark, path, PendingFile,
-      s"$bid:$appends\n$mfPre")
-    graft.StoreUtil.deleteMarker(spark, path, ManifestFile)
-    val legacyUntagged = !st.cells.columns.contains("ingest_batch")
-    val legacySeqless = !st.cells.columns.contains("ingest_seq")
-    val assigned = VectorOps.assignCells(corpus.filter(col("vec").isNotNull),
-        st.centroids, 1)
+    val tag = graft.StoreCommit.Tag.next(batchId, appends + 1L, appends)
+    val assigned = tag(VectorOps.assignCells(
+        corpus.filter(col("vec").isNotNull), st.centroids, 1)
       .select(col("id"), col("v").as("vec"),
         VectorOps.pqCodesCol(col("v"), st.codebook, st.m, st.dim).as("codes"),
-        lit(bid).as("ingest_batch"),
-        lit(appends + 1L).as("ingest_seq"),
-        concat(lit("c"), col("cell")).as("cell"))
-    // a store written before tags existed keeps a uniform schema (mixed
-    // parquet schemas under one directory read back as whichever file
-    // is sampled first); it simply has no rollback path, as before —
-    // and a tag-only store likewise stays seq-less (rollback falls
-    // back to the tag, with the documented aliasing caveat)
-    (if (legacyUntagged) assigned.drop("ingest_batch", "ingest_seq")
-     else if (legacySeqless) assigned.drop("ingest_seq")
-     else assigned)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-    // a manual no-batchId append must not erase a previous explicit
-    // last_batch — the LshStore zombie-guard rule: a catch-up append
-    // between a streaming crash and its restart would otherwise let
-    // the redelivered batch append twice
-    val prevLast = graft.StoreUtil.lastBatchOf(mfPre)
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-      pqManifest(st.m, st.dim, appends + 1L, batchId.orElse(prevLast),
-        // the watermark survives the append-rewritten manifest — a
-        // reset here would re-arm needsCompact's clock from zero
-        graft.StoreUtil.compactedAtOf(mfPre)))
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
+        concat(lit("c"), col("cell")).as("cell")))
+    // a store written before tags existed keeps a uniform schema; it
+    // simply has no rollback path — and a tag-only store likewise stays
+    // seq-less (rollback falls back to the tag)
+    val rows =
+      if (!st.cells.columns.contains("ingest_batch"))
+        assigned.drop("ingest_batch", "ingest_seq")
+      else if (!st.cells.columns.contains("ingest_seq"))
+        assigned.drop("ingest_seq")
+      else assigned
+    // the marker carries the pre-batch manifest too, so recovery can
+    // restore it even when the manifest itself is gone
+    graft.StoreCommit.append(spark, Commit, path, s"${tag.marker}\n$mfPre",
+      Seq("cells" -> (() => rows.repartition(col("cell"))
+        .write.mode("append").partitionBy("cell").parquet(s"$path/cells"))),
+      pqManifest(st.m, st.dim, appends + 1L, pre.nextLast(batchId),
+        pre.compactedAt))
   }
 
-  /** Roll an interrupted [[appendPq]] back out into `dest` — the
-    * LshStore recovery protocol transplanted: the pending marker's
-    * counter snapshot is the completion witness (a bumped counter in a
-    * present manifest means only the marker delete was lost — keep
-    * everything; an absent manifest or unmoved counter means the append
-    * died — drop the tagged rows and restore the pre-batch manifest
-    * recorded in the marker). Centroids and codebook are append-
-    * invariant and copy verbatim.
+  /** Roll an interrupted [[appendPq]] back out into `dest`
+    * ([[graft.StoreCommit.recover]]; the completion witness is the
+    * `appends` counter). Centroids and codebook are append-invariant and
+    * copy verbatim.
     */
   def recoverAppendPq(spark: SparkSession, path: String,
       dest: String): Unit = {
-    val pending = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted appendPq recorded at $path"))
-    val Array(head, mfPre) = pending.split("\n", 2)
-    val Array(badStr, startStr) = head.trim.split(":", 2)
-    val bad = badStr.toLong
-    requireDisjoint(spark, path, dest)
-    val mfNow = graft.StoreUtil.readMarker(spark, path, ManifestFile)
-    val completed = mfNow.exists(appendsOf(_) != startStr.toLong)
-    val cells = spark.read.parquet(s"$path/cells")
-    require(cells.columns.contains("ingest_batch") || completed,
-      s"cells at $path carry no ingest tags (pre-tag store) — a partial " +
-        "append cannot be rolled back; rebuild from source")
-    // rollback identity: the store-unique ingest_seq (= counter
-    // snapshot + 1 for the crashed append) when rows carry it — the
-    // batch tag can alias the creation tag or an older append's tag
-    // across stream generations, and tag-filtering would delete those
-    // completed rows too. Seq-less rows fall back to the tag.
-    val badSeq = startStr.toLong + 1L
-    val kept =
-      if (completed) cells
-      else if (cells.columns.contains("ingest_seq"))
-        cells.filter(coalesce(col("ingest_seq") =!= badSeq,
-          col("ingest_batch") =!= bad))
-      else cells.filter(col("ingest_batch") =!= bad)
-    graft.StoreUtil.deleteMarker(spark, dest, ManifestFile)
-    kept.withColumn("cell", col("cell").cast("string"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/cells")
-    spark.read.parquet(s"$path/centroids")
-      .write.mode("overwrite").parquet(s"$dest/centroids")
-    spark.read.parquet(s"$path/codebook")
-      .write.mode("overwrite").parquet(s"$dest/codebook")
-    graft.StoreUtil.writeMarker(spark, dest, ManifestFile,
-      mfNow.getOrElse(mfPre))
+    def parse(raw: String) = raw.split("\n", 2) match {
+      case Array(head, mf) if mf.trim.startsWith("{") && mf.trim.endsWith("}") =>
+        graft.StoreCommit.Tag.parse(head)
+          .map(t => graft.StoreCommit.Pending(t, Some(t.snapshot), Some(mf)))
+      case _ => None
+    }
+    graft.StoreCommit.recover(spark, Commit, path, dest, appendsOf,
+      parse) { (tag, completed, _) =>
+      val cells = graft.StoreCommit.readTagged(spark, s"$path/cells")
+      require(cells.columns.contains("ingest_batch") || completed,
+        s"cells at $path carry no ingest tags (pre-tag store) — a partial " +
+          "append cannot be rolled back; rebuild from source")
+      Seq("cells" -> (() => (if (completed) cells else tag.keep(cells))
+          .withColumn("cell", col("cell").cast("string"))
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$dest/cells"))) ++
+        Seq("centroids", "codebook").map(t => t -> (() =>
+          spark.read.parquet(s"$path/$t")
+            .write.mode("overwrite").parquet(s"$dest/$t")))
+    }
   }
 
   def loadPq(spark: SparkSession, path: String): LoadedPq = {
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "vector store")
+    val mf = graft.StoreCommit.manifest(spark, Commit, path)
     require(mf.contains(""""layout":"ivf-pq""""),
       s"$path is not an IVF+PQ store (layout is not ivf-pq); " +
         "use VectorStore.load for plain IVF layouts")

@@ -2293,6 +2293,25 @@ object TrainingQueries {
     }
   }
 
+  /** Run independent driver-side chains on their own threads and wait
+    * for EVERY one before returning. The first failure is rethrown with
+    * the others added as suppressed, so no chain keeps submitting jobs
+    * into the next gate's run after its own gate has failed.
+    */
+  private[graft] def inParallel[A](thunks: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val done = thunks.map(t => Future(t()))
+      .map(f => Await.ready(f, Duration.Inf).value.get)
+    done.collect { case scala.util.Failure(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => done.map(_.get)
+    }
+  }
+
   /** REQUALIFY a tainted delivery — the action [[pipeTaint]]'s blast
     * radius feeds: the dup index that served delivery 0 was found to
     * be MISSING evidence (a contamination source discovered after the
@@ -2333,31 +2352,27 @@ object TrainingQueries {
     // (lrStoreDir, pipeStatsDir, bpeStoreDir) are computeIfAbsent
     // memos — a racing build blocks the loser until the winner's
     // artifact is ready, so concurrency cannot double-build.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val origF = scala.concurrent.Future {
-      // the delivered set, reproduced from the ledger through pins and
-      // the as-of dup state (stage 3 reads the recorded masses store)
-      pipeSampled(s,
-        pipeStagedFrame(s, d,
-          pipeReplayCleaned(s, s"$fix/ledger", 0L, batch,
-            lrStoreDir(s, d), s"$fix/dup")),
-        SampleOps.loadMixStats(s, pipeStatsDir(s, d)))
-        .select(col("doc_id"))
-    }
-    val requalF = scala.concurrent.Future {
-      // the corrected set against the current head, masses recomputed —
-      // stages 1+2 are the pipeline's own composition, not a hand-rolled
-      // copy, so a plumbing change there lands here too
-      val staged2 = pipeStagedFrame(s, d,
-        pipeCleanBatch(s, d, s"$fix/dup", batch))
-      SampleOps.tokenBudgetSample(staged2, "doc_id", "source",
-        col("n_tok_bpe"), pipeBudgetDf(s), "pp1")
-        .select(col("doc_id"))
-    }
-    import scala.concurrent.duration.Duration
-    requalDiff(scala.concurrent.Await.result(origF, Duration.Inf),
-      scala.concurrent.Await.result(requalF, Duration.Inf))
+    val Seq(orig, requal) = inParallel(
+      () =>
+        // the delivered set, reproduced from the ledger through pins and
+        // the as-of dup state (stage 3 reads the recorded masses store)
+        pipeSampled(s,
+          pipeStagedFrame(s, d,
+            pipeReplayCleaned(s, s"$fix/ledger", 0L, batch,
+              lrStoreDir(s, d), s"$fix/dup")),
+          SampleOps.loadMixStats(s, pipeStatsDir(s, d)))
+          .select(col("doc_id")),
+      () => {
+        // the corrected set against the current head, masses recomputed —
+        // stages 1+2 are the pipeline's own composition, not a hand-rolled
+        // copy, so a plumbing change there lands here too
+        val staged2 = pipeStagedFrame(s, d,
+          pipeCleanBatch(s, d, s"$fix/dup", batch))
+        SampleOps.tokenBudgetSample(staged2, "doc_id", "source",
+          col("n_tok_bpe"), pipeBudgetDf(s), "pp1")
+          .select(col("doc_id"))
+      })
+    requalDiff(orig, requal)
   }
 
   /** The two-way patch — ONE definition of the diff both
@@ -2788,21 +2803,16 @@ object TrainingQueries {
     // pipeRequalify §2.6 treatment; profiled serial: 25 strictly
     // sequential jobs with ~60% of gate wall spent in between-job
     // driver gaps)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val jacF = scala.concurrent.Future(ClusterOps.flatten(
-      TextOps.jaccardVerify(TextOps.allPairs(w, "doc_id"), w,
-        "doc_id", "text", 0.5).select(col("a"), col("b"))))
-    val lshF = scala.concurrent.Future(ClusterOps.flatten(
-      TextOps.jaccardVerify(
-        TextOps.minhashCandidates(w, "doc_id", "text"), w,
-        "doc_id", "text", 0.5).select(col("a"), col("b"))))
-    val winF = scala.concurrent.Future(ClusterOps.flatten(
-      ddWinnowPairs(s, d).select(col("a"), col("b"))))
-    import scala.concurrent.duration.Duration
-    val jac = scala.concurrent.Await.result(jacF, Duration.Inf)
-    val lsh = scala.concurrent.Await.result(lshF, Duration.Inf)
-    val win = scala.concurrent.Await.result(winF, Duration.Inf)
+    val Seq(jac, lsh, win) = inParallel(
+      () => ClusterOps.flatten(
+        TextOps.jaccardVerify(TextOps.allPairs(w, "doc_id"), w,
+          "doc_id", "text", 0.5).select(col("a"), col("b"))),
+      () => ClusterOps.flatten(
+        TextOps.jaccardVerify(
+          TextOps.minhashCandidates(w, "doc_id", "text"), w,
+          "doc_id", "text", 0.5).select(col("a"), col("b"))),
+      () => ClusterOps.flatten(
+        ddWinnowPairs(s, d).select(col("a"), col("b"))))
     val all = jac.unionByName(lsh).unionByName(win).distinct()
     all
       .join(jac.withColumn("by_jaccard", lit(true)), Seq("a", "b"),

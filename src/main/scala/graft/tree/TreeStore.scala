@@ -27,30 +27,36 @@ object TreeStore {
 
   val ManifestFile = "_graft_store.json"
 
-  /** Present only while a multi-table append is in flight: written (with
-    * the appending tree_ids) before the first table write, removed after
-    * the last. A crash mid-append leaves it behind, so the partial state
-    * is DETECTED ([[load]] refuses) instead of silently served, and
-    * [[recoverAppend]] can roll the partial tree back out.
+  /** Present only while a multi-table append is in flight, holding the
+    * appending tree_ids — the rollback identity [[recoverAppend]] filters
+    * out of every table. Saves, appends, recovery and compaction follow
+    * [[graft.StoreCommit]].
     */
   val PendingFile = "_graft_append_pending"
+
+  private val Commit = graft.StoreCommit.Kind("tree store", ManifestFile,
+    PendingFile, "nodes", "TreeStore.recoverAppend", strict = false)
 
   /** Write the serving tables. `buckets` must match the expected executor
     * parallelism order-of-magnitude at the deployment scale (32 here for
     * local[32]; a 1000-executor cluster would use ~2-4k).
     */
-  def save(t: TreeIngest.Ingested, path: String, buckets: Int = 32): Unit = {
+  def save(t: TreeIngest.Ingested, path: String, buckets: Int = 32): Unit =
+    graft.StoreCommit.rewrite(t.nodes.sparkSession, Commit, path,
+      tables(t, path, buckets), manifest(buckets))
+
+  private def tables(t: TreeIngest.Ingested, dir: String,
+      buckets: Int): graft.StoreCommit.Writes = {
     val spark = t.nodes.sparkSession
-    // a full rewrite supersedes any crashed append at this path: clear the
-    // pending marker so the rebuilt (internally consistent) store loads —
-    // otherwise the stale marker keeps refusing it, and following the
-    // error's recoverAppend advice would delete valid trees
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
-    writeBucketed(spark, t.nodes, s"$path/nodes", "node_id", buckets)
-    writeBucketed(spark, t.edges, s"$path/edges", "child_id", buckets)
-    t.treeMeta.write.mode("overwrite").parquet(s"$path/tree_meta")
-    t.sourceMap.write.mode("overwrite").parquet(s"$path/source_map")
-    writeManifest(spark, path, buckets)
+    Seq(
+      "nodes" -> (() =>
+        writeBucketed(spark, t.nodes, s"$dir/nodes", "node_id", buckets)),
+      "edges" -> (() =>
+        writeBucketed(spark, t.edges, s"$dir/edges", "child_id", buckets)),
+      "tree_meta" -> (() =>
+        t.treeMeta.write.mode("overwrite").parquet(s"$dir/tree_meta")),
+      "source_map" -> (() =>
+        t.sourceMap.write.mode("overwrite").parquet(s"$dir/source_map")))
   }
 
   /** Restore an [[TreeIngest.Ingested]] from a saved store. The nodes table
@@ -61,13 +67,7 @@ object TreeStore {
     */
   def load(spark: SparkSession, path: String,
       persistNodes: Boolean = true): TreeIngest.Ingested = {
-    graft.StoreUtil.readMarker(spark, path, PendingFile).foreach { ids =>
-      throw new IllegalStateException(
-        s"store at $path has an interrupted append (tree_ids: $ids) — " +
-          "its tables are mutually inconsistent; run TreeStore" +
-          ".recoverAppend(spark, path, dest) to rebuild a clean store")
-    }
-    val buckets = readManifest(spark, path)
+    val buckets = bucketsOf(graft.StoreCommit.manifest(spark, Commit, path))
     val nodes = loadBucketed(spark, s"$path/nodes", "node_id", buckets)
     val edges = loadBucketed(spark, s"$path/edges", "child_id", buckets)
     TreeIngest.Ingested(
@@ -110,7 +110,7 @@ object TreeStore {
     // fail BEFORE any work: a leftover pending marker (and a duplicate
     // tree_id) must refuse in milliseconds, not after the full parse +
     // labeling pass that ingestOffset below would run
-    requireNoPending(spark, path)
+    graft.StoreCommit.refusePending(spark, Commit, path)
     // The id set is read ONCE and threaded into appendCore — tree_meta
     // is a full-store listing at deployment scale, not a free re-read.
     val existingIds = storeTreeIds(spark, path)
@@ -130,71 +130,46 @@ object TreeStore {
     */
   def appendIngested(spark: SparkSession, path: String,
       t: TreeIngest.Ingested): Unit = {
-    requireNoPending(spark, path)
+    graft.StoreCommit.refusePending(spark, Commit, path)
     val (maxId, maxPost) = storeBounds(spark, path)
     appendCore(spark, path, t, maxId, maxPost, storeTreeIds(spark, path))
   }
 
-  /** A leftover marker means a PREVIOUS append died between table writes:
-    * appending more (and eventually deleting the marker) would bury that
-    * corruption as a silently-served store — refuse until recoverAppend
-    * has rolled it back (or a full save() has superseded the store).
-    */
-  private def requireNoPending(spark: SparkSession, path: String): Unit =
-    graft.StoreUtil.readMarker(spark, path, PendingFile).foreach { ids =>
-      throw new IllegalStateException(
-        s"store at $path has an interrupted append (tree_ids: $ids) — " +
-          "run TreeStore.recoverAppend before appending more")
-    }
-
   /** Roll back an append that died between table writes ([[PendingFile]]
     * left behind): every row of the pending tree_ids is filtered out of
     * all four tables — each carries `tree_id` — and the surviving store
-    * is rewritten clean at `dest` (same disjointness rule as [[compact]];
-    * the damaged source is read-only throughout, so recovery itself is
-    * crash-safe).
+    * is rewritten clean at `dest`. The marker records no counter
+    * snapshot, so an append whose manifest had landed is rolled out too.
     */
-  def recoverAppend(spark: SparkSession, path: String, dest: String): Unit = {
-    val bad = graft.StoreUtil.readMarker(spark, path, PendingFile)
-      .getOrElse(throw new IllegalStateException(
-        s"no interrupted append recorded at $path"))
-      .split(PendingSep).toSeq.filter(_.nonEmpty)
-    requireDisjoint(spark, path, dest)
-    val buckets = readManifest(spark, path)
-    def clean(table: String): DataFrame =
-      spark.read.parquet(s"$path/$table")
-        .filter(!col("tree_id").isin(bad: _*))
-    save(TreeIngest.Ingested(clean("nodes"), clean("edges"),
-      clean("tree_meta"), clean("source_map")), dest, buckets)
-  }
+  def recoverAppend(spark: SparkSession, path: String, dest: String): Unit =
+    graft.StoreCommit.recover(spark, Commit, path, dest,
+      graft.StoreUtil.ingestsOf, raw => {
+        val ids = raw.split(PendingSep.toString, -1).toSeq
+        if (raw.isEmpty || ids.exists(_.isEmpty)) None
+        else Some(graft.StoreCommit.Pending(ids, None))
+      }, mf => manifest(bucketsOf(mf))) { (bad, _, mf) =>
+      def clean(table: String): DataFrame =
+        spark.read.parquet(s"$path/$table")
+          .filter(!col("tree_id").isin(bad: _*))
+      tables(TreeIngest.Ingested(clean("nodes"), clean("edges"),
+        clean("tree_meta"), clean("source_map")), dest, bucketsOf(mf))
+    }
 
   /** Rewrite an append-grown store into a fresh single-file-per-bucket
     * layout at `dest` — the periodic maintenance step of the
     * append-many-times lifecycle (each [[appendTree]] adds one file per
     * bucket; reads stay correct but open more files until compaction).
-    * `dest` must be a location disjoint from `path` (the source is read
-    * lazily while the destination is written — an overlapping dest would
-    * overwrite files mid-scan); both are compared as fully-qualified
-    * Hadoop URIs, so `file:` forms and bare paths cannot alias. The
-    * bucket count defaults to the SOURCE's manifest — compaction is a
+    * The bucket count defaults to the SOURCE's manifest — compaction is a
     * layout rewrite, not a silent re-bucketing; pass `buckets` explicitly
     * to re-bucket.
     */
   def compact(spark: SparkSession, path: String, dest: String,
       buckets: Int = 0): Unit = {
-    requireDisjoint(spark, path, dest)
-    val b = if (buckets > 0) buckets else readManifest(spark, path)
-    save(load(spark, path, persistNodes = false), dest, b)
+    val mf = graft.StoreCommit.compactFrom(spark, Commit, path, dest)
+    val b = if (buckets > 0) buckets else bucketsOf(mf)
+    graft.StoreCommit.rewrite(spark, Commit, dest,
+      tables(load(spark, path, persistNodes = false), dest, b), manifest(b))
   }
-
-  /** Source and destination compared as fully-qualified Hadoop URIs, so
-    * `file:` forms and bare paths cannot alias (the source is read lazily
-    * while the destination is written — an overlap would overwrite files
-    * mid-scan).
-    */
-  private def requireDisjoint(spark: SparkSession, path: String,
-      dest: String): Unit =
-    graft.StoreUtil.requireDisjoint(spark, path, dest, "rewrite")
 
   private def storeTreeIds(spark: SparkSession, path: String): Set[String] =
     spark.read.parquet(s"$path/tree_meta")
@@ -217,8 +192,8 @@ object TreeStore {
   private def appendCore(spark: SparkSession, path: String,
       t: TreeIngest.Ingested, maxId: Long, maxPost: Long,
       existingIds: Set[String]): Unit = {
-    requireNoPending(spark, path) // defense in depth (public paths check early)
-    val buckets = readManifest(spark, path)
+    val pre = graft.StoreCommit.pre(spark, Commit, path, None).get
+    val buckets = bucketsOf(pre.mf.get)
     val newMin = t.nodes
       .agg(org.apache.spark.sql.functions.min("node_id")).head().getLong(0)
     require(newMin > maxId,
@@ -238,50 +213,30 @@ object TreeStore {
     val nodes = t.nodes
       .withColumn("pre", col("pre") + labelShift)
       .withColumn("post", col("post") + labelShift)
-    // four sequential table writes are not atomic: the pending marker
-    // brackets them, so a crash in between is detected at load (and
-    // rolled back by recoverAppend) instead of serving a store whose
-    // nodes/edges/tree_meta disagree about which trees exist
     require(newIds.forall(!_.contains(PendingSep)),
       s"tree_id may not contain U+001F (reserved as the marker delimiter)")
-    graft.StoreUtil.writeMarker(spark, path, PendingFile,
-      newIds.toSeq.sorted.mkString(PendingSep.toString))
-    appendBucketed(spark, nodes, s"$path/nodes", "node_id", buckets)
-    appendBucketed(spark, t.edges, s"$path/edges", "child_id", buckets)
-    t.treeMeta.write.mode("append").parquet(s"$path/tree_meta")
-    t.sourceMap.write.mode("append").parquet(s"$path/source_map")
-    // bump the ingest counter BEFORE lifting the pending fence: a crash
-    // between the two leaves the store refusing (recoverable), never a
-    // counter that silently under-reports the stacked file sets
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "tree store")
-    writeManifest(spark, path, buckets, graft.StoreUtil.ingestsOf(mf) + 1L,
-      graft.StoreUtil.compactedAtOf(mf))
-    graft.StoreUtil.deleteMarker(spark, path, PendingFile)
+    graft.StoreCommit.append(spark, Commit, path,
+      newIds.toSeq.sorted.mkString(PendingSep.toString), Seq(
+        "nodes" -> (() =>
+          appendBucketed(spark, nodes, s"$path/nodes", "node_id", buckets)),
+        "edges" -> (() =>
+          appendBucketed(spark, t.edges, s"$path/edges", "child_id", buckets)),
+        "tree_meta" -> (() =>
+          t.treeMeta.write.mode("append").parquet(s"$path/tree_meta")),
+        "source_map" -> (() =>
+          t.sourceMap.write.mode("append").parquet(s"$path/source_map"))),
+      manifest(buckets, pre.ingests + 1L, pre.compactedAt))
   }
 
   /** Whether a maintenance pass is due — each [[appendTree]] stacks
     * another file set into every bucket of both big tables, so after k
-    * appends every serving join opens O(k) files per bucket; the same
-    * family-shared watermark rule as the fold stores
-    * ([[graft.StoreUtil.needsCompactFrom]]). [[save]] (and so
-    * [[compact]]/[[recoverAppend]], which rewrite through it) resets
-    * the counter to a fresh single-file-per-bucket layout.
+    * appends every serving join opens O(k) files per bucket. [[save]] (and so
+    * [[compact]]/[[recoverAppend]], which rewrite through the same
+    * tables) resets the counter to a fresh single-file-per-bucket layout.
     */
   def needsCompact(spark: SparkSession, path: String,
-      slack: Int = 8): Boolean = {
-    graft.StoreUtil.readMarker(spark, path, PendingFile).foreach { ids =>
-      throw new IllegalStateException(
-        s"store at $path has an interrupted append (tree_ids: $ids) — " +
-          "run TreeStore.recoverAppend before probing maintenance")
-    }
-    graft.StoreUtil.needsCompactFrom(
-      graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-        "tree store"),
-      slack, s"tree store at $path", strict = false)
-  }
-
-
+      slack: Int = 8): Boolean =
+    graft.StoreCommit.needsCompact(spark, Commit, path, slack)
 
   /** `bucketBy` requires a catalog write, so route through a throwaway
     * external-table name and drop it after — the files (with Spark's bucket
@@ -349,18 +304,14 @@ object TreeStore {
   /** A full [[save]] is one compact layout: the counter restarts at 1
     * with the watermark on it.
     */
-  private def writeManifest(spark: SparkSession, path: String, buckets: Int,
-      ingests: Long = 1L, compactedAt: Long = 1L): Unit =
-    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
-      s"""{"version":1,"buckets":$buckets,"ingests":$ingests,""" +
-        s""""compacted_at":$compactedAt}""")
+  private def manifest(buckets: Int, ingests: Long = 1L,
+      compactedAt: Long = 1L): String =
+    s"""{"version":1,"buckets":$buckets,"ingests":$ingests,""" +
+      s""""compacted_at":$compactedAt}"""
 
-  private def readManifest(spark: SparkSession, path: String): Int = {
-    val mf = graft.StoreUtil.requireManifest(spark, path, ManifestFile,
-      "tree store")
+  private def bucketsOf(mf: String): Int =
     "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(mf)
       .map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(
-        s"$path is not a tree store (no bucket count in $ManifestFile)"))
-  }
+        s"not a tree store (no bucket count in $ManifestFile)"))
 }

@@ -1467,4 +1467,20 @@ class TrainingSpec extends AnyFunSuite {
         "batched", "xyz", "aggregate", "orderline"))
       assert(toks(w) == refBpe(w), s"word $w")
   }
+
+  test("inParallel waits for every chain and rethrows the first failure, " +
+      "the others suppressed") {
+    val sibling = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = new IllegalStateException("gate failed")
+    val e = intercept[IllegalStateException] {
+      TrainingQueries.inParallel(
+        () => throw boom,
+        () => { Thread.sleep(300); sibling.set(true) },
+        () => throw new IllegalArgumentException("second failure"))
+    }
+    assert(e eq boom)
+    assert(sibling.get, "returned while a sibling chain was still running")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second failure"))
+    assert(TrainingQueries.inParallel(() => 1, () => 2) == Seq(1, 2))
+  }
 }
