@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single-sourced SparkSession factory. Every graft entrypoint (Verify,
-  * Bench, the scale probes, the test suites) builds through here so the
+  * Bench, Explain, the test suites) builds through here so the
   * determinism-critical invariants — UTC session timezone and the
   * nanosAsLong parquet read mode, both load-bearing for the cross-engine
   * DuckDB hash compare — live in exactly one place and cannot silently

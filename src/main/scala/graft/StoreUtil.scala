@@ -77,33 +77,28 @@ object StoreUtil {
       s"$what requires a destination disjoint from the source ($s vs $d)")
   }
 
+  /** Write a marker file atomically: the content lands in full in a
+    * dot-prefixed swap sibling, which is then renamed into place. A crash
+    * mid-write leaves only the swap file (overwritten by the next write)
+    * — never an empty or truncated marker, which every recover would
+    * refuse, and never a half-written manifest. Where rename cannot
+    * replace an existing file (HDFS), the old marker is deleted first: a
+    * crash in that window leaves the marker absent with the complete new
+    * content in the swap sibling, which [[manifestedStoreExists]]
+    * reports.
+    */
   def writeMarker(spark: SparkSession, dir: String, name: String,
       content: String): Unit = {
     val fs = fsOf(spark, dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
+    val swap = new org.apache.hadoop.fs.Path(dir, s".swap_$name")
+    val live = new org.apache.hadoop.fs.Path(dir, name)
+    val out = fs.create(swap, true)
     try out.write(content.getBytes("UTF-8"))
     finally out.close()
-  }
-
-  /** Replace a marker file through a swap-file rename — the manifest
-    * COMMIT for stores whose manifest content is load-bearing state
-    * (the provenance ledger's parts list): the new content lands fully
-    * in a dot-prefixed sibling, the old marker is deleted, the sibling
-    * renamed into place. A crash before the delete leaves the old
-    * marker intact (store healthy); between delete and rename, the
-    * marker is ABSENT (broken-refuse, both old data and the complete
-    * new marker still on disk) — an in-place overwrite could instead
-    * strand a TRUNCATED marker that parses as garbage.
-    */
-  def replaceMarker(spark: SparkSession, dir: String, name: String,
-      content: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val swap = new org.apache.hadoop.fs.Path(dir, s".swap_$name")
-    writeMarker(spark, dir, s".swap_$name", content)
-    deleteMarker(spark, dir, name)
-    if (!fs.rename(swap, new org.apache.hadoop.fs.Path(dir, name)))
+    if (!fs.rename(swap, live) &&
+        !(fs.delete(live, false) && fs.rename(swap, live)))
       throw new IllegalStateException(
-        s"replaceMarker: could not swap $swap into place as $name")
+        s"writeMarker: could not swap $swap into place as $name")
   }
 
   /** Remove a marker file (no-op when absent). */
@@ -217,7 +212,7 @@ object StoreUtil {
     * would let a maintenance loop silently reset history); neither →
     * absent. The swap probes are load-bearing, not belt-and-braces:
     * [[saveManifested]]'s delete-live-then-rename window (and
-    * [[replaceMarker]]'s delete-then-rename window) leave the LIVE
+    * [[writeMarker]]'s delete-then-rename fallback) leave the LIVE
     * subdir or marker absent while the complete replacement sits in the
     * dot-prefixed swap sibling — without probing it, that crash would
     * read as ABSENT and a restarted create-or-append loop would reset

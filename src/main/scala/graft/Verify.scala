@@ -6,11 +6,20 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
-      // optional 3rd arg (builder-local fast loop, the driver passes 2):
-      // comma-separated gate names — dump only those (plus the fixture
-      // tables + full oracle json, so the DuckDB compare runs unchanged)
+      // optional 3rd arg (a fast local loop): comma-separated gate names
+      // — dump only those (plus the fixture tables + full oracle json,
+      // so the DuckDB compare runs unchanged)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case _ =>
+        System.err.println(
+          "usage: graft.Verify <sfDir> <outDir> [gate1,gate2,...]")
+        sys.exit(2)
     }
+    // a misspelled gate must fail loudly, not dump nothing (Bench's rule)
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
@@ -38,17 +47,8 @@ object Verify {
     val fixtureSrcAbs =
       new java.io.File(graft.queries.ExtQueries.fixtureDir).getAbsolutePath
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // — a tab or CR in the SQL would otherwise make json.load fail
+    def q(s: String): String = "\"" + graft.tree.TreeApi.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
         val sql = v.replace("__FIXTURE__", fixtureAbs)

@@ -253,7 +253,7 @@ object Bpe {
     * rule first, each application merging every occurrence
     * left-to-right non-overlapping). The single source of truth for
     * every suite and probe that cross-checks [[tokensCol]]
-    * (PropertySpec, TrainingSpec, BpeBench): a triplicated oracle can
+    * (PropertySpec, TrainingSpec): a duplicated oracle can
     * drift, and a reference that disagrees with itself can hide a
     * real encoder bug. Never on a hot path — test/bench samples only.
     */

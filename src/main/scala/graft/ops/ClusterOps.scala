@@ -152,7 +152,6 @@ object ClusterOps {
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
       // relax: pull the min label across each node's neighborhood
       val nbrMin = sym.join(lbl.select(col("id").as("v"), col("lbl").as("nlbl")), "v")
         .groupBy(col("u").as("id"))
@@ -189,10 +188,6 @@ object ClusterOps {
         Option(obs.get("lbl_sum"))
           .map(v => BigDecimal(v.asInstanceOf[java.math.BigDecimal]))
           .orElse(prevSum.orElse(Some(BigDecimal(0))))
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        // scalastyle:off println
-        println(f"cc round=$round sum=$s sec=${(System.nanoTime() - t0) / 1e9}%.2f " +
-          s"planLines=${next.queryExecution.optimizedPlan.treeString.linesIterator.size}")
       converged = prevSum.isDefined && s == prevSum
       prevSum = s
       lbl = next
@@ -371,7 +366,7 @@ object ClusterOps {
     * unchanged, only the rank side is wider). Per-set answers are
     * bit-identical to s independent runs by construction: set_id rides
     * every aggregation key, so the integer arithmetic per set never
-    * mixes (PropertySpec pins it; PrBench A/Bs the economics at s=8).
+    * mixes (PropertySpec pins it; PERF.md records the s=8 A/B).
     *
     * @param seedSets (set_id, id) — every set ranks every store node
     * @param setIds   the set universe as a (set_id) frame — pass it
@@ -480,17 +475,13 @@ object ClusterOps {
     * paid per ROUND at any data size, and the fixed-point round count
     * (~log_{1/d} 10⁶) is size-independent, so the trade carries.
     */
-  private def withoutAqe[A](df: DataFrame)(body: => A): A =
-    // GRAFT_KERNEL_AQE=on restores AQE inside the rank loops — the
-    // measurement/ops escape hatch (and how the A/B below was run)
-    if (sys.env.get("GRAFT_KERNEL_AQE").contains("on")) body
-    else {
-      val conf = df.sparkSession.conf
-      val k = "spark.sql.adaptive.enabled"
-      val prev = conf.get(k)
-      conf.set(k, "false")
-      try body finally conf.set(k, prev)
-    }
+  private def withoutAqe[A](df: DataFrame)(body: => A): A = {
+    val conf = df.sparkSession.conf
+    val k = "spark.sql.adaptive.enabled"
+    val prev = conf.get(k)
+    conf.set(k, "false")
+    try body finally conf.set(k, prev)
+  }
 
   /** The shared iteration loop over an ALREADY-LAID-OUT edge frame
     * `e (src, dst, deg)` — partitioned (and ideally sorted) by `src`,
@@ -550,7 +541,7 @@ object ClusterOps {
     * convergence round hash-match the early-stopped engine
     * ([[pageRankOracleSql]] `fixedPoint = true` layers are idempotent
     * past the fixed point; `minRounds` forces extra rounds to PROVE
-    * that on a real graph — PrBench's early-stop assertion).
+    * that on a real graph — PropertySpec's fixed-point test does).
     *
     * `redistributeDangling` closes the rank leak [[pageRank]] accepts:
     * each round the previous round's total dangling mass D (rank on
@@ -610,13 +601,14 @@ object ClusterOps {
     * graph's least fixed point, and appends break that — new out-edges
     * on a ranked node dilute its per-edge contribution (deg grows), so
     * its old targets' new fixed point drops BELOW their old one
-    * (PrBench constructs the violation and REQUIRES it). Without the
+    * (PropertySpec's fixed-point test constructs the violation and
+    * requires it). Without the
     * lower-bound premise the monotone termination proof does not
     * transfer: the warm iterates are only squeezed from above by the
     * OLD vector, so a zero delta certifies SOME fixed point of the
     * integer map, not the canonical least one the oracle unrolls to —
-    * that it happens to coincide on a given graph (PrBench reports the
-    * drift count either way) is luck, not a contract. Rank a grown
+    * that it happens to coincide on a given graph is luck, not a
+    * contract. Rank a grown
     * store from base — the iteration floor (~log_{1/d} 10⁶ rounds) is
     * the price of the bit-reproducibility contract.
     */
@@ -681,10 +673,6 @@ object ClusterOps {
             .map(v => BigDecimal(v.asInstanceOf[java.math.BigDecimal]))
             .getOrElse(BigDecimal(0))
         converged = metric("delta") == 0
-        if (sys.env.contains("GRAFT_PR_DEBUG"))
-          // scalastyle:off println
-          println(s"pr_fp round=$rounds delta=${metric("delta")} " +
-            s"dmass=${metric("dmass")}")
         if (redistributeDangling) {
           val dm = metric("dmass")
           require(dm.isValidLong, s"dangling mass $dm exceeds Long")

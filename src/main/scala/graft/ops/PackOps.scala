@@ -89,10 +89,10 @@ object PackOps {
     * docs just over ctxLen/2 — each opens a bin — then half just
     * under: each scans every open bin before opening its own), and a
     * shard is one task, so at 1M docs/shard the scan is the job
-    * (PackBench probes exactly this shape and pins near-linear
-    * scaling). Same answers bit for bit: both pick the lowest-indexed
-    * bin with enough remaining capacity (the in-suite linear replay
-    * and the SQL oracle pin it).
+    * (PERF.md records the 1M-doc probe of exactly this shape). Same
+    * answers bit for bit: both pick the lowest-indexed bin with enough
+    * remaining capacity (TrainingSpec's linear replay, its adversarial
+    * tree-vs-scan case, and the SQL oracle pin it).
     *
     * @return (doc_id, shard, bin, bin_off): the document's bin index
     *         (0-based, in creation order) within its shard and its

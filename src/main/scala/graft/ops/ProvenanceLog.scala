@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the manifest carries the COMMITTED part list alongside `ingests` and
   * the `last_batch` zombie guard. An append writes one new part and
   * commits it by swapping the manifest ([[graft.StoreUtil
-  * .replaceMarker]]) — O(1) per delivery, never a read-union-rewrite of
+  * .writeMarker]]) — O(1) per delivery, never a read-union-rewrite of
   * history, so a crashed append loses at most its own uncommitted part
   * (invisible to [[load]], overwritten by the retried delivery) and can
   * NEVER take committed history with it — the property a
@@ -136,7 +136,7 @@ object ProvenanceLog {
     // no-batchId append must NOT erase the recorded one (the family's
     // orElse rule — dropping it would let a redelivered batch append
     // twice after a catch-up append)
-    graft.StoreUtil.replaceMarker(spark, path, ManifestFile,
+    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
       manifest(ingests + 1L, parts :+ (ingests + 1L), batchId.orElse(last)))
   }
 
@@ -191,7 +191,7 @@ object ProvenanceLog {
     require(keep.nonEmpty,
       s"refusing to retire every part of the ledger at $path — delete " +
         "the directory if the whole history is truly condemned")
-    graft.StoreUtil.replaceMarker(spark, path, ManifestFile,
+    graft.StoreUtil.writeMarker(spark, path, ManifestFile,
       manifest(graft.StoreUtil.manifestLong(mf, "ingests",
         s"provenance log at $path"), keep,
         graft.StoreUtil.lastBatchOf(mf)))

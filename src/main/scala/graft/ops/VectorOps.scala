@@ -562,8 +562,8 @@ object VectorOps {
     * sub-row reduce side; rounds flatten through [[ClusterOps.flatten]]
     * so the plan stays iteration-independent.
     *
-    * Recall economics vs the sampled baseline are measured by PqBench
-    * (`recall_adc` sampled < trained on the benchmark corpus) — the
+    * Recall economics vs the sampled baseline are recorded in PERF.md
+    * (`recall_adc` sampled < trained on a 500k-vector corpus) — the
     * nprobe-at-fixed-recall lever a 100 TB deployment tunes.
     */
   def pqCodebookTrained(corpus: DataFrame, m: Int, codes: Int, dim: Int,
@@ -643,7 +643,7 @@ object VectorOps {
     * ordering = d2 then code, exactly the tie rule). ZERO shuffles and
     * zero joins, where the join formulation paid an m-way explode, a
     * 16-way join, and two aggregations per vector (measured 4.5× on
-    * the 500k PqBench build). Argmin semantics identical, so every
+    * a 500k-vector build, PERF.md). Argmin semantics identical, so every
     * downstream oracle hash is unchanged.
     */
   /** The code-assignment EXPRESSION for one vector column — exposed so

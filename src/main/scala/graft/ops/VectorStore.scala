@@ -586,12 +586,12 @@ object VectorStore {
     // Memory contract of the broadcast: the shortlist is ≤ |queries|·c
     // rows, and the broadcast hint is safe only while that PRODUCT is
     // request-bounded — bounding c alone admits a 40k-query × 5k-c
-    // multi-GB broadcast, and c = ∞ (PqBench's cell-exhaustive truth
-    // probe) admits a corpus-scale one. The query count is known
-    // driver-side (the routing table was collected), so past
-    // nQueries·c > maxQueryRows the hint is dropped and the join plans
-    // as a shuffle: the truth probe trades latency, the serving path
-    // (bounded queries, c ≈ 4–10×k) keeps its broadcast.
+    // multi-GB broadcast, and c = ∞ (a cell-exhaustive truth probe,
+    // as VectorStoreSpec's two-stage test runs) admits a corpus-scale
+    // one. The query count is known driver-side (the routing table was
+    // collected), so past nQueries·c > maxQueryRows the hint is dropped
+    // and the join plans as a shuffle: the truth probe trades latency,
+    // the serving path (bounded queries, c ≈ 4–10×k) keeps its broadcast.
     val sl =
       if (s.nQueries == 0L || c.toLong <= maxQueryRows.toLong / s.nQueries)
         broadcast(shortlist)

@@ -471,7 +471,7 @@ object Relational {
     * round count is log-driven, not size-driven); the oracle unrolls 22
     * layers, green because layers past the fixed point are idempotent
     * ([[graft.ops.ClusterOps.pageRankFixedPoint]]'s monotone-start
-    * argument; PrBench forces extra rounds to prove it on a real
+    * argument; PropertySpec forces extra rounds to prove it on a random
     * graph).
     */
   val grPrConverged: Q = (s, d) =>
@@ -573,7 +573,7 @@ object Relational {
   // the fixed-point oracle unrolls PAST the engine's convergence
   // round (22 vs ~14-15 measured at every SF) — extra layers are
   // idempotent at the fixed point, which the monotone start makes
-  // provable and PrBench makes measured. ONE string for the scan and
+  // provable and PropertySpec checks. ONE string for the scan and
   // store-served gates: the store changes layout, never answers.
   private val grPrConvergedSql =
     s"""WITH p AS (SELECT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b

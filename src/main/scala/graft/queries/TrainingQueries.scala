@@ -519,7 +519,7 @@ object TrainingQueries {
     * integer reciprocal ranks. Sharing the tail is what makes the
     * store gate's oracle reuse sound — the legs differ only in IO.
     */
-  private[graft] def hybridRrf(lex0: DataFrame, dense0: DataFrame): DataFrame = {
+  private def hybridRrf(lex0: DataFrame, dense0: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("score_milli").desc, col("doc_id"))
     val lex = lex0
@@ -1359,7 +1359,7 @@ object TrainingQueries {
     * oracle replays BOTH Lloyd rounds (integer assignment, floor-
     * division means, no-member carry-over) before the shared
     * encode/LUT/ADC tail — the trained artifact is hash-gated end to
-    * end, and PqBench measures what the training buys
+    * end; PERF.md records what the training buys
     * (recall_adc sampled < trained at the same nprobe).
     */
   val annPqTrained: Q = (s, d) => {

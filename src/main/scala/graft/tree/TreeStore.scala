@@ -28,9 +28,9 @@ object TreeStore {
   val ManifestFile = "_graft_store.json"
 
   /** Present only while a multi-table append is in flight, holding the
-    * appending tree_ids — the rollback identity [[recoverAppend]] filters
-    * out of every table. Saves, appends, recovery and compaction follow
-    * [[graft.StoreCommit]].
+    * pre-append `ingests` counter and the appending tree_ids — the
+    * rollback identity [[recoverAppend]] filters out of every table.
+    * Saves, appends, recovery and compaction follow [[graft.StoreCommit]].
     */
   val PendingFile = "_graft_append_pending"
 
@@ -135,22 +135,24 @@ object TreeStore {
     appendCore(spark, path, t, maxId, maxPost, storeTreeIds(spark, path))
   }
 
-  /** Roll back an append that died between table writes ([[PendingFile]]
-    * left behind): every row of the pending tree_ids is filtered out of
-    * all four tables — each carries `tree_id` — and the surviving store
-    * is rewritten clean at `dest`. The marker records no counter
-    * snapshot, so an append whose manifest had landed is rolled out too.
+  /** Recover from an append that died before its marker delete
+    * ([[PendingFile]] left behind), rewriting the store clean at `dest`.
+    * If the manifest's counter moved past the marker's snapshot, only the
+    * marker delete was lost and the tree is kept; otherwise every row of
+    * the pending tree_ids is filtered out of all four tables — each
+    * carries `tree_id`. A marker written before the snapshot was recorded
+    * holds the ids only, and its append is always rolled out.
     */
   def recoverAppend(spark: SparkSession, path: String, dest: String): Unit =
     graft.StoreCommit.recover(spark, Commit, path, dest,
-      graft.StoreUtil.ingestsOf, raw => {
-        val ids = raw.split(PendingSep.toString, -1).toSeq
-        if (raw.isEmpty || ids.exists(_.isEmpty)) None
-        else Some(graft.StoreCommit.Pending(ids, None))
-      }, mf => manifest(bucketsOf(mf))) { (bad, _, mf) =>
-      def clean(table: String): DataFrame =
-        spark.read.parquet(s"$path/$table")
-          .filter(!col("tree_id").isin(bad: _*))
+      graft.StoreUtil.ingestsOf, parsePending, mf => {
+        val n = graft.StoreUtil.ingestsOf(mf)
+        manifest(bucketsOf(mf), n, n)
+      }) { (bad, completed, mf) =>
+      def clean(table: String): DataFrame = {
+        val t = spark.read.parquet(s"$path/$table")
+        if (completed) t else t.filter(!col("tree_id").isin(bad: _*))
+      }
       tables(TreeIngest.Ingested(clean("nodes"), clean("edges"),
         clean("tree_meta"), clean("source_map")), dest, bucketsOf(mf))
     }
@@ -189,6 +191,23 @@ object TreeStore {
     */
   private val PendingSep = '\u001f'
 
+  /** The marker is `<sep>ingests<sep>id<sep>id…`: the leading separator
+    * sets it apart from the older ids-only form, whose first id is never
+    * empty.
+    */
+  private def pendingMarker(ingests: Long, ids: Iterable[String]): String =
+    ("" +: ingests.toString +: ids.toSeq.sorted).mkString(PendingSep.toString)
+
+  private def parsePending(
+      raw: String): Option[graft.StoreCommit.Pending[Seq[String]]] =
+    raw.split(PendingSep.toString, -1).toSeq match {
+      case "" +: n +: ids if ids.nonEmpty && ids.forall(_.nonEmpty) =>
+        n.toLongOption.map(s => graft.StoreCommit.Pending(ids, Some(s)))
+      case ids if ids.forall(_.nonEmpty) =>
+        Some(graft.StoreCommit.Pending(ids, None))
+      case _ => None
+    }
+
   private def appendCore(spark: SparkSession, path: String,
       t: TreeIngest.Ingested, maxId: Long, maxPost: Long,
       existingIds: Set[String]): Unit = {
@@ -216,7 +235,7 @@ object TreeStore {
     require(newIds.forall(!_.contains(PendingSep)),
       s"tree_id may not contain U+001F (reserved as the marker delimiter)")
     graft.StoreCommit.append(spark, Commit, path,
-      newIds.toSeq.sorted.mkString(PendingSep.toString), Seq(
+      pendingMarker(pre.ingests, newIds), Seq(
         "nodes" -> (() =>
           appendBucketed(spark, nodes, s"$path/nodes", "node_id", buckets)),
         "edges" -> (() =>

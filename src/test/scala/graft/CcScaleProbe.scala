@@ -11,7 +11,7 @@ import graft.ops.ClusterOps
   * it to ~7) and the localCheckpoint originStats chain (round cost
   * exploding from round ~17). The `require(converged, …)` inside
   * connectedComponents fails this test if either regression returns.
-  * The full-scale twin is `graft.CcBench` (1M nodes: 8 rounds, 46 s).
+  * At 1M nodes it converged in 8 rounds, 46 s (PERF.md).
   */
 class CcScaleProbe extends AnyFunSuite {
   import SparkTestSession._

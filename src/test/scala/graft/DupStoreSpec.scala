@@ -88,6 +88,24 @@ class DupStoreSpec extends AnyFunSuite {
       "store must cut the batch copy even though its id is smaller")
   }
 
+  test("probeStrip is unchanged by history that shares no window with " +
+      "the batch — index growth changes cost, never answers") {
+    val dir = Files.createTempDirectory("graft_dup_grow").toString
+    DupStore.ingestBatch(spark, dir, hist, "doc_id", "text")
+    def strip() = DupStore.probeStrip(DupStore.load(spark, dir), batch,
+        "doc_id", "text")
+      .collect().map(r => (r.getLong(0), (r.getString(1), r.getLong(3))))
+      .toMap
+    val before = strip()
+    // filler docs whose tokens occur nowhere else
+    val filler = spark.range(1000L, 1300L).toDF("doc_id")
+      .withColumn("text", array_join(transform(sequence(lit(0), lit(39)),
+        i => concat(lit("f"), col("doc_id"), lit("x"), i)), " "))
+    DupStore.ingestBatch(spark, dir, filler, "doc_id", "text")
+    assert(strip() == before)
+    assert(before.values.exists(_._2 > 0L), "fixture degenerated: no cuts")
+  }
+
   test("probe broadcasts the batch side — history is never shuffled") {
     val dir = Files.createTempDirectory("graft_dup_plan").toString
     DupStore.ingestBatch(spark, dir, hist, "doc_id", "text")

@@ -264,6 +264,17 @@ class ExtSpec extends AnyFunSuite {
     topk.collect()
     val plan = topk.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dotproduct"), plan)
+    // bit-equal to the aggregate(zip_with) fold it replaced: the same
+    // left-to-right summation order, so no rounding may differ
+    def vec(salt: Long) = transform(sequence(lit(0), lit(63)),
+      d => pmod(xxhash64(col("id") + salt, d), lit(1000L))
+        .cast("double") / 1000.0)
+    val vecs = spark.range(0L, 2000L).toDF("id")
+      .withColumn("a", vec(0L)).withColumn("b", vec(7L))
+    val fold = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
+    val dot = graft.functions.VectorExprs.dot_product(col("a"), col("b"))
+    assert(vecs.filter(fold =!= dot).count() == 0L)
   }
 
   test("degree-pruned subtree stops below high-degree nodes") {

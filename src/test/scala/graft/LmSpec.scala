@@ -214,8 +214,14 @@ class LmSpec extends AnyFunSuite {
     // batches fold on top of the compacted store
     val cd = java.nio.file.Files.createTempDirectory("graft_lmnc")
       .toString + "/lm"
-    LmStore.compact(spark, dir, cd)
+    LmStore.compact(spark, dir, cd, files = 1)
     assert(!LmStore.needsCompact(spark, cd, slack = 1))
+    // the payoff is structural: fewer files per count table to open
+    Seq("uni", "bi", "tri").foreach { t =>
+      def files(p: String) =
+        graft.StoreUtil.dataFileNames(spark, s"$p/$t").size
+      assert(files(cd) < files(dir), s"$t: ${files(cd)} !< ${files(dir)}")
+    }
     // the watermark survives further folds and re-triggers at slack
     LmStore.ingestBatch(spark, cd, docs.filter(col("doc_id") % 3 === 0),
       "text", Some(3L))

@@ -119,6 +119,10 @@ class LshStoreSpec extends AnyFunSuite {
         cand.queryExecution.executedPlan.toString)
     assert(historyJoin.forall(_.buildSide.toString == "BuildRight"),
       cand.queryExecution.executedPlan.toString)
+    // and the answer is the one-shot banding restricted to the pairs
+    // that touch the batch (history-internal pairs are already logged)
+    assert(pairSet(cand) ==
+      oneShot.filter { case (a, b) => a >= 80 || b >= 80 })
   }
 
   test("pending marker refuses every reader until recovery, which rolls " +

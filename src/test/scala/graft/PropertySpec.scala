@@ -496,6 +496,53 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("fixed-point PageRank: forced rounds past convergence change no " +
+      "rank, and appended out-edges can lower the fixed point") {
+    import spark.implicits._
+    import graft.ops.ClusterOps
+    // a quarter of the edges hit node 0; random sources leave some
+    // nodes dangling, so the redistribution term is live
+    val rnd = new Random(91L)
+    val es = Seq.tabulate(90)(i => (rnd.nextInt(30).toLong,
+      if (i % 4 == 0) 0L else rnd.nextInt(30).toLong)).toDF("src", "dst")
+    val nodes = (0L until 30L).toDF("id")
+    def ranks(r: ClusterOps.PrFixedPoint) =
+      r.ranks.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val fp = ClusterOps.pageRankFixedPoint(es, nodes, maxRounds = 60,
+      dampingMilli = 300, redistributeDangling = true)
+    val again = ClusterOps.pageRankFixedPoint(es, nodes, maxRounds = 60,
+      dampingMilli = 300, redistributeDangling = true,
+      minRounds = fp.rounds + 3)
+    assert(again.rounds >= fp.rounds + 3)
+    assert(ranks(again) == ranks(fp) && ranks(fp).size == 30)
+    // why a grown graph store is ranked from base, never warm-started
+    // from its previous fixed point: new out-edges on a ranked node
+    // dilute its per-edge share, so its old targets' least fixed point
+    // drops below the old one — which is then no lower bound
+    val dm = 500L
+    val base = (1000L - dm) * 1000L
+    def leastFixedPoint(edges: Seq[(Int, Int)]): Map[Int, Long] = {
+      val deg = edges.groupBy(_._1).map { case (u, xs) => u -> xs.size }
+      var r = (0 until 30).map(_ -> base).toMap
+      var moved = true
+      while (moved) {
+        val in = edges.groupBy(_._2).map { case (v, xs) =>
+          v -> xs.map { case (u, _) => r(u) / deg(u) }.sum
+        }
+        val next = r.map { case (v, _) =>
+          v -> (base + dm * in.getOrElse(v, 0L) / 1000L) }
+        moved = next != r
+        r = next
+      }
+      r
+    }
+    val before = Seq(0 -> 1, 0 -> 2, 10 -> 0, 11 -> 0, 12 -> 0) ++
+      (13 until 25).map(i => i -> (i - 12))
+    val grown = before ++ (20 until 28).map(0 -> _)
+    val (fa, fb) = (leastFixedPoint(before), leastFixedPoint(grown))
+    assert(fb(1) < fa(1) && fb(2) < fa(2))
+  }
+
   test("malformed newick fails fast with positioned diagnostics") {
     val bad = Seq(
       "(a,(b,c);",   // stray ';' truncates the tree → unclosed '('
@@ -578,8 +625,8 @@ class PropertySpec extends AnyFunSuite {
   test("BPE expression equals the reference priority-queue encoder on " +
       "random words over the symbol alphabet") {
     import spark.implicits._
-    // single-sourced reference oracle (shared with TrainingSpec and
-    // BpeBench — a per-suite copy can drift)
+    // single-sourced reference oracle (shared with TrainingSpec — a
+    // per-suite copy can drift)
     def refBpe(word: String): Seq[String] =
       graft.functions.Bpe.referenceEncode(word)
     val rnd = new Random(31)
@@ -612,6 +659,10 @@ class PropertySpec extends AnyFunSuite {
         freqs.toDF("w", "c"), "w", "c", nMerges = 6)
       val want = graft.functions.Bpe.referenceTrain(freqs, 6)
       assert(got == want, s"seed=$seed: $got vs $want")
+      // prefix-stable: fewer merges train exactly the leading rules
+      if (seed == 0)
+        assert(graft.functions.Bpe.train(freqs.toDF("w", "c"), "w", "c",
+          nMerges = 3) == got.take(3))
     }
   }
 
@@ -678,6 +729,19 @@ class PropertySpec extends AnyFunSuite {
       // the kept set is a pure function of (corpus, recipe, salt):
       // physical layout must not matter
       assert(keptOf(df.repartition(7)) == kept, s"seed=$seed")
+      // and it is exactly the naive form of the keep rule: one running
+      // sum over each whole domain in the keep order (md5(salt:id), id)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("dom"))
+        .orderBy(col("h"), col("id").cast("string"))
+        .rowsBetween(Long.MinValue, -1)
+      val windowed = df.join(budgets, "dom")
+        .withColumn("h", md5(concat(lit(s"seed$seed"), lit(":"),
+          col("id").cast("string"))))
+        .withColumn("before", coalesce(sum(col("ntok")).over(w), lit(0L)))
+        .filter(col("before") < col("budget_tok"))
+        .collect().map(_.getAs[Long]("id")).toSet
+      assert(windowed == kept, s"seed=$seed")
       val byId = rows.map(r => r._1 -> r).toMap
       for ((dom, budget) <- Seq("s0" -> 300L, "s1" -> 0L,
           "s2" -> 1000000L)) {

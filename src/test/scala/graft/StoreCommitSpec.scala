@@ -152,8 +152,6 @@ class StoreCommitSpec extends AnyFunSuite {
     d => "1:0\n" + StoreUtil.readMarker(spark, d, VectorStore.ManifestFile)
       .get.take(20))
 
-  // the tree marker records no counter snapshot, so a crashed append is
-  // always rolled out — also once its manifest had landed
   private def tree = Subject("tree", TreeStore.ManifestFile,
     TreeStore.PendingFile, Seq("nodes", "edges", "tree_meta", "source_map"),
     d => TreeStore.save(gavia, d, buckets = 2),
@@ -162,7 +160,7 @@ class StoreCommitSpec extends AnyFunSuite {
       s"$fx/gavia_taxonomy.tsv", "opentree5.0")),
     TreeStore.recoverAppend(spark, _, _), TreeStore.compact(spark, _, _, 0),
     Seq(TreeStore.load(spark, _, false), TreeStore.needsCompact(spark, _)),
-    None, keepsCompleted = false, _ => "opentree5.0\u001f")
+    None, keepsCompleted = true, _ => "opentree5.0\u001f")
 
   private def subjects = Seq(tree, graph, vectorPq, lsh, dup, lm)
 
@@ -239,6 +237,37 @@ class StoreCommitSpec extends AnyFunSuite {
           e.getMessage.contains(s"'$content'"), s"${s.name}: ${e.getMessage}")
       }
     }
+  }
+
+  test("a crash between a marker's swap write and its rename leaves the " +
+      "store loadable, with no marker, and the next append commits") {
+    subjects.foreach { s =>
+      val dir = tmp(s"${s.name}_swap")
+      s.build(dir)
+      // what the crash leaves: a partly written swap sibling, no marker
+      Files.writeString(Paths.get(dir, s".swap_${s.pendingFile}"),
+        s.truncated(dir))
+      assert(StoreUtil.readMarker(spark, dir, s.pendingFile).isEmpty)
+      s.readers.foreach(r => r(dir))
+      s.exists.foreach(e => assert(e(dir), s.name))
+      s.append(dir)
+      assert(StoreUtil.readMarker(spark, dir, s.pendingFile).isEmpty)
+      assert(!Files.exists(Paths.get(dir, s".swap_${s.pendingFile}")) &&
+        !Files.exists(Paths.get(dir, s".swap_${s.manifestFile}")), s.name)
+      s.readers.foreach(r => r(dir))
+    }
+  }
+
+  test("a legacy ids-only tree marker still parses, and its append is " +
+      "rolled out even after the manifest landed") {
+    val dir = tmp("tree_legacy")
+    tree.build(dir)
+    val stateA = state(tree, dir)
+    tree.append(dir)
+    StoreUtil.writeMarker(spark, dir, TreeStore.PendingFile, "opentree5.0")
+    val dest = tmp("tree_legacy_r")
+    TreeStore.recoverAppend(spark, dir, dest)
+    assert(state(tree, dest)._1 == stateA._1)
   }
 
   /** A table holding one pre-seq file (rows tagged only by

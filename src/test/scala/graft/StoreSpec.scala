@@ -1043,7 +1043,7 @@ class StoreSpec extends AnyFunSuite {
     ProvenanceLog.append(spark, dir, rowsFor(3L), Some(3L))
     assert(ProvenanceLog.load(spark, dir).count() == 8L)
     // rows without a manifest: the broken-vs-absent refusal holds —
-    // and because a crashed replaceMarker strands the complete new
+    // and because a crashed manifest swap strands the complete new
     // manifest in its swap sibling, that state must refuse too (with
     // the recovery hint), via append's shared probe as well
     StoreUtil.deleteMarker(spark, dir, ProvenanceLog.ManifestFile)

@@ -579,8 +579,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("the postings maintenance loop ACTS on its compaction nudge " +
       "mid-stream — BM25 answers ride the rotation chain unchanged") {
-    // PostBench showed postings is the family that actually GROWS in
-    // production (8 appends stacked 216 files); this drives its
+    // postings is the family that actually GROWS in production (8
+    // appends stacked 216 files, PERF.md); this drives its
     // rotate-compact loop in-stream, through rotateWithGrace: slack 1
     // trips a rotation after every post-save append, grace 1 keeps one
     // retired generation readable and GCs older ones.

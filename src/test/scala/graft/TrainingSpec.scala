@@ -796,6 +796,26 @@ class TrainingSpec extends AnyFunSuite {
         s"${straddleTok + tailPad} (straddle $straddleTok + tail $tailPad)")
   }
 
+  test("FFD's first-fit tree equals the linear first-fit scan on the " +
+      "adversarial 257/256 mix, at the provable bin count") {
+    // every 257-token doc opens its own bin (two cannot share 512 and
+    // the 255 left fits nothing); every 256-token doc then scans all of
+    // them before pairing up — the linear scan's quadratic case
+    val ctx = 512L
+    val m = 3000
+    val sizes = Array.tabulate(m)(i => if (i < m / 2) 257L else 256L)
+    val bins = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val linear = sizes.map { n =>
+      var i = 0
+      while (i < bins.length && bins(i) < n) i += 1
+      if (i < bins.length) { val o = ctx - bins(i); bins(i) -= n; (i.toLong, o) }
+      else { bins += (ctx - n); (bins.length - 1L, 0L) }
+    }
+    val tree = new PackOps.FirstFitTree(ctx)
+    assert(sizes.map(tree.place).toSeq == linear.toSeq)
+    assert(tree.openBins == m / 2 + m / 4)
+  }
+
   test("tf-idf: common terms rank below distinctive ones, topK bounded") {
     val window = docs.filter(col("doc_id") < 100)
     val scored = TextOps.termScores(window, "doc_id", "text", topK = 5).collect()
@@ -1165,6 +1185,10 @@ class TrainingSpec extends AnyFunSuite {
       assert(lex.contains(best._1) && dense.contains(best._1),
         s"top fused doc ${best._1} should be dual-listed")
     }
+    // served from the postings and IVF stores, the fusion is identical
+    def rows(q: TrainingQueries.Q) = q(spark, sf).collect().map(_.toSeq).toSet
+    assert(rows(TrainingQueries.retHybridStore) ==
+      rows(TrainingQueries.retHybrid))
   }
 
   test("positional postings: phrase counts equal a driver-side reference " +
@@ -1460,7 +1484,7 @@ class TrainingSpec extends AnyFunSuite {
     assert(toks("keyvalue key") == Seq("key", "value", "key"))
     // the greedy result equals the single-sourced reference
     // priority-queue BPE encode (Bpe.referenceEncode, shared with
-    // PropertySpec and BpeBench)
+    // PropertySpec)
     def refBpe(word: String): Seq[String] =
       graft.functions.Bpe.referenceEncode(word)
     for (w <- Seq("customer", "database", "slowly", "keyvalue", "joins",

@@ -347,6 +347,14 @@ class VectorStoreSpec extends AnyFunSuite {
         .map { case ((qq, n, d2), i) => Seq(qq, n, (i + 1).toLong, d2) }
     }.toSet
     assert(wide == expected)
+    // recall is monotone: every exact neighbor ADC's own top-k finds
+    // sits in the shortlist and so survives the exact re-rank
+    def pairs(rows: Iterable[Seq[Any]]) =
+      rows.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).toSet
+    val truth = pairs(wide)
+    val adcHits = pairs(VectorStore.queryAdc(st, queries, k = 5, nprobe = 2)
+      .select("q_id", "n_id").collect().map(_.toSeq)) intersect truth
+    assert(adcHits.subsetOf(pairs(rerankRows.map(_.toSeq))))
   }
 
   test("PQ store compaction preserves codes, codebook, and ingest tags " +
