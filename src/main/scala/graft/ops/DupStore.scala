@@ -292,19 +292,21 @@ object DupStore {
     * Merged rows carry batch tag −1/seq 0 (no live rollback identity —
     * compaction of a healthy store has nothing to roll back). Unlike
     * the kilobyte-scale sibling stores, this index is O(corpus tokens),
-    * so `files` defaults to real parallelism — a single-file layout
-    * starves the probe scan of row groups (measured ~2× slower).
+    * so by default (`files` 0) it keeps the source's file count up to
+    * real parallelism, 32 — a single-file layout starves the probe scan
+    * of row groups (measured ~2× slower) — and a small store's file set
+    * never grows.
     */
   def compact(spark: SparkSession, path: String, dest: String,
-      files: Int = 32): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
+      files: Int = 0): Unit = {
+    require(files >= 0, s"files must be >= 0, got $files")
     graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
       Seq("hashes" -> (() => spark.read.parquet(s"$path/hashes")
         .groupBy(col("h"))
         .agg(sum(col("n")).as("n"))
         .select(col("h"), col("n"),
           lit(-1L).as("ingest_batch"), lit(0L).as("ingest_seq"))
-        .repartition(files)
+        .repartition(graft.StoreUtil.compactFiles(spark, s"$path/hashes", files, 32))
         .write.mode("overwrite").parquet(s"$dest/hashes")))
     }
   }

@@ -605,7 +605,7 @@ object ExtQueries {
     val dir = graft.StoreUtil.cachedStoreDir("tstore", "gavia") { p =>
       graft.tree.TreeStore.save(fixture(s), p, buckets = 8)
     }
-    val t = graft.tree.TreeStore.load(s, dir, persistNodes = false)
+    val t = graft.tree.TreeStore.load(s, dir)
     t.nodes.select(col("node_id"), col("parent_id"), col("depth"),
       col("pre"), col("post"), col("is_leaf"), col("tip_descendants"),
       col("ot_node_id"), col("tax_uid"), col("name"), col("unique_name"),

@@ -19,12 +19,18 @@ import graft.tree.TreeIngest.Ingested
   * node's parent position and root-path length (derived from
   * `parent_id`; the `ancestors` arrays are not collected). The
   * annotation maps are kept for `node_info` beside the `to_json` texts
-  * arguson splices. Driver memory is O(nodes × serving width), the same
-  * order as the reference's Lucene index files, which it likewise holds
-  * beside the graph DB. Build pays ONE collect of the nodes table. A
-  * subtree is a contiguous run of positions, so every extract walks
-  * positions in O(output), and `induced_subtree` keeps the query
-  * positions and the meets of their pre-order neighbours. [[build]]
+  * arguson splices. The three id spaces resolve through [[Slots]] tables
+  * that probe the id columns themselves, and each repeated string (map
+  * keys, ranks, a unique_name equal to its name) is stored once. Driver
+  * memory is O(nodes × serving width), the same order as the reference's
+  * Lucene index files, which it likewise holds beside the graph DB: a
+  * class-histogram diff measures 634 bytes a node on an 18.4k-node
+  * synthesis tree. The index is a served store's only in-memory copy of
+  * its tree ([[TreeStore.load]] caches nothing). Build pays ONE collect
+  * of the nodes table. A subtree is a contiguous run of positions, so
+  * every extract walks positions in O(output), and `induced_subtree`
+  * keeps the query positions and the meets of their pre-order
+  * neighbours. [[build]]
   * memoises the index per frame instance, and [[TreeOps.newick]],
   * [[TreeApi.inducedSubtree]] and [[TreeApi.arguson]] find it through
   * [[indexOf]]: once a served store is indexed, its capped extracts leave
@@ -79,6 +85,23 @@ object TreeServing {
     }
   }
 
+  /** Positions by key for [[Index]]: an open-addressing table of
+    * position + 1 (0 marks an empty slot), probed linearly from a
+    * Fibonacci hash of the key. It stores no keys: a probe compares
+    * through the index's column for that key, so a lookup allocates
+    * nothing. A power of two over 4/3 of `keys` slots keeps the load at
+    * or below 3/4, so every probe meets an empty slot, at 4 bytes a slot
+    * (5.3 to 10.7 bytes a key).
+    */
+  private[graft] final class Slots(keys: Int) {
+    private val bits =
+      math.max(1, 32 - Integer.numberOfLeadingZeros(keys + keys / 3))
+    val at = new Array[Int](1 << bits)
+    /** Where the probe for a key with hash code `h` starts. */
+    def home(h: Int): Int = (h * 0x9E3779B9) >>> (32 - bits)
+    def next(i: Int): Int = (i + 1) & (at.length - 1)
+  }
+
   /** What [[Index]]'s nest() calls per position, in pre order: a class,
     * because a `(Int, Boolean) => Unit` closure boxes both arguments.
     */
@@ -113,9 +136,28 @@ object TreeServing {
     // each node's parent position (-1 at a root) and root-path length
     private val parentAt = new Array[Int](rows.length)
     private val pathLen = new Array[Int](rows.length)
-    private val byOt = new java.util.HashMap[String, Int](rows.length * 2)
-    private val byUid = new java.util.HashMap[Long, Int](rows.length * 2)
-    private val byId = new java.util.HashMap[Long, Int](rows.length * 2)
+    // a key repeated across rows (ot and ott ids in a multi-tree frame)
+    // resolves to its highest-`pre` row: the build puts rows in pre order
+    private val byOt = new Slots(rows.length)
+    private val byUid = new Slots(rows.length)
+    private val byId = new Slots(rows.length)
+
+    private def otSlot(key: String): Int = {
+      var i = byOt.home(key.hashCode)
+      while (byOt.at(i) != 0 && ot(byOt.at(i) - 1) != key) i = byOt.next(i)
+      i
+    }
+    /** `byUid` and `byId` hold only rows with a key in `col`. */
+    private def longSlot(t: Slots, col: Array[Long], key: Long): Int = {
+      var i = t.home(java.lang.Long.hashCode(key))
+      while (t.at(i) != 0 && col(t.at(i) - 1) != key) i = t.next(i)
+      i
+    }
+    // each node's position, -1 when absent
+    private def otPos(key: String): Int =
+      if (key == null) -1 else byOt.at(otSlot(key)) - 1
+    private def uidPos(key: Long): Int = byUid.at(longSlot(byUid, uid, key)) - 1
+    private def idPos(key: Long): Int = byId.at(longSlot(byId, nodeId, key)) - 1
 
     // Climbing parent positions from a node must visit exactly its root
     // path, and a subtree must be the positions up to the last `pre` inside
@@ -123,7 +165,19 @@ object TreeServing {
     // row comes before its child, is the nearest enclosing interval and
     // sits one level above it (true of every ingested frame); the open
     // intervals on `stack` find the nearest enclosing one.
+    //
+    // Repeated strings are stored once: ranks and the keys of the
+    // annotation and tax_sources maps go through a dictionary that lives
+    // for the build only; a unique_name equal to its name, and a map
+    // value equal to the node's ot id (the supported_by entry ingest
+    // injects for a taxon), reuse the node's own string.
     locally {
+      val dict = new java.util.HashMap[String, String]
+      def share(s: String): String =
+        if (s == null) null else { val o = dict.putIfAbsent(s, s); if (o == null) s else o }
+      def shareKeys(m: collection.Map[String, Any], own: String): AnyRef =
+        if (m == null) null
+        else m.map { case (key, v) => share(key) -> (if (v == own) own else v) }
       val stack = new IntBuf
       var k = 0
       while (k < rows.length) {
@@ -136,31 +190,33 @@ object TreeServing {
         if (r.isNullAt(IUid)) noUid.set(k) else uid(k) = r.getLong(IUid)
         ot(k) = r.getString(IOt)
         name(k) = r.getString(IName)
-        uniq(k) = r.getString(IUniq)
-        rank(k) = r.getString(IRank)
-        taxSources(k) = r.get(ITaxSources).asInstanceOf[AnyRef]
+        val u = r.getString(IUniq)
+        uniq(k) = if (u != null && u == name(k)) name(k) else u
+        rank(k) = share(r.getString(IRank))
+        taxSources(k) = shareKeys(r.getMap[String, Any](ITaxSources), ot(k))
         var i = 0
         while (i < AnnFields.length) {
-          ann(i)(k) = r.get(IAnnFirst + i).asInstanceOf[AnyRef]
+          ann(i)(k) = shareKeys(r.getMap[String, Any](IAnnFirst + i), ot(k))
           annJson(i)(k) = r.getString(IJsonFirst + i)
           i += 1
         }
         val parentId = r.getLong(IParent)
-        val p = if (parentId == -1L) -1 else byId.getOrDefault(parentId, -1)
+        val p = if (parentId == -1L) -1 else idPos(parentId)
         while (stack.size > 0 && post(stack.last) < pre(k)) stack.pop()
         val enclosing = if (stack.size > 0) stack.last else -1
-        require(!byId.containsKey(nodeId(k)) && p == enclosing &&
+        val idSlot = longSlot(byId, nodeId, nodeId(k))
+        require(byId.at(idSlot) == 0 && p == enclosing &&
             (parentId == -1L || p >= 0 && pre(p) < pre(k) && post(k) <= post(p) &&
               depth(k) == depth(p) + 1),
           s"node_id ${nodeId(k)}: the serving index needs unique node ids, " +
             "and a parent row ahead of each child that encloses its [pre, post] " +
             "one level above it")
-        byId.put(nodeId(k), k)
+        byId.at(idSlot) = k + 1
         stack += k
         parentAt(k) = p
         pathLen(k) = if (p < 0) 1 else pathLen(p) + 1
-        if (ot(k) != null) byOt.put(ot(k), k)
-        if (!noUid.get(k)) byUid.put(uid(k), k)
+        if (ot(k) != null) byOt.at(otSlot(ot(k))) = k + 1
+        if (!noUid.get(k)) byUid.at(longSlot(byUid, uid, uid(k))) = k + 1
         k += 1
       }
     }
@@ -195,16 +251,16 @@ object TreeServing {
       else Some(new GenericRowWithSchema((Array[Any](nodeId(k), ot(k), name(k),
         uniq(k), uidOrNull(k), rank(k), taxSources(k), tipDesc(k), depth(k),
         pre(k), post(k)) ++ ann.map(_(k))), rowSchema))
-    def byOtId(ot: String): Option[Row] = rowAt(byOt.getOrDefault(ot, -1))
-    def byOttId(uid: Long): Option[Row] = rowAt(byUid.getOrDefault(uid, -1))
-    def byNodeId(id: Long): Option[Row] = rowAt(byId.getOrDefault(id, -1))
+    def byOtId(ot: String): Option[Row] = rowAt(otPos(ot))
+    def byOttId(uid: Long): Option[Row] = rowAt(uidPos(uid))
+    def byNodeId(id: Long): Option[Row] = rowAt(idPos(id))
 
     /** (pre, post, depth, tip_descendants) of a node — the values
       * TreeOps.newick's knownTips/rootBounds parameters take, which let an
       * un-indexed frame skip the size-guard and root-resolution jobs.
       */
     def bounds(ot: String): Option[(Long, Long, Long, Long)] = {
-      val k = byOt.getOrDefault(ot, -1)
+      val k = otPos(ot)
       if (k < 0) None else Some((pre(k), post(k), depth(k), tipDesc(k)))
     }
 
@@ -214,7 +270,7 @@ object TreeServing {
       * as the optimizer's anchor table at zero extra driver memory.
       */
     def interval(id: Long): Option[(Long, Long)] = {
-      val k = byId.getOrDefault(id, -1)
+      val k = idPos(id)
       if (k < 0) None else Some((pre(k), post(k)))
     }
 
@@ -237,7 +293,7 @@ object TreeServing {
       */
     def nodeInfo(otNodeId: String,
         includeLineage: Boolean = false): Option[Map[String, Any]] = {
-      val k = byOt.getOrDefault(otNodeId, -1)
+      val k = otPos(otNodeId)
       if (k < 0) None
       else {
         val b = Map.newBuilder[String, Any]
@@ -292,13 +348,13 @@ object TreeServing {
         found = true
       }
       val ni = nodeIds.iterator
-      while (ni.hasNext) add(byOt.getOrDefault(ni.next(), -1))
+      while (ni.hasNext) add(otPos(ni.next()))
       val oi = ottIds.iterator
-      while (oi.hasNext) add(byUid.getOrDefault(oi.next(), -1))
+      while (oi.hasNext) add(uidPos(oi.next()))
       require(found, "no valid node or ott ids provided")
       require(m >= 0, "query nodes do not share a root (different trees?)")
-      val badNodes = nodeIds.filterNot(byOt.containsKey)
-      val badOtts = ottIds.filterNot(byUid.containsKey(_))
+      val badNodes = nodeIds.filterNot(otPos(_) >= 0)
+      val badOtts = ottIds.filterNot(uidPos(_) >= 0)
       // the deepest taxon on the common path: depth falls by one per
       // parent, so the first one climbing from the MRCA
       var nearest = m
@@ -313,7 +369,7 @@ object TreeServing {
     }
 
     private def position(nodeId: Long): Int = {
-      val k = byId.getOrDefault(nodeId, -1)
+      val k = idPos(nodeId)
       if (k < 0) throw new IllegalArgumentException(TreeOps.notInTree(nodeId))
       k
     }
@@ -428,8 +484,8 @@ object TreeServing {
         labelFormat: String = "name_and_id",
         idsForUnnamed: Boolean = false): TreeApi.InducedResult = {
       val kept = new IntBuf
-      nodeIds.foreach { id => val k = byOt.getOrDefault(id, -1); if (k >= 0) kept += k }
-      ottIds.foreach { id => val k = byUid.getOrDefault(id, -1); if (k >= 0) kept += k }
+      nodeIds.foreach { id => val k = otPos(id); if (k >= 0) kept += k }
+      ottIds.foreach { id => val k = uidPos(id); if (k >= 0) kept += k }
       kept.sortDistinct()
       val queries = kept.size
       require(queries >= 2, s"at least 2 valid ids required, got $queries")
@@ -441,8 +497,8 @@ object TreeServing {
         i += 1
       }
       val nwk = newickOf(kept.sortDistinct(), labelFormat, idsForUnnamed)
-      val badNodes = nodeIds.filterNot(byOt.containsKey)
-      val badOtts = ottIds.filterNot(byUid.containsKey(_))
+      val badNodes = nodeIds.filterNot(otPos(_) >= 0)
+      val badOtts = ottIds.filterNot(uidPos(_) >= 0)
       TreeApi.InducedResult(nwk, badNodes, badOtts,
         ok = badNodes.isEmpty && badOtts.isEmpty)
     }

@@ -22,6 +22,11 @@ import org.apache.spark.storage.StorageLevel
   * `_graft_store.json` manifest next to the data. Table names are derived
   * from the store path, so several stores can coexist in one session (the
   * reference's multiple-synth-versions model, GraphExplorer.java:95-114).
+  *
+  * A loaded store keeps no copy of its tables in memory. Requests on a
+  * served store answer from [[TreeServing.Index]], the one in-memory
+  * copy of the tree; uncapped exports and analytics re-read the bucketed
+  * parquet, which stays exchange-free.
   */
 object TreeStore {
 
@@ -59,14 +64,16 @@ object TreeStore {
         t.sourceMap.write.mode("overwrite").parquet(s"$dir/source_map")))
   }
 
-  /** Restore an [[TreeIngest.Ingested]] from a saved store. The nodes table
-    * is persisted by default (every endpoint action re-reads it); both big
+  /** Restore an [[TreeIngest.Ingested]] from a saved store. Both big
     * tables come back with their bucket spec, so serving joins plan
-    * exchange-free. Pass `persistNodes = false` to keep the raw bucketed
-    * scan visible (plan inspection, one-shot batch reads).
+    * exchange-free. The nodes table is not cached by default: a served
+    * store answers its requests from [[TreeServing.build]]'s index, and a
+    * cached copy would hold the tree in driver memory twice (about 480
+    * bytes a node at 18k nodes). Pass `persistNodes = true` when the
+    * frame itself takes repeated Spark actions and no index is built.
     */
   def load(spark: SparkSession, path: String,
-      persistNodes: Boolean = true): TreeIngest.Ingested = {
+      persistNodes: Boolean = false): TreeIngest.Ingested = {
     val buckets = bucketsOf(graft.StoreCommit.manifest(spark, Commit, path))
     val nodes = loadBucketed(spark, s"$path/nodes", "node_id", buckets)
     val edges = loadBucketed(spark, s"$path/edges", "child_id", buckets)
@@ -89,7 +96,7 @@ object TreeStore {
       path, buckets)
 
   def loadMulti(spark: SparkSession, path: String,
-      persistNodes: Boolean = true): TreeIngest.MultiIngested = {
+      persistNodes: Boolean = false): TreeIngest.MultiIngested = {
     val t = load(spark, path, persistNodes)
     TreeIngest.MultiIngested(t.nodes, t.edges, t.treeMeta, t.sourceMap)
   }
@@ -145,10 +152,8 @@ object TreeStore {
     */
   def recoverAppend(spark: SparkSession, path: String, dest: String): Unit =
     graft.StoreCommit.recover(spark, Commit, path, dest,
-      graft.StoreUtil.ingestsOf, parsePending, mf => {
-        val n = graft.StoreUtil.ingestsOf(mf)
-        manifest(bucketsOf(mf), n, n)
-      }) { (bad, completed, mf) =>
+      graft.StoreUtil.ingestsOf, parsePending,
+      mf => rewritten(mf, bucketsOf(mf))) { (bad, completed, mf) =>
       def clean(table: String): DataFrame = {
         val t = spark.read.parquet(s"$path/$table")
         if (completed) t else t.filter(!col("tree_id").isin(bad: _*))
@@ -163,14 +168,15 @@ object TreeStore {
     * bucket; reads stay correct but open more files until compaction).
     * The bucket count defaults to the SOURCE's manifest — compaction is a
     * layout rewrite, not a silent re-bucketing; pass `buckets` explicitly
-    * to re-bucket.
+    * to re-bucket. The `ingests` counter carries over and the compaction
+    * watermark moves up to it.
     */
   def compact(spark: SparkSession, path: String, dest: String,
       buckets: Int = 0): Unit = {
     val mf = graft.StoreCommit.compactFrom(spark, Commit, path, dest)
     val b = if (buckets > 0) buckets else bucketsOf(mf)
     graft.StoreCommit.rewrite(spark, Commit, dest,
-      tables(load(spark, path, persistNodes = false), dest, b), manifest(b))
+      tables(load(spark, path), dest, b), rewritten(mf, b))
   }
 
   private def storeTreeIds(spark: SparkSession, path: String): Set[String] =
@@ -249,9 +255,10 @@ object TreeStore {
 
   /** Whether a maintenance pass is due — each [[appendTree]] stacks
     * another file set into every bucket of both big tables, so after k
-    * appends every serving join opens O(k) files per bucket. [[save]] (and so
-    * [[compact]]/[[recoverAppend]], which rewrite through the same
-    * tables) resets the counter to a fresh single-file-per-bucket layout.
+    * appends every serving join opens O(k) files per bucket. [[save]]
+    * restarts the counter; [[compact]] and [[recoverAppend]] keep it and
+    * move the watermark up to it, since both write a fresh
+    * single-file-per-bucket layout.
     */
   def needsCompact(spark: SparkSession, path: String,
       slack: Int = 8): Boolean =
@@ -327,6 +334,14 @@ object TreeStore {
       compactedAt: Long = 1L): String =
     s"""{"version":1,"buckets":$buckets,"ingests":$ingests,""" +
       s""""compacted_at":$compactedAt}"""
+
+  /** The manifest of a fresh layout rewritten from the store whose
+    * manifest is `mf`: its counter, with the watermark on it.
+    */
+  private def rewritten(mf: String, buckets: Int): String = {
+    val n = graft.StoreUtil.ingestsOf(mf)
+    manifest(buckets, n, n)
+  }
 
   private def bucketsOf(mf: String): Int =
     "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(mf)

@@ -195,6 +195,10 @@ class DupStoreSpec extends AnyFunSuite {
     DupStore.compact(spark, dir, dest)
     val cst = DupStore.load(spark, dest)
     assert(cst.hashes.count() == distinctH)
+    // by default no more files than the source has: a small store's
+    // file set must not grow
+    def files(p: String) = StoreUtil.dataFileNames(spark, s"$p/hashes").size
+    assert(files(dest) <= files(dir), s"${files(dest)} > ${files(dir)}")
     assert(spanSet(DupStore.probeSpans(cst, batch, "doc_id", "text"))
       == spansBefore)
     // merged counts preserve the total occurrence mass

@@ -300,6 +300,36 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("compact keeps the tree store's ingests counter and moves the " +
+      "watermark up to it") {
+    val dir = Files.createTempDirectory("graft_store_cnt").toString
+    TreeStore.save(ingested, dir, buckets = 4)
+    // a second tree needs its own tree_id, and ingest refuses annotations
+    // that declare another, so the second append reads a relabelled copy
+    val ann6 = Files.createTempFile("graft_ann6", ".json")
+    Files.writeString(ann6, Files.readString(
+      java.nio.file.Paths.get(s"$fx/gavia2_annotations.json"))
+      .replace("opentree5.0", "opentree6.0"))
+    Seq(("opentree5.0", s"$fx/gavia2_annotations.json"),
+        ("opentree6.0", ann6.toString)).foreach { case (id, ann) =>
+      TreeStore.appendTree(spark, dir, TreeIngest.TreeSource(
+        s"$fx/gavia2.tre", ann, s"$fx/gavia_taxonomy.tsv", id))
+    }
+    val dest = Files.createTempDirectory("graft_store_cnt2").toString
+    TreeStore.compact(spark, dir, dest)
+    val mf = StoreUtil.readMarker(spark, dest, TreeStore.ManifestFile).get
+    assert(StoreUtil.ingestsOf(mf) == 3L, mf)
+    assert(StoreUtil.compactedAtOf(mf) == 3L, mf)
+    assert(!TreeStore.needsCompact(spark, dest, slack = 1))
+    assert(TreeStore.loadMulti(spark, dest).treeIds.toSet ==
+      Set("opentree4.1", "opentree5.0", "opentree6.0"))
+    val ann7 = Files.createTempFile("graft_ann7", ".json")
+    Files.writeString(ann7, Files.readString(ann6).replace("opentree6.0", "opentree7.0"))
+    TreeStore.appendTree(spark, dest, TreeIngest.TreeSource(
+      s"$fx/gavia2.tre", ann7.toString, s"$fx/gavia_taxonomy.tsv", "opentree7.0"))
+    assert(TreeStore.needsCompact(spark, dest, slack = 1))
+  }
+
   test("tree and postings stores surface the compaction nudge — trips " +
       "after slack appends, resets on rewrite") {
     import graft.ops.PostingsStore

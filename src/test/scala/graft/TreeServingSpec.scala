@@ -239,6 +239,208 @@ class TreeServingSpec extends AnyFunSuite {
     }
   }
 
+  test("repeated strings are stored once: map keys, ranks, unique_name " +
+      "and the injected supported_by value") {
+    val infos = t.nodes.select("ot_node_id").collect().map(_.getString(0))
+      .map(idx.nodeInfo(_).get).toSeq
+    def maps(f: String) = infos.flatMap(m => Option(m(f)))
+      .map(_.asInstanceOf[collection.Map[String, Any]])
+    // every equal string among `xs` is one object
+    def oneObjectEach(what: String, xs: Seq[AnyRef]): Unit = {
+      val groups = xs.groupBy(identity).values
+      assert(groups.exists(_.size >= 2), s"$what: no string repeats")
+      groups.foreach(g => assert(g.forall(_ eq g.head), s"$what '${g.head}'"))
+    }
+    oneObjectEach("supported_by key", maps("supported_by").flatMap(_.keys))
+    oneObjectEach("tax_sources key", maps("tax_sources").flatMap(_.keys))
+    oneObjectEach("tax_rank", infos.flatMap(m => Option(m("tax_rank").asInstanceOf[String])))
+    val named = infos.filter(m => m("name") != null && m("name") == m("unique_name"))
+    assert(named.nonEmpty)
+    named.foreach(m => assert(m("unique_name").asInstanceOf[AnyRef] eq m("name").asInstanceOf[AnyRef]))
+    // ingest injects ("ott<taxonomy version>" -> ot_node_id) for each taxon
+    val injected = infos.filter(_("tax_uid") != null).map { m =>
+      val sb = m("supported_by").asInstanceOf[collection.Map[String, Any]]
+      (sb("ott2.9draft12").asInstanceOf[AnyRef], m("ot_node_id").asInstanceOf[AnyRef])
+    }
+    assert(injected.nonEmpty)
+    injected.foreach { case (v, ot) => assert(v eq ot, s"$v") }
+  }
+
+  test("slot-table lookups equal plain maps under the highest-pre rule, on " +
+      "random two-tree frames that share ot and ott ids, with colliding, " +
+      "negative and absent ids, and refusals keep their messages") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val strMap = MapType(StringType, StringType)
+    val arrMap = MapType(StringType, ArrayType(StringType))
+    val schema = StructType(Seq(
+      StructField("node_id", LongType, false), StructField("ot_node_id", StringType),
+      StructField("name", StringType), StructField("unique_name", StringType),
+      StructField("tax_uid", LongType), StructField("tax_rank", StringType),
+      StructField("tax_sources", strMap), StructField("tip_descendants", LongType, false),
+      StructField("depth", LongType, false), StructField("pre", LongType, false),
+      StructField("post", LongType, false), StructField("supported_by", strMap),
+      StructField("terminal", strMap), StructField("partial_path_of", strMap),
+      StructField("resolves", strMap), StructField("conflicts_with", arrMap),
+      StructField("resolved_by", arrMap), StructField("parent_id", LongType, false)))
+    val fields = schema.fieldNames.dropRight(1).toSeq // the Row views' fields
+    val formats = Seq(("name_and_id", false), ("name", true), ("id", true))
+    (0 until 4).foreach { seed =>
+      val rnd = new Random(600L + seed)
+      val sizes = Seq(20 + rnd.nextInt(40), 20 + rnd.nextInt(40))
+      val total = sizes.sum
+      // keys whose probes start at one slot of the index's tables, and keys
+      // equal modulo the table size
+      val slots = new TreeServing.Slots(total)
+      val width = slots.at.length.toLong
+      val home = slots.home(java.lang.Long.hashCode(-77L))
+      val sameHome = Iterator.from(0).map(_.toLong)
+        .filter(x => slots.home(java.lang.Long.hashCode(x)) == home).take(40).toIndexedSeq
+      val sameHomeOt = Iterator.from(0).map(i => s"c$i")
+        .filter(x => slots.home(x.hashCode) == home).take(40).toIndexedSeq
+      val congruent = (1L to 40L).map(m => 5L + m * width)
+      val uidPool = sameHome ++ congruent ++ (1L to 10L).map(-_) :+ -77L
+      val nodeIds = rnd.shuffle((sameHome ++ congruent ++
+        (2L to 60L).map(m => -m * width - 3)).distinct).take(total).toIndexedSeq
+      require(nodeIds.size == total && !nodeIds.contains(-1L))
+      val sources = (1 to 6).map(i => s"pg_$i@tree$i")
+      final case class N(tree: Int, nodeId: Long, parent: Int, ot: String,
+          uid: Option[Long], row: Row)
+      val nodes = collection.mutable.ArrayBuffer.empty[N] // in pre order
+      // new ot ids probe from one slot, the last five kept absent
+      val freshOt = sameHomeOt.dropRight(5).iterator ++ Iterator.from(0).map(i => s"ott$i")
+      sizes.zipWithIndex.foreach { case (n, tr) =>
+        val parentOf = Array.tabulate(n)(i => if (i == 0) -1 else rnd.nextInt(i))
+        val kids = (1 until n).groupBy(parentOf(_))
+        def tips(i: Int): Long = kids.get(i).fold(1L)(_.map(tips).sum)
+        val treeA = nodes.toIndexedSeq
+        def dfs(i: Int, parentPos: Int, depth: Long): Unit = {
+          val pos = nodes.size
+          val ot =
+            if (treeA.nonEmpty && rnd.nextInt(3) == 0) treeA(rnd.nextInt(treeA.size)).ot
+            else freshOt.next()
+          val uid =
+            if (rnd.nextInt(4) == 0) None
+            else if (treeA.nonEmpty && rnd.nextInt(3) == 0) treeA(rnd.nextInt(treeA.size)).uid
+            else Some(uidPool(rnd.nextInt(uidPool.size)))
+          val name = if (rnd.nextInt(5) < 2) null else s"Taxon $pos (x)"
+          val uniq = rnd.nextInt(3) match { case 0 => name; case 1 => null; case _ => s"u$pos" }
+          val sb = if (rnd.nextInt(4) == 0) null else
+            (Seq.fill(1 + rnd.nextInt(3))(sources(rnd.nextInt(6)) -> s"node${rnd.nextInt(9)}") ++
+              uid.map(_ => "ott3.0" -> ot)).toMap
+          val cw = if (rnd.nextBoolean()) null
+            else Map(sources(rnd.nextInt(6)) -> Seq(s"node$pos", "nodeX"))
+          nodes += N(tr, nodeIds(pos), parentPos, ot, uid, null)
+          kids.getOrElse(i, Nil).foreach(c => dfs(c, pos, depth + 1))
+          val post = nodes.size - 1L
+          nodes(pos) = nodes(pos).copy(row = Row(nodeIds(pos), ot, name, uniq,
+            uid.map(java.lang.Long.valueOf).orNull, Seq(null, "genus", "species")(rnd.nextInt(3)),
+            uid.map(u => Map("ncbi" -> u.toString, "gbif" -> (u + 7).toString)).orNull,
+            tips(i), depth, pos.toLong, post, sb, null, null, null, cw, null,
+            if (parentPos < 0) -1L else nodeIds(parentPos)))
+        }
+        dfs(0, -1, 0L)
+      }
+      val frame = spark.createDataFrame(
+        java.util.Arrays.asList(nodes.map(_.row).toSeq: _*), schema)
+      val idx = TreeServing.build(frame)
+      val labels = frame.orderBy("pre").select(formats.map { case (f, u) =>
+        TreeOps.formattedLabel(f, u) }: _*).collect().map(r => (0 until 3).map(r.getString))
+      val rows = frame.orderBy("pre").select(fields.map(col): _*).collect()
+
+      // the reference: plain maps, a later (higher-pre) row replacing an
+      // earlier one with the same key
+      val byOt = nodes.indices.map(k => nodes(k).ot -> k).toMap
+      val byUid = nodes.indices.flatMap(k => nodes(k).uid.map(_ -> k)).toMap
+      val byId = nodes.indices.map(k => nodes(k).nodeId -> k).toMap
+      def path(k: Int): List[Int] = // root first
+        if (k < 0) Nil else path(nodes(k).parent) :+ k
+      def info(k: Int): Map[String, Any] = {
+        val a = fields.zip(rows(k).toSeq).toMap
+        Map("ot_node_id" -> a("ot_node_id"), "name" -> a("name"),
+          "unique_name" -> a("unique_name"), "tax_uid" -> a("tax_uid"),
+          "tax_rank" -> a("tax_rank"), "tax_sources" -> a("tax_sources"),
+          "num_tips" -> a("tip_descendants"),
+          "lineage" -> path(k).reverse.tail.map(nodes(_).ot)) ++
+          Seq("supported_by", "terminal", "partial_path_of", "resolves",
+            "conflicts_with", "resolved_by").map(f => f -> a(f))
+      }
+      def taxon(k: Int) = TreeApi.TaxonBlob(rows(k).getString(2), rows(k).getString(5),
+        rows(k).getString(3), nodes(k).uid)
+      def refMrca(ids: Seq[String], otts: Seq[Long]): TreeApi.MrcaResult = {
+        val found = ids.flatMap(byOt.get) ++ otts.flatMap(byUid.get)
+        require(found.nonEmpty, "no valid node or ott ids provided")
+        val common = found.map(path).reduce((a, b) => a.zip(b).takeWhile(p => p._1 == p._2).map(_._1))
+        require(common.nonEmpty, "query nodes do not share a root (different trees?)")
+        val m = common.last
+        val nearest = path(m).reverse.find(nodes(_).uid.isDefined)
+        val (badNodes, badOtts) = (ids.filterNot(byOt.contains), otts.filterNot(byUid.contains))
+        val name = Option(rows(m).getString(2))
+        TreeApi.MrcaResult(nodes(m).ot, name,
+          if (name.isEmpty) nearest.map(nodes(_).ot) else None, badNodes, badOtts,
+          ok = badNodes.isEmpty && badOtts.isEmpty,
+          mrcaTaxon = if (name.isDefined) Some(taxon(m)) else None,
+          nearestTaxon = nearest.map(taxon))
+      }
+      def refInduced(ids: Seq[String], otts: Seq[Long], f: Int): TreeApi.InducedResult = {
+        val found = (ids.flatMap(byOt.get) ++ otts.flatMap(byUid.get)).distinct
+        require(found.size >= 2, s"at least 2 valid ids required, got ${found.size}")
+        val edges = TreeApi.inducedEdges(found.map(k => k.toLong -> path(k).map(_.toLong)))
+        val nwk = TreeOps.assembleNewick(edges.map { case (k, p, _) =>
+          (k, p, k, labels(k.toInt)(f)) }.toArray)
+        val (badNodes, badOtts) = (ids.filterNot(byOt.contains), otts.filterNot(byUid.contains))
+        TreeApi.InducedResult(nwk, badNodes, badOtts, badNodes.isEmpty && badOtts.isEmpty)
+      }
+      def same(what: String)(got: => Any, want: => Any): Unit = (Try(got), Try(want)) match {
+        case (Failure(a), Failure(b)) =>
+          assert(a.getClass == b.getClass && a.getMessage == b.getMessage,
+            s"seed $seed, $what: index threw $a, reference $b")
+        case (a, b) => assert(a == b, s"seed $seed, $what")
+      }
+
+      val absentOt = sameHomeOt.takeRight(5) ++ Seq("nope", "")
+      val absentLong = Seq(-1L, 0L, width, -width, Long.MinValue, Long.MaxValue) ++
+        Iterator.from(1000).map(_.toLong).filter(x => slots.home(java.lang.Long.hashCode(x)) == home)
+          .take(5)
+      (nodes.map(_.ot) ++ absentOt).distinct.foreach { ot =>
+        same(s"byOtId($ot)")(idx.byOtId(ot), byOt.get(ot).map(rows(_)))
+        same(s"nodeInfo($ot)")(idx.nodeInfo(ot, includeLineage = true), byOt.get(ot).map(info))
+      }
+      (uidPool ++ absentLong).distinct.foreach { u =>
+        same(s"byOttId($u)")(idx.byOttId(u), byUid.get(u).map(rows(_)))
+      }
+      (nodeIds ++ absentLong).distinct.foreach { id =>
+        same(s"byNodeId($id)")(idx.byNodeId(id), byId.get(id).map(rows(_)))
+        same(s"interval($id)")(idx.interval(id),
+          byId.get(id).map(k => (rows(k).getLong(9), rows(k).getLong(10))))
+      }
+      def shared[K](key: N => Option[K]) =
+        nodes.filter(_.tree == 0).flatMap(key).toSet
+          .intersect(nodes.filter(_.tree == 1).flatMap(key).toSet)
+      assert(shared(n => Some(n.ot)).nonEmpty && shared(_.uid).nonEmpty,
+        s"seed $seed: the trees share no ot or ott id")
+      val refusals = collection.mutable.Set.empty[String]
+      def kind(e: Throwable) = e.getMessage.replaceAll("\\d+", "N")
+      (1 to 150).foreach { _ =>
+        val ids = Seq.fill(rnd.nextInt(5))(
+          if (rnd.nextInt(6) == 0) absentOt(rnd.nextInt(absentOt.size))
+          else nodes(rnd.nextInt(nodes.size)).ot)
+        val otts = Seq.fill(rnd.nextInt(4))(
+          if (rnd.nextInt(6) == 0) absentLong(rnd.nextInt(absentLong.size))
+          else uidPool(rnd.nextInt(uidPool.size)))
+        same(s"mrca($ids, $otts)")(idx.mrca(ids, otts), refMrca(ids, otts))
+        Try(refMrca(ids, otts)).failed.foreach(refusals += kind(_))
+        formats.indices.foreach { f =>
+          same(s"inducedSubtree($ids, $otts, ${formats(f)})")(
+            idx.inducedSubtree(ids, otts, formats(f)._1, formats(f)._2),
+            refInduced(ids, otts, f))
+          Try(refInduced(ids, otts, f)).failed.foreach(refusals += kind(_))
+        }
+      }
+      assert(refusals.size >= 3, s"seed $seed: refusals seen: $refusals")
+    }
+  }
+
   /** Ingest a random tree: node i > 0 hangs under `parent(i, rnd)` < i.
     * Every third node is a named taxon whose name needs scrubbing; the
     * others are unnamed, and a few of those carry an ott id the taxonomy
