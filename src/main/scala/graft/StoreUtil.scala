@@ -683,13 +683,11 @@ object StoreUtil {
       .filterNot(n => n.startsWith("_") || n.startsWith("."))
 
   /** The file count a merging compaction writes for the table at `dir`:
-    * `files` when positive, else the table's own data-file count capped
-    * at `cap`, so compacting a small store never grows its file set.
+    * the table's own data-file count capped at `cap`, so compacting a
+    * small store never grows its file set.
     */
-  def compactFiles(spark: SparkSession, dir: String, files: Int,
-      cap: Int): Int =
-    if (files > 0) files
-    else math.max(1, math.min(cap, dataFileNames(spark, dir).size))
+  def compactFiles(spark: SparkSession, dir: String, cap: Int): Int =
+    math.max(1, math.min(cap, dataFileNames(spark, dir).size))
 
   def readMarker(spark: SparkSession, dir: String,
       name: String): Option[String] = {

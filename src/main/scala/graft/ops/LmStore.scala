@@ -116,18 +116,16 @@ object LmStore {
     * counts sum, so a store that folded k batches goes back to one row
     * per n-gram (merged rows carry tag −1/seq 0, the [[DupStore]]
     * convention: compaction of a healthy store has no live rollback
-    * identity). Each table is written as `files` files; by default
-    * (0) as many as the source table has, at most 8.
+    * identity). Each table keeps the source table's file count, at
+    * most 8.
     */
-  def compact(spark: SparkSession, path: String, dest: String,
-      files: Int = 0): Unit = {
-    require(files >= 0, s"files must be >= 0, got $files")
+  def compact(spark: SparkSession, path: String, dest: String): Unit = {
     def merge(t: String, keys: Seq[String]): (String, () => Unit) =
       t -> (() => spark.read.parquet(s"$path/$t")
         .groupBy(keys.map(col): _*).agg(sum(col("c")).as("c"))
         .select(keys.map(col) :+ col("c") :+
           lit(-1L).as("ingest_batch") :+ lit(0L).as("ingest_seq"): _*)
-        .repartition(graft.StoreUtil.compactFiles(spark, s"$path/$t", files, 8))
+        .repartition(graft.StoreUtil.compactFiles(spark, s"$path/$t", 8))
         .write.mode("overwrite").parquet(s"$dest/$t"))
     graft.StoreCommit.compact(spark, Commit, path, dest) { _ =>
       Seq(merge("uni", Seq("w")), merge("bi", Seq("w1", "w2")),

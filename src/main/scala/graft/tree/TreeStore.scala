@@ -69,8 +69,8 @@ object TreeStore {
     * exchange-free. The nodes table is not cached by default: a served
     * store answers its requests from [[TreeServing.build]]'s index, and a
     * cached copy would hold the tree in driver memory twice (about 480
-    * bytes a node at 18k nodes). Pass `persistNodes = true` when the
-    * frame itself takes repeated Spark actions and no index is built.
+    * bytes a node at 18k nodes). No caller caches it any more;
+    * `persistNodes` stays only because perfbench's `TolServe` passes it.
     */
   def load(spark: SparkSession, path: String,
       persistNodes: Boolean = false): TreeIngest.Ingested = {

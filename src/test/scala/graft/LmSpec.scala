@@ -216,12 +216,12 @@ class LmSpec extends AnyFunSuite {
       .toString + "/lm"
     LmStore.compact(spark, dir, cd)
     assert(!LmStore.needsCompact(spark, cd, slack = 1))
-    // by default a compaction writes no more files than the source
-    // table has: compacting this small store must not grow its file sets
+    // a compaction writes as many files as the source table has (under
+    // the cap): compacting this small store must not grow its file sets
     Seq("uni", "bi", "tri").foreach { t =>
       def files(p: String) =
         graft.StoreUtil.dataFileNames(spark, s"$p/$t").size
-      assert(files(cd) <= files(dir), s"$t: ${files(cd)} > ${files(dir)}")
+      assert(files(cd) == files(dir), s"$t: ${files(cd)} != ${files(dir)}")
     }
     // the watermark survives further folds and re-triggers at slack
     LmStore.ingestBatch(spark, cd, docs.filter(col("doc_id") % 3 === 0),
@@ -233,5 +233,32 @@ class LmSpec extends AnyFunSuite {
     LmStore.ingestBatch(spark, cd, docs.filter(col("doc_id") % 3 === 0),
       "text", Some(3L))
     assert(spark.read.parquet(s"$cd/uni").count() == before)
+  }
+
+  test("LM store: compaction caps each table's file count at 8") {
+    import graft.ops.LmStore
+    val docs = Tables.documents(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lmcap")
+      .toString + "/lm"
+    LmStore.ingestBatch(spark, dir, docs, "text", Some(0L))
+    def files(p: String, t: String) =
+      graft.StoreUtil.dataFileNames(spark, s"$p/$t").size
+    // spread the source's uni rows over 12 files, rows unchanged
+    val spread = s"$dir/uni_spread"
+    spark.read.parquet(s"$dir/uni").repartition(12)
+      .write.parquet(spread)
+    graft.StoreUtil.deleteDir(spark, s"$dir/uni")
+    java.nio.file.Files.move(java.nio.file.Paths.get(spread),
+      java.nio.file.Paths.get(s"$dir/uni"))
+    assert(files(dir, "uni") == 12)
+    val cd = java.nio.file.Files.createTempDirectory("graft_lmcapc")
+      .toString + "/lm"
+    LmStore.compact(spark, dir, cd)
+    assert(files(cd, "uni") == 8)
+    Seq("bi", "tri").foreach(t =>
+      assert(files(cd, t) == math.min(8, files(dir, t)), t))
+    def counts(p: String) = spark.read.parquet(s"$p/uni")
+      .groupBy("w").agg(sum("c").as("c")).collect().toSet
+    assert(counts(cd) == counts(dir))
   }
 }

@@ -110,7 +110,7 @@ class StoreCommitSpec extends AnyFunSuite {
       "doc_id", "text", batchId = Some(0L)),
     d => DupStore.ingestBatch(spark, d, docs.filter(col("doc_id") >= 20),
       "doc_id", "text", batchId = Some(1L)),
-    DupStore.recoverIngest(spark, _, _), DupStore.compact(spark, _, _, 2),
+    DupStore.recoverIngest(spark, _, _), DupStore.compact(spark, _, _),
     Seq(DupStore.load(spark, _), DupStore.needsCompact(spark, _)),
     Some(DupStore.exists(spark, _)), keepsCompleted = true, _ => "-2")
 
@@ -120,7 +120,7 @@ class StoreCommitSpec extends AnyFunSuite {
       "text", Some(0L)),
     d => LmStore.ingestBatch(spark, d, docs.filter(col("doc_id") >= 20),
       "text", Some(1L)),
-    LmStore.recoverIngest(spark, _, _), LmStore.compact(spark, _, _, 2),
+    LmStore.recoverIngest(spark, _, _), LmStore.compact(spark, _, _),
     Seq(LmStore.load(spark, _), LmStore.needsCompact(spark, _)),
     Some(LmStore.exists(spark, _)), keepsCompleted = true, _ => "1:x")
 

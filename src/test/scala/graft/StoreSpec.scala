@@ -153,14 +153,14 @@ class StoreSpec extends AnyFunSuite {
   test("appendTree adds a tree incrementally without touching the first") {
     val dir = Files.createTempDirectory("graft_store_append").toString
     TreeStore.save(ingested, dir, buckets = 4)
-    val before = TreeStore.load(spark, dir, persistNodes = false).nodes
+    val before = TreeStore.load(spark, dir).nodes
       .select("node_id", "pre", "post", "depth", "ancestors")
       .collect().map(_.toSeq).toSet
 
     TreeStore.appendTree(spark, dir, TreeIngest.TreeSource(
       s"$fx/gavia2.tre", s"$fx/gavia2_annotations.json",
       s"$fx/gavia_taxonomy.tsv", "opentree5.0"))
-    val m = TreeStore.loadMulti(spark, dir, persistNodes = false)
+    val m = TreeStore.loadMulti(spark, dir)
     assert(m.treeIds.toSet == Set("opentree4.1", "opentree5.0"))
 
     // the first tree's rows are bit-unchanged — append never relabels
@@ -211,7 +211,7 @@ class StoreSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("collides"))
     // the failed append must not have corrupted the store
-    val after = TreeStore.load(spark, dir, persistNodes = false)
+    val after = TreeStore.load(spark, dir)
     assert(after.nodes.count() == ingested.nodes.count())
 
     // a duplicate tree_id is refused even when the id space is disjoint
@@ -261,10 +261,10 @@ class StoreSpec extends AnyFunSuite {
           (col("pre") - minPre).as("rpre"), (col("post") - minPre).as("rpost"))
         .collect().map(_.toSeq).toSet
     }
-    val served = TreeStore.loadMulti(spark, dir, persistNodes = false).tree("tB")
+    val served = TreeStore.loadMulti(spark, dir).tree("tB")
     assert(sig(served.nodes) == sig(b.nodes))
     // and the first tree is still bit-identical to its own ingest
-    val servedA = TreeStore.loadMulti(spark, dir, persistNodes = false).tree("tA")
+    val servedA = TreeStore.loadMulti(spark, dir).tree("tA")
     assert(sig(servedA.nodes) == sig(a.nodes))
   }
 
@@ -285,11 +285,11 @@ class StoreSpec extends AnyFunSuite {
     // the headline invariant: at most one file per (4) buckets
     assert(nodeFiles(dest) <= 4, s"${nodeFiles(dest)} files for 4 buckets")
     // the inherited bucket spec is readable (manifest says 4)
-    val reloaded = TreeStore.load(spark, dest, persistNodes = false)
+    val reloaded = TreeStore.load(spark, dest)
     assert(reloaded.nodes.count() > 0)
     // contents and per-tree views survive the rewrite
-    val a = TreeStore.loadMulti(spark, dir, persistNodes = false)
-    val b = TreeStore.loadMulti(spark, dest, persistNodes = false)
+    val a = TreeStore.loadMulti(spark, dir)
+    val b = TreeStore.loadMulti(spark, dest)
     assert(b.treeIds.toSet == a.treeIds.toSet)
     assert(b.nodes.count() == a.nodes.count())
     val cols = Seq("node_id", "pre", "post", "depth").map(col)
@@ -383,7 +383,7 @@ class StoreSpec extends AnyFunSuite {
     // the store — asserted on the executed plan's bucket pruning
     val dir = Files.createTempDirectory("graft_store_prune").toString
     TreeStore.save(ingested, dir, buckets = 4)
-    val st = TreeStore.load(spark, dir, persistNodes = false)
+    val st = TreeStore.load(spark, dir)
     val id = idOf(ingested, "ott1085739")
     // the auto-disable rule drops bucketed scans that feed no join/agg —
     // a point-lookup serving path pins it off so the bucket FILTER (the
@@ -402,7 +402,7 @@ class StoreSpec extends AnyFunSuite {
   test("interrupted append is detected at load and recoverable") {
     val dir = Files.createTempDirectory("graft_store_pend").toString
     TreeStore.save(ingested, dir, buckets = 4)
-    val cleanRows = TreeStore.load(spark, dir, persistNodes = false)
+    val cleanRows = TreeStore.load(spark, dir)
       .nodes.count()
     // a completed append clears its pending marker...
     TreeStore.appendTree(spark, dir, TreeIngest.TreeSource(
@@ -418,7 +418,7 @@ class StoreSpec extends AnyFunSuite {
     // marker for the second tree is left behind
     StoreUtil.writeMarker(spark, dir, TreeStore.PendingFile, "opentree5.0")
     val ex = intercept[IllegalStateException] {
-      TreeStore.load(spark, dir, persistNodes = false)
+      TreeStore.load(spark, dir)
     }
     assert(ex.getMessage.contains("interrupted append"))
     // a further append must ALSO refuse: completing it would delete the
@@ -433,7 +433,7 @@ class StoreSpec extends AnyFunSuite {
     // into a clean store at dest (the damaged source is never mutated)
     val dest = Files.createTempDirectory("graft_store_pend2").toString
     TreeStore.recoverAppend(spark, dir, dest)
-    val rec = TreeStore.loadMulti(spark, dest, persistNodes = false)
+    val rec = TreeStore.loadMulti(spark, dest)
     assert(rec.treeIds == Seq("opentree4.1"))
     assert(rec.nodes.count() == cleanRows)
     assert(rec.nodes.filter(col("tree_id") === "opentree5.0").count() == 0L)
@@ -444,7 +444,7 @@ class StoreSpec extends AnyFunSuite {
     // a full rebuild over the damaged path supersedes the crashed append:
     // save() clears the stale marker, so the fresh store loads
     TreeStore.save(ingested, dir, buckets = 4)
-    assert(TreeStore.load(spark, dir, persistNodes = false).nodes.count()
+    assert(TreeStore.load(spark, dir).nodes.count()
       == cleanRows)
   }
 
@@ -792,7 +792,7 @@ class StoreSpec extends AnyFunSuite {
     // hide the FileSourceScan (and its "Bucketed: true") behind the cache
     val dir = Files.createTempDirectory("graft_store_plan").toString
     TreeStore.save(ingested, dir, buckets = 4)
-    val st = TreeStore.load(spark, dir, persistNodes = false)
+    val st = TreeStore.load(spark, dir)
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -760,8 +760,7 @@ class StreamingSpec extends AnyFunSuite {
       if (m == 0) graft.tree.TreeStore.save(t, oneDir, buckets = 4)
       else graft.tree.TreeStore.appendIngested(spark, oneDir, t)
     }
-    def sig(p: String) = graft.tree.TreeStore.loadMulti(spark, p,
-        persistNodes = false).nodes
+    def sig(p: String) = graft.tree.TreeStore.loadMulti(spark, p).nodes
       .select("node_id", "pre", "post", "depth", "tree_id")
       .collect().map(_.toSeq).toSet
     val got = sig(current)
