@@ -9,6 +9,18 @@ import org.apache.spark.sql.types._
   * `tree_meta`, `source_map` DataFrames (reference flow:
   * IngestSynthesisData.java:92-143).
   *
+  * Ingest starts no Spark job. The driver reads each input file once, as
+  * the reference does ([[IngestFiles]]): the newick is parsed in one
+  * string (TreeReader.java:20-143), the annotations JSON is streamed once
+  * for the tree-level fields, the source map and the tree's node entries
+  * (IngestSynthesisData.java:277-287), and the taxonomy TSV is streamed
+  * line by line keeping only the tree's `ott<uid>` rows
+  * (IngestSynthesisData.java:161-180,184-274). The node rows are then
+  * built in one stage from a broadcast of per-node arrays (the labels of
+  * [[labelParsed]] plus the taxonomy and annotation payloads), with no
+  * join; `tree_meta` and `source_map` are local relations. `nodes` is
+  * persisted lazily, so the first store write runs that stage once.
+  *
   * Deliberate departures from the reference (SURVEY §1.3 "wart to NOT
   * replicate"): annotation maps/arrays are stored as native MapType/
   * ArrayType columns instead of `:`/`,`/`&`-packed strings
@@ -48,7 +60,7 @@ object TreeIngest {
     * IngestSynthesisData.java:462-498). Sources of map-of-array fields keep
     * their arrays (reference flattens them into '&'-packed strings).
     */
-  val annotationSchema: DataType = MapType(StringType, StructType(Seq(
+  val annotationStruct: StructType = StructType(Seq(
     StructField("supported_by", MapType(StringType, StringType)),
     StructField("terminal", MapType(StringType, StringType)),
     StructField("partial_path_of", MapType(StringType, StringType)),
@@ -56,10 +68,9 @@ object TreeIngest {
     StructField("conflicts_with", MapType(StringType, ArrayType(StringType))),
     StructField("resolved_by", MapType(StringType, ArrayType(StringType))),
     StructField("was_constrained", BooleanType),
-    StructField("was_uncontested", BooleanType))))
+    StructField("was_uncontested", BooleanType)))
 
-  val sourceMapSchema: DataType =
-    MapType(StringType, MapType(StringType, StringType))
+  val annotationSchema: DataType = MapType(StringType, annotationStruct)
 
   /** One source synth tree for [[ingestAll]]. */
   final case class TreeSource(newickPath: String, annotationsPath: String,
@@ -86,51 +97,25 @@ object TreeIngest {
   }
 
   /** Parse the newick (driver-side: it is one string, as in the reference,
-    * TreeReader.java:20-143) and label it with [[labelParsed]]: the parse
-    * already holds the tree in preorder on the driver, so labeling is one
-    * O(n) sweep, not the distributed pointer doubling of [[TreeLabeler]].
+    * TreeReader.java:20-143) and ingest it with [[ingestParsed]].
     */
   def ingest(spark: SparkSession, newickPath: String, annotationsPath: String,
-      taxonomyPath: String, treeId: String): Ingested = {
-    val parsed = Newick.parse(readWhole(spark, newickPath))
-    ingestParsed(spark, parsed, annotationsPath, taxonomyPath, treeId)
-  }
-
-  private def readWhole(spark: SparkSession, path: String): String =
-    spark.read.option("wholetext", "true").text(path)
-      .head().getString(0).trim
+      taxonomyPath: String, treeId: String): Ingested =
+    ingestParsed(spark, Newick.parse(IngestFiles.readText(spark, newickPath)),
+      annotationsPath, taxonomyPath, treeId)
 
   /** Ingest several synth trees into one store: disjoint node ids, one
-    * forest labeling pass, per-tree attribute joins, unioned tables.
+    * forest labeling pass and one row-building stage for all of them.
     */
   def ingestAll(spark: SparkSession, sources: Seq[TreeSource]): MultiIngested = {
     var offset = 0L
-    val perTree = sources.map { src =>
-      val parsed = Newick.parse(readWhole(spark, src.newickPath))
-      val shifted = parsed.map(p => p.copy(
-        nodeId = p.nodeId + offset,
-        parentId = if (p.parentId < 0) -1L else p.parentId + offset))
-      val lo = offset
+    val parts = sources.map { src =>
+      val parsed = shift(Newick.parse(IngestFiles.readText(spark, src.newickPath)), offset)
       offset += parsed.length
-      (src, shifted, lo, offset)
+      Part(parsed, src)
     }
-    val edgesAll = perTree.map { case (src, shifted, _, _) =>
-      edgesOf(spark, parsedDf(spark, shifted), src.treeId)
-    }.reduce(_ unionByName _)
-    // the shifted trees concatenate to one preorder forest: `pre` is the
-    // global index, so each tree's interval block is contiguous
-    val labeled = labelParsed(spark, perTree.flatMap(_._2).toIndexedSeq)
-    val parts = perTree.map { case (src, shifted, lo, hi) =>
-      val sub = labeled.filter(col("node_id") >= lo && col("node_id") < hi)
-      attach(spark, sub, parsedDf(spark, shifted),
-        edgesAll.filter(col("tree_id") === src.treeId),
-        src.annotationsPath, src.taxonomyPath, src.treeId)
-    }
-    MultiIngested(
-      parts.map(_.nodes).reduce(_ unionByName _),
-      parts.map(_.edges).reduce(_ unionByName _),
-      parts.map(_.treeMeta).reduce(_ unionByName _),
-      parts.map(_.sourceMap).reduce(_ unionByName _))
+    val t = build(spark, parts)
+    MultiIngested(t.nodes, t.edges, t.treeMeta, t.sourceMap)
   }
 
   /** Ingest ONE tree with its node-id space shifted above `idOffset` —
@@ -140,32 +125,29 @@ object TreeIngest {
     * MainRunner.java:49-57).
     */
   def ingestOffset(spark: SparkSession, src: TreeSource,
-      idOffset: Long): Ingested = {
-    val parsed = Newick.parse(readWhole(spark, src.newickPath))
-    val shifted = parsed.map(p => p.copy(
-      nodeId = p.nodeId + idOffset,
-      parentId = if (p.parentId < 0) -1L else p.parentId + idOffset))
-    ingestParsed(spark, shifted, src.annotationsPath, src.taxonomyPath,
-      src.treeId)
-  }
+      idOffset: Long): Ingested =
+    build(spark, Seq(Part(shift(Newick.parse(
+      IngestFiles.readText(spark, src.newickPath)), idOffset), src)))
 
-  private def parsedDf(spark: SparkSession, parsed: IndexedSeq[ParsedNode]): DataFrame =
-    spark.createDataFrame(parsed).withColumnRenamed("label", "ot_node_id")
+  /** Ingest a parsed tree with its side files; starts no Spark job. */
+  def ingestParsed(spark: SparkSession, parsed: IndexedSeq[ParsedNode],
+      annotationsPath: String, taxonomyPath: String, treeId: String): Ingested =
+    build(spark, Seq(Part(parsed,
+      TreeSource(null, annotationsPath, taxonomyPath, treeId))))
 
-  private def edgesOf(spark: SparkSession, parsedDf: DataFrame, treeId: String): DataFrame =
-    parsedDf.filter(col("parentId") >= 0)
+  private final case class Part(parsed: IndexedSeq[ParsedNode], src: TreeSource)
+
+  private def shift(parsed: IndexedSeq[ParsedNode], by: Long): IndexedSeq[ParsedNode] =
+    if (by == 0L) parsed
+    else parsed.map(p => p.copy(nodeId = p.nodeId + by,
+      parentId = if (p.parentId < 0) -1L else p.parentId + by))
+
+  private def edgesOf(spark: SparkSession, parsed: IndexedSeq[ParsedNode],
+      treeId: String): DataFrame =
+    spark.createDataFrame(parsed).filter(col("parentId") >= 0)
       .select(col("nodeId").as("child_id"), col("parentId").as("parent_id"),
         col("childOrd").as("child_ord"), col("branchLength").as("branch_length"))
       .withColumn("tree_id", lit(treeId))
-
-  def ingestParsed(spark: SparkSession, parsed: IndexedSeq[ParsedNode],
-      annotationsPath: String, taxonomyPath: String, treeId: String): Ingested = {
-    val pdf = parsedDf(spark, parsed)
-    val edges = edgesOf(spark, pdf, treeId)
-    // ---- labeling pass (depth/pre/post/ancestors/tip_descendants)
-    val labeled = labelParsed(spark, parsed)
-    attach(spark, labeled, pdf, edges, annotationsPath, taxonomyPath, treeId)
-  }
 
   /** Per-node labels of a preorder forest, by array index, shipped to the
     * tasks that build the rows. `parent` is an index (-1 at a root).
@@ -192,6 +174,179 @@ object TreeIngest {
     StructField("tip_descendants", LongType, nullable = true),
     StructField("n_desc", LongType, nullable = false)))
 
+  /** The `nodes` table: ot id and taxon id, the labels, the branch to the
+    * parent, the taxonomy row and the annotation entry, the tree id — the
+    * columns, order and nullability the join-based ingest produced.
+    */
+  private val nodesSchema = StructType(
+    Seq(StructField("ot_node_id", StringType), StructField("tax_uid", LongType)) ++
+      labeledSchema.fields ++
+      Seq(StructField("branch_length", DoubleType),
+        StructField("parent_uid", LongType),
+        StructField("name", StringType),
+        StructField("tax_rank", StringType),
+        StructField("tax_sources", MapType(StringType, StringType)),
+        StructField("unique_name", StringType),
+        StructField("flags", StringType)) ++
+      annotationStruct.fields ++
+      Seq(StructField("tree_id", StringType, nullable = false)))
+
+  private val treeMetaSchema = StructType(Seq(
+    StructField("tree_id", StringType, nullable = false),
+    StructField("date_completed", StringType),
+    StructField("taxonomy_version", StringType),
+    StructField("num_tips", LongType),
+    StructField("num_source_studies", LongType),
+    StructField("num_source_trees", LongType),
+    StructField("filtered_flags", ArrayType(StringType)),
+    StructField("sources", ArrayType(StringType)),
+    StructField("root_ot_node_id", StringType, nullable = false)))
+
+  private val sourceMapColumns = StructType(Seq(
+    "source_id", "git_sha", "source_tree_id", "study_id", "taxonomy")
+    .map(StructField(_, StringType)) :+
+    StructField("tree_id", StringType, nullable = false))
+
+  /** The taxon id of an `ott<uid>` ot id, null for any other label (the
+    * regex and cast of the reference's `ott` prefix test).
+    */
+  private[tree] def ottUid(label: String): java.lang.Long = {
+    val m = OttId.matcher(label)
+    if (!m.find()) null
+    else try java.lang.Long.valueOf(m.group(1))
+    catch { case _: NumberFormatException => throw new IllegalArgumentException(
+      s"node label '$label' names an ott id that does not fit a 64-bit integer") }
+  }
+  private val OttId = java.util.regex.Pattern.compile("^ott(\\d+)$")
+
+  /** What the row-building tasks read, by forest position: the labels,
+    * the ot and taxon ids, the branch lengths (NaN when absent, null at a
+    * root), and the index of each node's taxonomy line and annotation
+    * entry (-1: none). Trees are the blocks from `starts`, each with its
+    * id and its `ott<taxonomy_version>` support key.
+    */
+  private final case class Payload(sweep: Sweep, label: Array[String],
+      taxUid: Array[Long], branchLength: Array[Double],
+      taxRow: Array[Int], taxLines: Texts, annRow: Array[Int], entries: Texts,
+      starts: Array[Int], treeIds: Array[String], ottKeys: Array[String])
+
+  /** Ingest trees whose parses concatenate to one preorder forest: read
+    * each tree's side files once on the driver, then build the four
+    * tables without a Spark job.
+    */
+  private def build(spark: SparkSession, parts: Seq[Part]): Ingested = {
+    val parsed = parts.flatMap(_.parsed).toIndexedSeq
+    val n = parsed.length
+    val label = parsed.map(_.label).toArray
+    val taxUid = label.map { l => val u = ottUid(l); if (u == null) -1L else u.longValue }
+    val taxRow = Array.fill(n)(-1)
+    val annRow = Array.fill(n)(-1)
+    val taxLines = new TextsBuilder
+    val entries = new TextsBuilder
+    val metaRows = new java.util.ArrayList[Row]()
+    val sourceRows = new java.util.ArrayList[Row]()
+    val starts = parts.scanLeft(0)(_ + _.parsed.length).init.toArray
+    val ottKeys = parts.zip(starts).map { case (Part(tree, src), lo) =>
+      val range = lo until lo + tree.length
+      val rowOf = new java.util.HashMap[java.lang.Long, Integer]()
+      val entryOf = new java.util.HashMap[String, Integer]()
+      range.foreach { i =>
+        if (taxUid(i) >= 0) rowOf.put(taxUid(i), -1)
+        entryOf.put(label(i), -1)
+      }
+      IngestFiles.readTaxonomy(spark, src.taxonomyPath, rowOf, taxLines)
+      val head = IngestFiles.readAnnotations(spark, src.annotationsPath, entryOf, entries)
+      range.foreach { i =>
+        if (taxUid(i) >= 0) taxRow(i) = rowOf.get(taxUid(i))
+        annRow(i) = entryOf.get(label(i))
+      }
+      // the annotations' declared tree_id must AGREE with the caller's:
+      // every table is stamped with the param, so a silent mismatch would
+      // leave tree_meta keyed differently from every other table
+      val declaredId = head.treeId
+      require(declaredId == null || declaredId == src.treeId,
+        s"annotations declare tree_id '$declaredId' but ingest was called " +
+          s"with treeId '${src.treeId}' — the store tables would disagree")
+      require(head.taxonomyVersion != null || !range.exists(taxUid(_) >= 0),
+        s"annotations ${src.annotationsPath} have no taxonomy_version, which " +
+          "keys the taxonomy support ingest adds to every ott<uid> node")
+      // the source map is keyed by the WIRE form: the raw file keys study
+      // sources as "pg_01_tree1", but every node blob (supported_by etc.)
+      // and every served response uses "pg_01@tree1" (ws-tests/check.py:
+      // 69-81 REQUIRES '@' or '.'); the meta sources list gets the same
+      // rewrite, unknown entries pass through unchanged
+      val rawToWire = new java.util.HashMap[String, String]()
+      head.sourceRows.foreach { case Array(raw, gitSha, srcTree, study, taxonomy) =>
+        val wire = if (study != null && srcTree != null) s"$study@$srcTree" else raw
+        rawToWire.put(raw, wire)
+        sourceRows.add(Row(wire, gitSha, srcTree, study, taxonomy, src.treeId))
+      }
+      val sources = Option(head.sources)
+        .map(_.map(x => if (x == null) null else rawToWire.getOrDefault(x, x))).orNull
+      // root ot id onto tree meta (IngestSynthesisData.java:346-349)
+      metaRows.add(Row(src.treeId, head.dateCompleted, head.taxonomyVersion,
+        head.numTips, head.numSourceStudies, head.numSourceTrees,
+        head.filteredFlags, sources, label(lo)))
+      if (head.taxonomyVersion == null) null else "ott" + head.taxonomyVersion
+    }.toArray
+
+    val payload = spark.sparkContext.broadcast(Payload(sweep(parsed), label,
+      taxUid, parsed.map(_.branchLength).toArray, taxRow, taxLines.result(),
+      annRow, entries.result(), starts, parts.map(_.src.treeId).toArray, ottKeys))
+    // Persist the serving table: every endpoint action re-reads it, and the
+    // row-building stage must run once at ingest, not per query (the
+    // reference likewise materializes its graph at ingest).
+    val nodes = rowsOf(spark, n, nodesSchema)(i => nodeRow(payload.value, i))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Ingested(nodes,
+      parts.map(p => edgesOf(spark, p.parsed, p.src.treeId)).reduce(_ unionByName _),
+      spark.createDataFrame(metaRows, treeMetaSchema),
+      spark.createDataFrame(sourceRows, sourceMapColumns))
+  }
+
+  private val NoTaxon = new Array[Any](7)
+  private val NoAnnotation = new Array[AnyRef](annotationStruct.length)
+
+  /** One `nodes` row: the taxonomy columns as `readTaxonomy` reads them,
+    * `unique_name` falling back to `name` when empty
+    * (IngestSynthesisData.java:247-251), and the taxonomy support
+    * `ott<version> → ot id` appended to every `ott<uid>` node's
+    * `supported_by` (IngestSynthesisData.java:484-496).
+    */
+  private def nodeRow(p: Payload, i: Int): Row = {
+    val t = { val k = java.util.Arrays.binarySearch(p.starts, i); if (k >= 0) k else -k - 2 }
+    val uid = p.taxUid(i)
+    val tax = if (p.taxRow(i) < 0) NoTaxon
+      else IngestFiles.taxonomyFields(p.taxLines.string(p.taxRow(i)))
+    val ann = if (p.annRow(i) < 0) NoAnnotation
+      else IngestFiles.annotationFields(p.entries, p.annRow(i))
+    val unique = tax(5).asInstanceOf[String]
+    val support =
+      if (uid < 0) ann(0)
+      else {
+        val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
+        if (ann(0) != null) m ++= ann(0).asInstanceOf[scala.collection.Map[String, String]]
+        m(p.ottKeys(t)) = p.label(i)
+        m
+      }
+    Row.fromSeq(Seq(p.label(i), if (uid < 0) null else uid) ++
+      labels(p.sweep, i) ++
+      Seq(if (p.sweep.parent(i) < 0) null else p.branchLength(i),
+        tax(1), tax(2), tax(3), tax(4),
+        if (unique == null || unique.isEmpty) tax(2) else unique, tax(6), support) ++
+      ann.tail ++ Seq(p.treeIds(t)))
+  }
+
+  /** `n` rows built by `row` from their forest positions, in one stage of
+    * `defaultParallelism` range slices (no shuffle).
+    */
+  private def rowsOf(spark: SparkSession, n: Int, schema: StructType)(
+      row: Int => Row): DataFrame = {
+    val slices = math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+    spark.createDataFrame(spark.sparkContext.range(0L, n.toLong, 1L, slices)
+      .map(id => row(id.toInt)), schema)
+  }
+
   /** Label a parsed tree — or a forest of parsed trees concatenated back
     * to back, ids shifted as [[ingestAll]] and [[ingestOffset]] shift them —
     * with the same rows as [[TreeLabeler.label]] over its edges.
@@ -210,9 +365,16 @@ object TreeIngest {
     * `childOrd`. Anything else fails with the offending node.
     *
     * The returned frame is lazy and recomputes from the broadcast on each
-    * read, so the broadcast is left alive.
+    * read, so the broadcast is left alive. Ingest builds its node rows in
+    * the same stage, from the same arrays plus the side files' payloads.
     */
   def labelParsed(spark: SparkSession, parsed: IndexedSeq[ParsedNode]): DataFrame = {
+    val s = spark.sparkContext.broadcast(sweep(parsed))
+    rowsOf(spark, parsed.length, labeledSchema)(i => Row.fromSeq(labels(s.value, i)))
+  }
+
+  /** The driver-side pass of [[labelParsed]]. */
+  private def sweep(parsed: IndexedSeq[ParsedNode]): Sweep = {
     val n = parsed.length
     val base = if (n == 0) 0L else parsed(0).nodeId
     val parent = new Array[Int](n)
@@ -261,153 +423,31 @@ object TreeIngest {
       }
       i -= 1
     }
-
-    val sweep = spark.sparkContext.broadcast(
-      Sweep(base, parent, depth, childOrd, nDesc, tips))
-    val slices = math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.range(0L, n.toLong, 1L, slices)
-      .mapPartitions { ids =>
-        val s = sweep.value
-        ids.map { id =>
-          val i = id.toInt
-          val d = s.depth(i)
-          val ancestors = new Array[Long](d + 1)
-          var j = i
-          var k = d
-          while (k >= 0) {
-            ancestors(k) = s.base + j
-            j = s.parent(j)
-            k -= 1
-          }
-          val pi = s.parent(i)
-          Row(s.base + i, if (pi < 0) -1L else s.base + pi, ancestors(0),
-            d.toLong, s.childOrd(i), ancestors, id, id + s.nDesc(i) - 1,
-            s.nDesc(i) == 1, s.tips(i).toLong, s.nDesc(i).toLong)
-        }
-      }
-    spark.createDataFrame(rows, labeledSchema)
+    Sweep(base, parent, depth, childOrd, nDesc, tips)
   }
 
-  /** Join ot attributes + taxonomy + annotations onto a labeled (sub)tree
-    * and assemble the per-tree store tables.
-    */
-  private def attach(spark: SparkSession, labeled: DataFrame, parsedDf: DataFrame,
-      edges: DataFrame, annotationsPath: String, taxonomyPath: String,
-      treeId: String): Ingested = {
-
-    // ---- S2: taxonomy TSV (fields separated by "\t|\t",
-    //          IngestSynthesisData.java:208-240), semi-joined to tree ids (J1)
-    val taxonomy = readTaxonomy(spark, taxonomyPath)
-
-    // ---- S3: annotations JSON → per-node annotations, tree meta, source map
-    val annText = spark.read.option("wholetext", "true").text(annotationsPath)
-      .select(col("value").as("j"))
-    val annotations = readAnnotations(spark, annotationsPath)
-
-    val treeMetaRaw = annText.select(
-      get_json_object(col("j"), "$.tree_id").as("tree_id"),
-      get_json_object(col("j"), "$.date_completed").as("date_completed"),
-      get_json_object(col("j"), "$.taxonomy_version").as("taxonomy_version"),
-      get_json_object(col("j"), "$.num_tips").cast("long").as("num_tips"),
-      get_json_object(col("j"), "$.num_source_studies").cast("long").as("num_source_studies"),
-      get_json_object(col("j"), "$.num_source_trees").cast("long").as("num_source_trees"),
-      from_json(get_json_object(col("j"), "$.filtered_flags"),
-        ArrayType(StringType)).as("filtered_flags"),
-      from_json(get_json_object(col("j"), "$.sources"),
-        ArrayType(StringType)).as("sources"))
-
-    val srcExploded = annText
-      .select(explode(from_json(get_json_object(col("j"), "$.source_id_map"),
-        sourceMapSchema)).as(Seq("raw_source_id", "m")))
-      .select(col("raw_source_id"), col("m")("git_sha").as("git_sha"),
-        col("m")("tree_id").as("source_tree_id"),
-        col("m")("study_id").as("study_id"),
-        col("m")("taxonomy").as("taxonomy"))
-      // canonicalize to the WIRE form: the raw file keys study sources as
-      // "pg_01_tree1", but every node blob (supported_by etc.) and every
-      // served response uses "pg_01@tree1" (ws-tests/check.py:69-81
-      // REQUIRES '@' or '.') — left keyed raw, the blob→source join could
-      // never resolve a study and arguson would serve empty source blobs
-      .withColumn("source_id",
-        when(col("study_id").isNotNull && col("source_tree_id").isNotNull,
-          concat(col("study_id"), lit("@"), col("source_tree_id")))
-          .otherwise(col("raw_source_id")))
-
-    val sourceMap = srcExploded.drop("raw_source_id")
-      .select(col("source_id"), col("git_sha"), col("source_tree_id"),
-        col("study_id"), col("taxonomy"))
-      .withColumn("tree_id", lit(treeId))
-
-    // raw→wire key map for the meta `sources` array (same rewrite; the
-    // source map is request-metadata-sized, so the collect is one tiny job)
-    val rawToWire: Map[String, String] = srcExploded
-      .select(col("raw_source_id"), col("source_id")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-
-    // one head() fetches both meta scalars. The annotations' declared
-    // tree_id must AGREE with the caller's: nodes/edges/source_map are
-    // stamped with the param, so a silent mismatch would leave tree_meta
-    // keyed differently from every other table (per-tree views empty,
-    // recoverAppend filtering the wrong rows)
-    val metaHead = treeMetaRaw
-      .select(col("taxonomy_version"), col("tree_id")).head()
-    val taxonomyVersion = metaHead.getString(0)
-    val declaredId = metaHead.getString(1)
-    require(declaredId == null || declaredId == treeId,
-      s"annotations declare tree_id '$declaredId' but ingest was called " +
-        s"with treeId '$treeId' — the store tables would disagree")
-
-    // ---- J2/J3: tree ⟕ taxonomy ⟕ annotations; taxonomy-support injection
-    //      for ott* nodes (IngestSynthesisData.java:484-496); unique_name
-    //      falls back to name when empty (IngestSynthesisData.java:247-251)
-    val ids = parsedDf.select(col("nodeId").as("node_id"), col("ot_node_id"))
-      .withColumn("tax_uid",
-        when(col("ot_node_id").rlike("^ott\\d+$"),
-          regexp_extract(col("ot_node_id"), "^ott(\\d+)$", 1).cast("long")))
-
-    val bl = edges.select(col("child_id").as("node_id"), col("branch_length"))
-
-    val nodes = labeled
-      .join(ids, "node_id")
-      .join(bl, Seq("node_id"), "left_outer")
-      .join(taxonomy, Seq("tax_uid"), "left_outer")
-      .join(annotations, Seq("ot_node_id"), "left_outer")
-      .withColumn("unique_name",
-        when(col("unique_name").isNull || col("unique_name") === "", col("name"))
-          .otherwise(col("unique_name")))
-      .withColumn("supported_by",
-        when(col("tax_uid").isNotNull,
-          map_concat(coalesce(col("supported_by"),
-              map().cast(MapType(StringType, StringType))),
-            map(concat(lit("ott"), lit(taxonomyVersion)), col("ot_node_id"))))
-          .otherwise(col("supported_by")))
-      .withColumn("tree_id", lit(treeId))
-
-    // Persist the serving table: every endpoint action re-reads it, and the
-    // taxonomy/annotation join pipeline must run once at ingest, not per
-    // query (the reference likewise materializes its graph at ingest).
-    val nodesP = nodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // root ot id onto tree meta (IngestSynthesisData.java:346-349)
-    val rootOt = nodesP.filter(col("parent_id") === -1L)
-      .select(col("ot_node_id")).head().getString(0)
-    // tree_id pinned to the caller's (validated equal above when the JSON
-    // declares one) — all four tables key identically even when the
-    // annotations omit the field
-    val treeMeta = treeMetaRaw.withColumn("root_ot_node_id", lit(rootOt))
-      .withColumn("tree_id", lit(treeId))
-      // the meta sources LIST gets the same raw→wire rewrite as the
-      // source map, so study_list order lookups resolve (unknown entries
-      // pass through unchanged; a null array stays null)
-      .withColumn("sources", transform(col("sources"),
-        x => coalesce(element_at(typedLit(rawToWire), x), x)))
-
-    Ingested(nodesP, edges, treeMeta, sourceMap)
+  /** The [[labeledSchema]] values of forest position `i`. */
+  private def labels(s: Sweep, i: Int): Seq[Any] = {
+    val d = s.depth(i)
+    val ancestors = new Array[Long](d + 1)
+    var j = i
+    var k = d
+    while (k >= 0) {
+      ancestors(k) = s.base + j
+      j = s.parent(j)
+      k -= 1
+    }
+    val pi = s.parent(i)
+    Seq(s.base + i, if (pi < 0) -1L else s.base + pi, ancestors(0),
+      d.toLong, s.childOrd(i), ancestors, i.toLong, i.toLong + s.nDesc(i) - 1,
+      s.nDesc(i) == 1, s.tips(i).toLong, s.nDesc(i).toLong)
   }
 
   /** Per-node annotations from the synthesis annotations JSON
     * (`nodes.{ot_node_id}` object, IngestSynthesisData.java:462-498) as
-    * native typed columns — one row per annotated node.
+    * native typed columns — one row per annotated node. A Spark read of
+    * the whole file, for queries over it; ingest reads only the tree's
+    * entries, the same way, with [[IngestFiles.readAnnotations]].
     */
   def readAnnotations(spark: SparkSession, path: String): DataFrame =
     spark.read.option("wholetext", "true").text(path)
@@ -420,7 +460,9 @@ object TreeIngest {
     * 7 columns: uid, parent_uid, name, rank, sourceinfo, uniqname, flags.
     * sourceinfo ("ncbi:123,gbif:456") is unpacked to a native map (the
     * reference re-parses the packed string per query,
-    * GraphExplorer.java:186-190).
+    * GraphExplorer.java:186-190). A Spark scan of the whole file, for
+    * queries over it; ingest keeps only the tree's rows, read the same
+    * way, with [[IngestFiles.readTaxonomy]].
     */
   def readTaxonomy(spark: SparkSession, path: String): DataFrame = {
     spark.read.text(path)

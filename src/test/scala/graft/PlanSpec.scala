@@ -271,6 +271,51 @@ class PlanSpec extends AnyFunSuite {
     assert(root.map(_.getAs[Long]("post")).toSeq == Seq(parsed.length - 1L))
   }
 
+  test("ingest starts no Spark job: ingestParsed, ingest and ingestAll, and " +
+      "treeIdStr and sourceBlobs on what they return") {
+    // the side files are read on the driver and the node rows are built
+    // lazily, so the first job is the first action on `nodes`
+    import graft.tree.{Newick, TreeIngest}
+    val fx = GaviaFixture.fx
+    val g1 = TreeIngest.TreeSource(s"$fx/gavia.tre", s"$fx/gavia_annotations.json",
+      s"$fx/gavia_taxonomy.tsv", "opentree4.1")
+    val g2 = TreeIngest.TreeSource(s"$fx/gavia2.tre", s"$fx/gavia2_annotations.json",
+      s"$fx/gavia_taxonomy.tsv", "opentree5.0")
+    val parsed = Newick.parse(GaviaFixture.GoldenGavia)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val marker = "graft.test.marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(marker) != null)
+          marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val ingested =
+      try {
+        val multi = TreeIngest.ingestAll(spark, Seq(g1, g2))
+        val all = Seq(
+          TreeIngest.ingestParsed(spark, parsed, g1.annotationsPath,
+            g1.taxonomyPath, g1.treeId),
+          TreeIngest.ingest(spark, g2.newickPath, g2.annotationsPath,
+            g2.taxonomyPath, g2.treeId),
+          multi.tree(g1.treeId), multi.tree(g2.treeId))
+        all.foreach { t => t.treeIdStr; t.sourceBlobs }
+        sc.setLocalProperty(marker, "1")
+        try sc.range(0, 1).count() finally sc.setLocalProperty(marker, null)
+        assert(marked.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        all
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"ingest started ${jobs.get()} jobs")
+    assert(ingested.map(_.treeIdStr) ==
+      Seq("opentree4.1", "opentree5.0", "opentree4.1", "opentree5.0"))
+    assert(ingested.head.sourceBlobs("pg_01@tree1")("git_sha") == "abc123")
+    assert(ingested.map(_.nodes.count()) == Seq(9L, 5L, 9L, 5L))
+  }
+
   test("served extracts start no Spark job once the store is indexed") {
     // newick / induced_subtree / arguson answer from the serving index
     // after one build; a second build of the same frame is memoised
